@@ -301,13 +301,7 @@ def index_raster(
         if cols:
             out = round_decimals(out, cols, decimals)
     if compact:
-        if dggs not in ("hex7", "s2", "geohash", "rhp", "i3h", "a5",
-                        "i4r", "i9r", "e4r", "e9r", "quadkey"):
-            raise ValueError(
-                "compact=True needs an id-arithmetic hierarchy "
-                "(hex7/s2/geohash/rhp/i3h/a5/i4r/i9r/e4r/e9r/quadkey; "
-                "maidenhead mixes 10/24-ary levels)"
-            )
+        from raster2dggs_spark.dggs import MULTI_PARENT_GRIDS
         from raster2dggs_spark.operators.compaction import (
             compact_cells, compact_cells_3h,
         )
@@ -318,20 +312,18 @@ def index_raster(
         # construction, so it is preserved (the reference compacts within
         # a parent partition for the same reason)
         src = out.drop("npx") if "npx" in out.columns else out
-        if dggs == "i3h":
+        if dggs in MULTI_PARENT_GRIDS:
             # multi-parent route (A17): parent as a value column would
             # block every vertex-child merge (its 3 parents differ) —
             # drop it and re-derive for the kept rows
-            from raster2dggs_spark.operators.indexing import (
-                derived_parent_col,
-            )
+            from raster2dggs_spark.operators.joins import parent_expr
 
             vals3 = [c for c in vals if c != "parent"]
             out = compact_cells_3h(src.drop("parent"), vals3, res,
                                    min_res=parent_res)
             out = out.withColumn(
                 "parent",
-                derived_parent_col("cell", parent_res, dggs, from_res=res),
+                parent_expr("cell", parent_res, dggs, from_res=res),
             )
         else:
             out = compact_cells(src, vals, res, min_res=parent_res,

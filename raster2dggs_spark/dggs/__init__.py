@@ -1,3 +1,12 @@
+"""The grid protocol.
+
+Every ``*lib.py`` module is its grid's only entry and exports the same
+names with the same signatures (README "Grid protocol" has the table);
+callers reach a module only through :func:`grid_lib` and never branch
+on a grid key.  Where a grid FAMILY changes the algorithm, callers test
+membership in one of the tuples below.
+"""
+
 from raster2dggs_spark.dggs import (
     a5lib,
     quadkeylib,
@@ -15,7 +24,9 @@ from raster2dggs_spark.dggs import (
 
 __all__ = ["h3lib", "s2lib", "geohashlib", "maidenheadlib", "rhplib",
            "i3hlib", "a5lib", "i4rlib", "i9rlib", "e4rlib", "e9rlib",
-           "check_grid"]
+           "GRIDS", "RECT_GRIDS", "EXACT_LATTICE_GRIDS",
+           "MULTI_PARENT_GRIDS", "CONSTANT_AREA_GRIDS", "check_grid",
+           "grid_lib"]
 
 # i3h: aperture-3 hex (ISEA3H layout, multi-parent hierarchy) — encode/
 # cover/A17 surfaces; ids are this repo's own (see i3hlib), like hex7.
@@ -26,6 +37,24 @@ __all__ = ["h3lib", "s2lib", "geohashlib", "maidenheadlib", "rhplib",
 # see e4rlib; e9r its aperture-9 twin) — same honest own-id contract.
 GRIDS = ("hex7", "s2", "geohash", "maidenhead", "rhp", "i3h", "a5",
          "i4r", "i9r", "e4r", "e9r", "quadkey")
+
+_LIBS = {"hex7": h3lib, "s2": s2lib, "geohash": geohashlib,
+         "maidenhead": maidenheadlib, "rhp": rhplib, "i3h": i3hlib,
+         "a5": a5lib, "i4r": i4rlib, "i9r": i9rlib, "e4r": e4rlib,
+         "e9r": e9rlib, "quadkey": quadkeylib}
+
+# cells are an index rectangle lattice (``lattice(res)``): covers and
+# disk candidates are enumerated exactly instead of sampled
+RECT_GRIDS = ("geohash", "maidenhead", "quadkey")
+# the power-of-two lattices, whose float -> index scaling is bit-identical
+# to the encoder (exact scanline / supercover / lattice focal)
+EXACT_LATTICE_GRIDS = ("geohash", "quadkey")
+# children are shared between parents (not a partition): compaction takes
+# the multi-parent route and children cannot split a parent's area
+MULTI_PARENT_GRIDS = ("i3h",)
+# every cell at a res has the closed-form area ``cell_area_m2(res)``:
+# area normalization is a native constant instead of a per-cell UDF
+CONSTANT_AREA_GRIDS = ("rhp",)
 
 
 def check_grid(dggs: str) -> str:
@@ -47,3 +76,8 @@ def check_grid(dggs: str) -> str:
     if dggs not in GRIDS:
         raise ValueError(f"unknown dggs {dggs!r}; expected one of {GRIDS}")
     return dggs
+
+
+def grid_lib(dggs: str):
+    """The protocol module for a grid key."""
+    return _LIBS[check_grid(dggs)]

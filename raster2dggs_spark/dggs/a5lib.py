@@ -49,7 +49,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+
+MIN_RES = 0
 MAX_RES = 27
+PARENT_OFFSET = 8
 _ENCODE_CHUNK = 8192
 _GOLD = (1.0 + np.sqrt(5.0)) / 2.0
 _SECTOR = 2.0 * np.pi / 5.0
@@ -330,8 +334,8 @@ def cell_to_boundary(cells):
 def cell_to_parent(cells, parent_res: int):
     """Pure bit arithmetic (nested hierarchy): zero the digits finer
     than ``parent_res`` (and the quintant when parent_res is 0) and
-    rewrite the res field.  The Column-expression twin lives in
-    joins.parent_expr."""
+    rewrite the res field.  The Column-expression twin is
+    :func:`parent_col`."""
     c = np.asarray(cells, dtype=np.int64).ravel()
     res = (c >> np.int64(55)) & np.int64(0x1F)
     if np.any(parent_res > res):
@@ -339,6 +343,20 @@ def cell_to_parent(cells, parent_res: int):
     s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
     mask = np.int64(-(1 << s)) & ~_RES_MASK
     return ((c & mask) | np.int64(parent_res << 55)).astype(np.int64)
+
+
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`."""
+    from pyspark.sql import functions as F
+
+    s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
+    mask = (-(1 << s)) & ~(0x1F << 55)
+    return (col.bitwiseAND(F.lit(mask))).bitwiseOR(F.lit(parent_res << 55))
+
+
+def n_cells(res: int) -> int:
+    """12 pentagons; aperture 5 for res 0→1, aperture 4 thereafter."""
+    return 12 if res == 0 else 60 * 4 ** (res - 1)
 
 
 def get_num_children(parent_res: int, child_res: int) -> int:
@@ -364,28 +382,23 @@ def cell_to_children_size(cells, child_res: int):
     return out
 
 
-def cell_to_children(cells):
-    """One-level children: (n, 5) quintants for res-0 ids, (n, 4)
-    subdivision triangles for res >= 1.  Mixed input raises."""
-    face, res, quint, low = unpack(cells)
-    if res.size == 0:
-        return np.empty((0, 4), dtype=np.int64)
-    if (res == 0).any() and (res > 0).any():
-        raise ValueError("a5 children: mixed res-0/res>=1 cells")
+def cell_to_children(cells, child_res: int):
+    """All descendants at ``child_res``, cell-major: the base-4 digits
+    of levels res+1..child_res are appended below the MSB-aligned field
+    (and a res-0 pentagon first enumerates its 5 quintants)."""
     c = np.asarray(cells, dtype=np.int64).ravel()
-    if (res == 0).all():
-        return (c[:, None] | np.int64(1 << 55)
-                | (np.arange(5, dtype=np.int64) << np.int64(52))[None, :])
-    if int(res.max()) >= MAX_RES:
-        raise ValueError("children would exceed MAX_RES")
-    out = np.empty((c.shape[0], 4), dtype=np.int64)
-    for r in np.unique(res):
-        m = np.flatnonzero(res == r)
-        shift = np.int64(52 - 2 * int(r))  # child level r+1 digit
-        base = (c[m] & ~_RES_MASK) | np.int64((int(r) + 1) << 55)
-        out[m] = base[:, None] | (
-            np.arange(4, dtype=np.int64)[None, :] << shift)
-    return out
+    if c.size == 0:
+        return c
+    r_cur = int(child_res) - child_depth(get_resolution(c), child_res,
+                                         MAX_RES)
+    base = (c & ~_RES_MASK) | np.int64(child_res << 55)
+    shift = np.int64(52 - 2 * (child_res - 1)) if child_res >= 2 else 52
+    dig = (np.arange(4 ** max(child_res - max(r_cur, 1), 0),
+                     dtype=np.int64) << np.int64(shift))
+    if r_cur == 0 and child_res > 0:
+        q = np.arange(5, dtype=np.int64) << np.int64(52)
+        dig = (q[:, None] | dig[None, :]).ravel()
+    return (base[:, None] | dig[None, :]).ravel()
 
 
 def cell_area_m2(cells, radius_m: float = 6371007.1809):
@@ -417,3 +430,7 @@ def cell_pitch_rad(res: int) -> float:
     if res <= 0:
         return 2.0 * _PENTA_INRADIUS_RAD
     return 2.0 * np.arctan(_TRI_INRADIUS * _DISTORT) / 2.0 ** (res - 1)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))

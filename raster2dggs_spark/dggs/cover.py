@@ -2,10 +2,11 @@
 
 Reference parity: each indexer enumerates cells whose *center* falls in
 a WGS84 bbox (s2rasterindexer.py:88-134, geohashrasterindexer.py:87-119,
-rhprasterindexer.py cells_in_bbox).  One implementation serves all
-grids: dense lattice sampling at 0.35x the cell pitch (guarantees every
-center-inside cell is hit), encode, unique, strict center filter —
-h3lib.cover_bbox generalized.
+rhprasterindexer.py cells_in_bbox).  Rectangle grids enumerate their
+index lattice exactly; curved grids sample densely at a fraction of the
+cell pitch (guarantees every center-inside cell is hit), encode and
+unique; both end in the strict center filter — h3lib.cover_bbox
+generalized.
 
 Antimeridian: bboxes crossing +-180 are expressed unwrapped
 (lon_max > 180); encodes are periodic and centers are unwrapped into the
@@ -16,31 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs import (
-    a5lib,
-    quadkeylib,
-    e4rlib,
-    e9rlib,
-    i4rlib,
-    i9rlib,
-    check_grid,
-    geohashlib,
-    h3lib,
-    i3hlib,
-    maidenheadlib,
-    rhplib,
-    s2lib,
-)
-
-
-def grid_lib(dggs: str):
-    """The backend module for a grid key (encode/decode/parents)."""
-    check_grid(dggs)
-    return {"hex7": h3lib, "s2": s2lib, "geohash": geohashlib,
-            "maidenhead": maidenheadlib, "rhp": rhplib,
-            "i3h": i3hlib, "a5": a5lib, "i4r": i4rlib,
-            "i9r": i9rlib, "e4r": e4rlib, "e9r": e9rlib,
-            "quadkey": quadkeylib}[dggs]
+from raster2dggs_spark.dggs import RECT_GRIDS, grid_lib, h3lib
 
 
 def wrap_lon(lon):
@@ -56,69 +33,15 @@ def wrap_lon(lon):
 
 
 def encode(lon, lat, res: int, dggs: str):
-    lib = grid_lib(dggs)
-    lon = wrap_lon(lon)
-    if dggs == "hex7":
-        return lib.latlng_to_cell(lon, lat, res)
-    return lib.lonlat_to_cell(lon, lat, res)
+    return grid_lib(dggs).lonlat_to_cell(wrap_lon(lon), lat, res)
 
 
 def cell_center(cells, dggs: str):
-    lib = grid_lib(dggs)
-    if dggs == "hex7":
-        return lib.cell_to_latlng(cells)
-    return lib.cell_to_lonlat(cells)
+    return grid_lib(dggs).cell_to_lonlat(cells)
 
 
 def cell_parent(cells, parent_res: int, dggs: str):
     return grid_lib(dggs).cell_to_parent(cells, parent_res)
-
-
-def cell_spans(res: int, dggs: str) -> tuple[float, float]:
-    """(lon_span, lat_span) in degrees for the FIXED-degree-rectangle
-    grids (geohash/maidenhead) — the single source of the bit/radix
-    allocation shared by pitch_deg and the kNN banded disk cover."""
-    if dggs == "geohash":
-        lon_bits = (5 * res + 1) // 2
-        lat_bits = 5 * res // 2
-        return 360.0 / (1 << lon_bits), 180.0 / (1 << lat_bits)
-    if dggs == "maidenhead":
-        prod = 1
-        for b in maidenheadlib.BASES[:res]:
-            prod *= b
-        return 360.0 / prod, 180.0 / prod
-    raise ValueError(f"{dggs} cells are not lon/lat rectangles")
-
-
-def pitch_deg(res: int, dggs: str) -> float:
-    """Conservative cell pitch (the smaller cell dimension) in degrees."""
-    if dggs == "hex7":
-        return float(np.degrees(h3lib.cell_pitch_rad(res)))
-    if dggs == "s2":
-        return 90.0 / (1 << res)
-    if dggs == "rhp":
-        return float(np.degrees(rhplib.cell_pitch_rad(res)))
-    if dggs == "i3h":
-        return float(np.degrees(i3hlib.cell_pitch_rad(res)))
-    if dggs == "a5":
-        return float(np.degrees(a5lib.cell_pitch_rad(res)))
-    if dggs == "i4r":
-        return float(np.degrees(i4rlib.cell_pitch_rad(res)))
-    if dggs == "i9r":
-        return float(np.degrees(i9rlib.cell_pitch_rad(res)))
-    if dggs == "e4r":
-        return float(np.degrees(e4rlib.cell_pitch_rad(res)))
-    if dggs == "e9r":
-        return float(np.degrees(e9rlib.cell_pitch_rad(res)))
-    if dggs in ("geohash", "maidenhead"):
-        return min(cell_spans(res, dggs))
-    if dggs == "quadkey":
-        # constant lon span; lat span is latitude-dependent (max 360/n
-        # at the equator, ->0 near ±85°).  This is the EQUATORIAL span:
-        # fine for margin inflation (conservative-large), and covers
-        # never sample quadkey (exact enumeration fast path above).
-        return 360.0 / (1 << res)
-    raise ValueError(dggs)
 
 
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
@@ -128,63 +51,59 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
     if dggs == "hex7":  # keeps h3lib's tuned lattice
         return h3lib.cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
                                 max_samples=max_samples)
-    if dggs == "quadkey":
-        # EXACT enumeration — tiles are an analytic lon x Mercator-lat
-        # lattice, no density sampling needed (and the degree pitch is
-        # latitude-dependent, so sampling would be wrong near ±85°)
-        n = 1 << res
-        # unwrapped frame: enumerate raw column indices then wrap mod n
-        cx0 = int(np.floor((lon_min + 180.0) / 360.0 * n)) - 1
-        cx1 = int(np.floor((lon_max + 180.0) / 360.0 * n)) + 1
-        _, ty0 = quadkeylib._tile_xy(np.array([0.0]),
-                                     np.array([lat_max]), res)
-        _, ty1 = quadkeylib._tile_xy(np.array([0.0]),
-                                     np.array([lat_min]), res)
+    lib = grid_lib(dggs)
+    if dggs in RECT_GRIDS:
+        # EXACT enumeration of the index lattice (quadkey's degree pitch
+        # is latitude-dependent, so sampling would be wrong near ±85°)
+        u, v, nx, ny, to_cell, _ = lib.lattice(res)
+        # unwrapped frame: enumerate raw column indices then wrap mod nx
+        cx0 = int(np.floor(u(lon_min))) - 1
+        cx1 = int(np.floor(u(lon_max))) + 1
+        va, vb = float(v(lat_min)), float(v(lat_max))
         txs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-        tys = np.arange(max(0, int(ty0[0]) - 1),
-                        min(n - 1, int(ty1[0]) + 1) + 1, dtype=np.int64)
+        tys = np.arange(max(0, int(np.floor(min(va, vb))) - 1),
+                        min(ny - 1, int(np.floor(max(va, vb))) + 1) + 1,
+                        dtype=np.int64)
         if txs.size * tys.size > max_samples:
             raise ValueError(
                 f"bbox cover at res {res} needs {txs.size * tys.size} "
                 "tiles > cap; use a coarser res or split the bbox")
-        gx = np.repeat(np.mod(txs, n), tys.size)
-        gy = np.tile(tys, txs.size)
-        cand = np.unique(
-            (quadkeylib._morton(gy, gx, res) << 5) | np.int64(res))
-        clon, clat = cell_center(cand, dggs)
-        mid = 0.5 * (lon_min + lon_max)
-        clon = clon + 360.0 * np.round((mid - clon) / 360.0)
-        keep = ((clon >= lon_min) & (clon < lon_max)
-                & (clat >= lat_min) & (clat < lat_max))
-        return cand[keep]
-    # curved grids at coarse res: projection distortion shrinks the
-    # worst-case cell inradius well below the nominal pitch (the hex7
-    # round-4 battery measured ~0.25× at res ≤ 3) — sample denser
-    # there; rectangle grids are exact at every res
-    f = 0.35
-    if dggs in ("s2", "rhp", "i3h", "a5", "i4r", "i9r", "e4r",
-                "e9r") and res <= 3:
-        f = 0.18
-    step = pitch_deg(res, dggs) * f
+        cand = np.unique(to_cell(np.repeat(np.mod(txs, nx), tys.size),
+                                 np.tile(tys, txs.size)))
+    else:
+        cand = _sample_bbox(lib, lon_min, lat_min, lon_max, lat_max, res,
+                            max_samples)
+    clon, clat = lib.cell_to_lonlat(cand)
+    mid = 0.5 * (lon_min + lon_max)
+    clon = clon + 360.0 * np.round((mid - clon) / 360.0)
+    keep = ((clon >= lon_min) & (clon < lon_max)
+            & (clat >= lat_min) & (clat < lat_max))
+    return cand[keep]
+
+
+def _sample_bbox(lib, lon_min, lat_min, lon_max, lat_max, res: int,
+                 max_samples: int):
+    """Candidate cells of a curved grid: encode a lattice sampled at a
+    fraction of the pitch (dense enough to hit every center-inside
+    cell)."""
+    # projection distortion at coarse res shrinks the worst-case cell
+    # inradius well below the nominal pitch (the hex7 round-4 battery
+    # measured ~0.25× at res ≤ 3) — sample denser there
+    step = lib.pitch_deg(res) * (0.18 if res <= 3 else 0.35)
     lat_lo = max(-90.0, lat_min - step)
     lat_hi = min(90.0, lat_max + step)
-    if dggs in ("geohash", "maidenhead"):
-        # cells are lon/lat rectangles with CONSTANT lon width in
-        # degrees — never stretch the lon step
-        lon_step = step
+    # quasi-equal-area grids: cell lon extent in degrees is
+    # ~pitch/cos(lat), narrowest at the lowest |lat| in the bbox —
+    # stretch by that cos (conservative at every other latitude; the
+    # extreme lat instead skips whole cell columns on the equatorial
+    # side of a wide-lat bbox)
+    if lat_lo <= 0.0 <= lat_hi:
+        coslat = 1.0
     else:
-        # quasi-equal-area grids (s2/rhp): cell lon extent in degrees is
-        # ~pitch/cos(lat), narrowest at the lowest |lat| in the bbox —
-        # stretch by that cos (conservative at every other latitude;
-        # the extreme lat instead skips whole cell columns on the
-        # equatorial side of a wide-lat bbox)
-        if lat_lo <= 0.0 <= lat_hi:
-            coslat = 1.0
-        else:
-            coslat = max(
-                0.05, float(np.cos(np.radians(min(abs(lat_lo), abs(lat_hi)))))
-            )
-        lon_step = step / coslat
+        coslat = max(
+            0.05, float(np.cos(np.radians(min(abs(lat_lo), abs(lat_hi)))))
+        )
+    lon_step = step / coslat
     lons = np.arange(lon_min - lon_step, lon_max + 2 * lon_step, lon_step)
     lats = np.arange(lat_lo, lat_hi + step, step)
     if lons.size * lats.size > max_samples:
@@ -196,10 +115,5 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
     glat = np.tile(lats, lons.size)
     # wrap samples into valid ranges for the encode (periodic in lon)
     wlon = np.mod(glon + 180.0, 360.0) - 180.0
-    cand = np.unique(encode(wlon, np.clip(glat, -90.0, 90.0), res, dggs))
-    clon, clat = cell_center(cand, dggs)
-    mid = 0.5 * (lon_min + lon_max)
-    clon = clon + 360.0 * np.round((mid - clon) / 360.0)
-    keep = ((clon >= lon_min) & (clon < lon_max)
-            & (clat >= lat_min) & (clat < lat_max))
-    return cand[keep]
+    return np.unique(lib.lonlat_to_cell(wlon, np.clip(glat, -90.0, 90.0),
+                                        res))

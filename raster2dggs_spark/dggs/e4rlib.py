@@ -43,15 +43,29 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs.i4rlib import (
+# id arithmetic, hierarchy and the nominal pitch are i4r's (equal-area
+# redistribution moves boundaries by a bounded factor; the cover
+# sampler's 0.18x safety factor at coarse res covers it — pinned by the
+# bbox battery)
+from raster2dggs_spark.dggs.i4rlib import (  # noqa: F401 (grid protocol)
     MAX_RES,
+    MIN_RES,
+    PARENT_OFFSET,
     _CORNERS,
     _TRI_IDX,
     _V,
     _lonlat_to_xyz,
     _unit,
     _xyz_to_lonlat,
+    cell_pitch_rad,
+    cell_to_children,
+    cell_to_parent,
+    get_num_children,
+    get_resolution,
+    n_cells,
     pack,
+    parent_col,
+    pitch_deg,
     unpack,
 )
 
@@ -255,19 +269,6 @@ def _uv_to_sph(d, u, v):
 # grid surface (id arithmetic shared with i4r)
 
 
-def cell_pitch_rad(res: int) -> float:
-    # same nominal scale family as i4r (equal-area redistribution moves
-    # boundaries by a bounded factor; the cover sampler's 0.18x safety
-    # factor at coarse res covers it — pinned by the bbox battery)
-    from raster2dggs_spark.dggs.i4rlib import cell_pitch_rad as _p
-
-    return _p(res)
-
-
-def get_resolution(cells):
-    return unpack(cells)[1]
-
-
 def lonlat_to_cell(lon_deg, lat_deg, res: int):
     if not 0 <= res <= MAX_RES:
         raise ValueError("e4r res out of range")
@@ -297,24 +298,6 @@ def cell_to_lonlat(cells):
         out_lon[m] = lon
         out_lat[m] = lat
     return out_lon, out_lat
-
-
-def cell_to_parent(cells, parent_res: int):
-    from raster2dggs_spark.dggs.i4rlib import cell_to_parent as _p
-
-    return _p(cells, parent_res)
-
-
-def cell_to_children(cells):
-    from raster2dggs_spark.dggs.i4rlib import cell_to_children as _c
-
-    return _c(cells)
-
-
-def get_num_children(parent_res: int, child_res: int) -> int:
-    if child_res < parent_res:
-        raise ValueError("child_res must be >= parent_res")
-    return 4 ** (child_res - parent_res)
 
 
 def cell_to_boundary(cells):

@@ -13,19 +13,26 @@ from raster2dggs_spark.dggs.e4rlib import _SPHERE_AREA, _sph_to_uv, _uv_to_sph
 from raster2dggs_spark.dggs.i4rlib import _lonlat_to_xyz, _xyz_to_lonlat, pack, unpack
 from raster2dggs_spark.dggs.i9rlib import (
     MAX_RES,
+    MIN_RES,
+    PARENT_OFFSET,
     cell_pitch_rad,
     cell_to_children,
     cell_to_parent,
     get_num_children,
     get_resolution,
+    n_cells,
+    parent_col,
+    pitch_deg,
 )
 
 _ENCODE_CHUNK = 8192
 
 __all__ = [
-    "MAX_RES", "cell_pitch_rad", "cell_to_children", "cell_to_parent",
-    "get_num_children", "get_resolution", "lonlat_to_cell",
-    "cell_to_lonlat", "cell_to_boundary", "cell_area_m2",
+    "MIN_RES", "MAX_RES", "PARENT_OFFSET", "cell_pitch_rad",
+    "cell_to_children", "cell_to_parent", "get_num_children",
+    "get_resolution", "lonlat_to_cell", "cell_to_lonlat",
+    "cell_to_boundary", "cell_area_m2", "n_cells", "parent_col",
+    "pitch_deg",
 ]
 
 

@@ -31,7 +31,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+
+MIN_RES = 0
 MAX_RES = 15
+PARENT_OFFSET = 6  # 7^6 ~ 117K subcells per parent partition
+COVER_HALO = 1.5  # circumradius ~0.58 pitch: a tighter polygon-cover halo
 
 # --- published H3 constants (faceijk.c / constants.h) -----------------
 M_SIN60 = np.sqrt(3.0) / 2.0
@@ -411,6 +416,15 @@ def cell_pitch_rad(res: int) -> float:
     return float(np.arctan(RES0_U_GNOMONIC) / M_SQRT7**res)
 
 
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    """Uniformly 7-ary over the 122 base cells."""
+    return 122 * 7**res
+
+
 # --- forward: lonlat -> cell -------------------------------------------
 
 
@@ -618,6 +632,11 @@ def cell_to_latlng(cells):
 # --- bit-arithmetic hierarchy (exact H3 semantics) ----------------------
 
 
+# protocol names (lon-first like every grid module)
+lonlat_to_cell = latlng_to_cell
+cell_to_lonlat = cell_to_latlng
+
+
 def cell_to_boundary(cells):
     """Hexagon boundary vertices, (n, 6, 2) arrays (lon_deg, lat_deg).
 
@@ -699,6 +718,18 @@ def cell_to_parent(cells, parent_res):
     return (h | mask).astype(np.int64)
 
 
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`: set the res nibble,
+    fill the finer digits with 7."""
+    from pyspark.sql import functions as F
+
+    res_mask = ~(0xF << 52)  # python int; fits int64
+    fill = (1 << (3 * (15 - parent_res))) - 1
+    return (col.bitwiseAND(F.lit(res_mask))).bitwiseOR(
+        F.lit(parent_res << 52)
+    ).bitwiseOR(F.lit(fill))
+
+
 def cell_to_center_child(cells, child_res: int):
     c = np.asarray(cells).astype(np.uint64)
     res = get_resolution(c)
@@ -731,13 +762,7 @@ def cell_to_children(cells, child_res: int):
     c = np.asarray(cells).astype(np.uint64)
     if c.size == 0:
         return c.astype(np.int64)
-    res = get_resolution(c)
-    r0 = int(res.ravel()[0])
-    if np.any(res != r0):
-        raise ValueError("cell_to_children needs uniform input res")
-    dr = int(child_res) - r0
-    if dr < 0:
-        raise ValueError("child_res coarser than cell res")
+    dr = child_depth(get_resolution(c).ravel(), child_res, MAX_RES)
     if dr == 0:
         return np.asarray(cells).astype(np.int64)
     base = (c & ~(np.uint64(0xF) << np.uint64(52))) | (

@@ -57,8 +57,11 @@ from raster2dggs_spark.dggs.h3lib import (
     _axial_to_hex2d,
     RES0_U_GNOMONIC,
 )
+from raster2dggs_spark.dggs._hier import child_depth
 
+MIN_RES = 0
 MAX_RES = 29
+PARENT_OFFSET = 10  # 3^10 ~ 59K subcells per parent partition
 SQRT3 = np.sqrt(3.0)
 # "no parent" sentinel: valid ids occupy the full int64 range (face >= 16
 # sets the sign bit), so -1 would collide — INT64_MIN is unreachable
@@ -235,9 +238,24 @@ def cell_to_parents(cells):
     return out
 
 
-def cell_to_children(cells):
-    """(n, 7) children ids at res+1: column 0 the center child, columns
-    1-6 the six vertex children (each shared with 2 neighbour parents)."""
+def cell_to_children(cells, child_res: int | None = None):
+    """Descendants at ``child_res`` (default: one level finer), flat and
+    cell-major.  Per level each cell contributes 7 ids — its center
+    child, then its six vertex children, each shared with 2 neighbour
+    parents — so the multi-level output repeats shared descendants."""
+    c = np.asarray(cells, dtype=np.int64).ravel()
+    if c.size == 0:
+        return c
+    res = get_resolution(c)
+    if child_res is None:
+        child_res = int(res[0]) + 1
+    for _ in range(child_depth(res, child_res, MAX_RES)):
+        c = _children_1(c).ravel()  # row-major: stays cell-major
+    return c
+
+
+def _children_1(cells):
+    """(n, 7) children ids at res+1 (center child first)."""
     face, res, a, b = unpack(cells)
     n = face.shape[0]
     out = np.empty((n, 7), dtype=np.int64)
@@ -266,9 +284,16 @@ def cell_pitch_rad(res: int) -> float:
     return float(np.arctan(RES0_U_GNOMONIC) / SQRT3 ** res)
 
 
-def cell_to_lonlat(cells):
-    """Registry alias (cover.cell_center contract)."""
-    return cell_to_latlng(cells)
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    """Aperture 3 over the hex7 res-0 lattice density (~122 cells)."""
+    return 122 * 3**res
+
+
+cell_to_lonlat = cell_to_latlng
 
 
 def cell_to_parent(cells, parent_res: int):
@@ -289,6 +314,21 @@ def cell_to_parent(cells, parent_res: int):
             ca, cb = _hex2d_to_axial(qx, qy)
         out[m] = pack(face[m], parent_res, ca, cb)
     return out
+
+
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`: the centroid parent
+    is hex-rounding math, so a vectorized pandas UDF."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.LongType())
+    def par(c):
+        return pd.Series(cell_to_parent(c.values.astype(np.int64),
+                                        parent_res))
+
+    return par(col)
 
 
 def _plane_to_geo(face, x0, y0):

@@ -36,7 +36,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+
+MIN_RES = 0
 MAX_RES = 26
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
 _ENCODE_CHUNK = 8192
 _GOLD = (1.0 + np.sqrt(5.0)) / 2.0
 
@@ -138,6 +142,14 @@ _PITCH0_RAD = float(np.arctan(_pitch0()))
 
 def cell_pitch_rad(res: int) -> float:
     return _PITCH0_RAD / 2.0 ** max(res, 0)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 10 * 4**res  # 10 icosahedral diamonds, aperture 4
 
 
 def pack(diamond, res: int, row, col):
@@ -257,21 +269,42 @@ def cell_to_parent(cells, parent_res: int):
     return out
 
 
-def cell_to_children(cells):
-    """(n, 4) direct children (row-major: (2r+dr, 2c+dc))."""
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`: per-axis right
+    shift of the 26-bit row/col fields; needs the cells' uniform
+    ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("i4r parent_col needs from_res")
+    sh = from_res - parent_res
+    row = F.shiftrightunsigned(col, 26).bitwiseAND(F.lit(0x3FFFFFF))
+    c = col.bitwiseAND(F.lit(0x3FFFFFF))
+    head = col.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
+        F.lit(parent_res << 52))
+    return head.bitwiseOR(
+        F.shiftleft(F.shiftrightunsigned(row, sh), 26)
+    ).bitwiseOR(F.shiftrightunsigned(c, sh))
+
+
+def rhombus_children(cells, child_res: int, radix: int, max_res: int):
+    """All descendants at ``child_res`` on a ``radix``-per-axis rhombus
+    layout: each cell's (side x side) block of (row, col), row-major,
+    cell-major overall (shared by i4r/e4r and i9r/e9r)."""
     d, res, row, col = unpack(cells)
-    if res.size and int(res.max()) >= MAX_RES:
-        raise ValueError("children would exceed MAX_RES")
-    out = np.empty((d.shape[0], 4), dtype=np.int64)
-    k = 0
-    for dr in (0, 1):
-        for dc in (0, 1):
-            for r in np.unique(res):
-                m = res == r
-                out[m, k] = pack(d[m], int(r) + 1,
-                                 (row[m] << 1) | dr, (col[m] << 1) | dc)
-            k += 1
-    return out
+    if d.size == 0:
+        return d
+    side = radix ** child_depth(res, child_res, max_res)
+    dr = np.repeat(np.arange(side, dtype=np.int64), side)
+    dc = np.tile(np.arange(side, dtype=np.int64), side)
+    rows = row[:, None] * np.int64(side) + dr[None, :]
+    cols = col[:, None] * np.int64(side) + dc[None, :]
+    return pack(np.repeat(d, side * side), child_res, rows.ravel(),
+                cols.ravel())
+
+
+def cell_to_children(cells, child_res: int):
+    return rhombus_children(cells, child_res, 2, MAX_RES)
 
 
 def get_num_children(parent_res: int, child_res: int) -> int:

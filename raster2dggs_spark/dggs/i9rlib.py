@@ -11,10 +11,10 @@ arithmetic from bit shifts to base-3 digits.
 Id: int64, always positive — diamond:4 bits @57 | res:5 @52 |
 row:26 @26 | col:26 @0.  3^16 < 2^26, so MAX_RES = 16.
 
-Parent/child are integer div/mod by powers of 3 — NOT a Column bit
-expression like i4r, but still exact int64 arithmetic, so the Spark
-side uses the same vectorized-NumPy parent UDF path as rhp and A16
-compaction applies unchanged (9-ary expected counts).
+Parent/child are integer div/mod by powers of 3 — exact int64
+arithmetic, and a native floor-div Column expression on the Spark side
+(``parent_col``, the rhp precedent); A16 compaction applies unchanged
+(9-ary expected counts).
 """
 
 from __future__ import annotations
@@ -29,15 +29,26 @@ from raster2dggs_spark.dggs.i4rlib import (
     _uv_to_xyz,
     _xyz_to_lonlat,
     pack,
+    rhombus_children,
     unpack,
 )
 
+MIN_RES = 0
 MAX_RES = 16
+PARENT_OFFSET = 5  # 9^5 ~ 59K subcells per parent partition
 _ENCODE_CHUNK = 8192
 
 
 def cell_pitch_rad(res: int) -> float:
     return _PITCH0_RAD / 3.0 ** max(res, 0)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 10 * 9**res  # same diamonds, aperture 9
 
 
 def get_resolution(cells):
@@ -88,21 +99,26 @@ def cell_to_parent(cells, parent_res: int):
     return out
 
 
-def cell_to_children(cells):
-    """(n, 9) direct children (row-major: (3r+dr, 3c+dc))."""
-    d, res, row, col = unpack(cells)
-    if res.size and int(res.max()) >= MAX_RES:
-        raise ValueError("children would exceed MAX_RES")
-    out = np.empty((d.shape[0], 9), dtype=np.int64)
-    k = 0
-    for dr in (0, 1, 2):
-        for dc in (0, 1, 2):
-            for r in np.unique(res):
-                m = res == r
-                out[m, k] = pack(d[m], int(r) + 1,
-                                 row[m] * 3 + dr, col[m] * 3 + dc)
-            k += 1
-    return out
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`: per-axis floor-div
+    of the 26-bit row/col fields by 3^k (values < 2^26, so the double
+    floor-div is exact); needs the cells' uniform ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("i9r parent_col needs from_res")
+    div = 3 ** (from_res - parent_res)
+    row = F.shiftrightunsigned(col, 26).bitwiseAND(F.lit(0x3FFFFFF))
+    c = col.bitwiseAND(F.lit(0x3FFFFFF))
+    head = col.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
+        F.lit(parent_res << 52))
+    return head.bitwiseOR(
+        F.shiftleft(F.floor(row / F.lit(div)).cast("long"), 26)
+    ).bitwiseOR(F.floor(c / F.lit(div)).cast("long"))
+
+
+def cell_to_children(cells, child_res: int):
+    return rhombus_children(cells, child_res, 3, MAX_RES)
 
 
 def get_num_children(parent_res: int, child_res: int) -> int:

@@ -17,8 +17,14 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs.geohashlib import rect_area_m2, rect_boundary
+
 BASES = (18, 10, 24, 10, 24)
 MAX_PRECISION = 5
+MIN_RES = 1
+MAX_RES = MAX_PRECISION
+PARENT_OFFSET = 2
 _FIELD = "ABCDEFGHIJKLMNOPQR"
 _SUB = "abcdefghijklmnopqrstuvwx"
 
@@ -49,6 +55,14 @@ def lonlat_to_cell(lon_deg, lat_deg, precision: int):
     return (bits << 4) | precision
 
 
+def _side(precision: int) -> int:
+    """Cells per axis at ``precision`` (the product of its bases)."""
+    n = 1
+    for b in BASES[:precision]:
+        n *= b
+    return n
+
+
 def cell_from_indices(ix, iy, precision: int):
     """Pack total mixed-radix (column, row) indices (0..Πb-1 each)
     straight into ids — digit-peel twin of :func:`lonlat_to_cell`
@@ -57,9 +71,7 @@ def cell_from_indices(ix, iy, precision: int):
         raise ValueError("precision 1..5")
     ix = np.asarray(ix, dtype=np.int64).ravel().copy()
     iy = np.asarray(iy, dtype=np.int64).ravel().copy()
-    n = 1
-    for b in BASES[:precision]:
-        n *= b
+    n = _side(precision)
     bits = np.zeros(ix.shape[0], dtype=np.int64)
     for b in BASES[:precision]:
         n //= b
@@ -71,6 +83,68 @@ def cell_from_indices(ix, iy, precision: int):
 
 def get_precision(cells):
     return (np.asarray(cells, dtype=np.int64) & 0xF)
+
+
+get_resolution = get_precision
+
+
+def n_cells(res: int) -> int:
+    return _pair_product(res)
+
+
+def cell_spans(res: int) -> tuple[float, float]:
+    """(lon_span, lat_span) of every cell at ``res``, in degrees."""
+    n = _side(res)
+    return 360.0 / n, 180.0 / n
+
+
+def pitch_deg(res: int) -> float:
+    return min(cell_spans(res))
+
+
+def lattice(res: int):
+    """The (column, row) index lattice at ``res``: ``(u, v, nx, ny,
+    to_cell, v_to_lat)`` as in geohashlib.lattice.  The scaling is not a
+    power of two, so ``floor(u)`` can disagree with the encoder's
+    per-pair digit peel on a boundary; callers that need the encoder's
+    exact image use only the power-of-two lattices."""
+    n = _side(res)
+    lonspan, latspan = cell_spans(res)
+    return (lambda lon: (lon + 180.0) / lonspan,
+            lambda lat: (lat + 90.0) / latspan, n, n,
+            lambda ix, iy: cell_from_indices(ix, iy, res),
+            lambda v: np.asarray(v, np.float64) * latspan - 90.0)
+
+
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`; needs the cells'
+    uniform ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("maidenhead parent_col needs from_res")
+    prod = 1
+    for b in BASES[parent_res:from_res]:
+        prod *= b * b
+    # max packed value (18·10·24·10·24)² < 2^53 → double floor-div exact
+    bits = F.shiftrightunsigned(col, 4)
+    return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
+        F.lit(parent_res)
+    )
+
+
+def cell_to_children(cells, child_res: int):
+    """All descendants at ``child_res``: mixed-radix pair appends, so a
+    cell's block is ``bits·P + [0, P)`` with P the appended pairs'
+    base-square product; cell-major, ascending."""
+    bits, prec = _unpack(cells)
+    if bits.size == 0:
+        return bits
+    depth = child_depth(prec, child_res, MAX_PRECISION)
+    r0 = child_res - depth
+    prod = _pair_product(child_res) // _pair_product(r0)
+    kids = bits[:, None] * prod + np.arange(prod, dtype=np.int64)[None, :]
+    return ((kids << 4) | child_res).ravel()
 
 
 def _unpack(cells):
@@ -169,16 +243,10 @@ def strings_to_cells(strs):
 def cell_area_m2(cells, radius_m: float = 6371007.1809):
     """EXACT per-cell spherical areas (lon/lat rectangles):
     R² · Δλ · (sin φ_top − sin φ_bottom) per packed precision."""
-    from raster2dggs_spark.dggs import cover
+    return rect_area_m2(cells, cell_to_lonlat, get_precision, cell_spans,
+                        radius_m)
 
-    c = np.asarray(cells, dtype=np.int64)
-    lon, lat = cell_to_lonlat(c)
-    p = (c & 0xF).astype(np.int64)
-    out = np.empty(c.shape[0], dtype=np.float64)
-    for pr in np.unique(p):
-        m = p == pr
-        w, h = cover.cell_spans(int(pr), "maidenhead")
-        top = np.radians(np.minimum(lat[m] + h / 2.0, 90.0))
-        bot = np.radians(np.maximum(lat[m] - h / 2.0, -90.0))
-        out[m] = np.radians(w) * (np.sin(top) - np.sin(bot))
-    return out * radius_m * radius_m
+
+def cell_to_boundary(cells):
+    """(vlon, vlat) open-ring (n, 4) exact rectangle corners."""
+    return rect_boundary(cells, cell_to_lonlat, get_precision, cell_spans)

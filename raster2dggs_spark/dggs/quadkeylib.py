@@ -29,20 +29,31 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._bits import compress, spread
+from raster2dggs_spark.dggs._hier import child_depth
+
 MAX_LEVEL = 23
+MIN_RES = 1
+MAX_RES = MAX_LEVEL
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
 MAX_LAT = 85.05112878
+# the tiles cover only the |lat| <= MAX_LAT band of the sphere
+AREA_FRACTION = float(np.sin(np.radians(MAX_LAT)))
 EARTH_R = 6_371_007.1809
+
+
+def _fy(lat_deg):
+    """Mercator N-S tile fraction (0 at the top row), lat clipped."""
+    phi = np.radians(np.clip(lat_deg, -MAX_LAT, MAX_LAT))
+    return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi)) / np.pi) / 2.0
 
 
 def _tile_xy(lon_deg, lat_deg, level: int):
     """Slippy-scheme tile indices (vectorized, clipped into the grid)."""
     n = 1 << level
     lon = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat = np.clip(np.asarray(lat_deg, dtype=np.float64).ravel(),
-                  -MAX_LAT, MAX_LAT)
     fx = (lon + 180.0) / 360.0
-    phi = np.radians(lat)
-    fy = (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi)) / np.pi) / 2.0
+    fy = _fy(np.asarray(lat_deg, dtype=np.float64).ravel())
     tx = np.clip(np.floor(fx * n), 0, n - 1).astype(np.int64)
     ty = np.clip(np.floor(fy * n), 0, n - 1).astype(np.int64)
     return tx, ty
@@ -52,14 +63,10 @@ def _morton(ty, tx, level: int):
     """Interleave (ty, tx) bits, y high — the base-4 quadkey digits.
     Magic-mask spread (dggs/_bits.py): 5 passes per axis instead of 4
     per BIT — bit-identical to the former per-bit loop."""
-    from raster2dggs_spark.dggs._bits import spread
-
     return ((spread(ty) << np.uint64(1)) | spread(tx)).astype(np.int64)
 
 
 def _demorton(bits, level: int):
-    from raster2dggs_spark.dggs._bits import compress
-
     b = np.asarray(bits).astype(np.uint64)
     return (compress(b).astype(np.int64),
             compress(b >> np.uint64(1)).astype(np.int64))
@@ -74,16 +81,63 @@ def lonlat_to_cell(lon_deg, lat_deg, level: int):
 
 def tile_to_cell(tx, ty, level: int):
     """Pack slippy (tx, ty) indices into ids — the XYZ ingestion path
-    and the exact-supercover constructor (no float round-trip)."""
+    and the exact-supercover constructor (no float round-trip).
+    Indices outside ``[0, 2^level)`` raise ``ValueError``."""
     if not 1 <= level <= MAX_LEVEL:
         raise ValueError(f"level 1..{MAX_LEVEL}")
     tx = np.asarray(tx, dtype=np.int64).ravel()
     ty = np.asarray(ty, dtype=np.int64).ravel()
+    n = 1 << level
+    if tx.size and (tx.min() < 0 or tx.max() >= n
+                    or ty.min() < 0 or ty.max() >= n):
+        raise ValueError(f"tile indices outside [0, {n}) at level {level}")
     return (_morton(ty, tx, level) << 5) | np.int64(level)
 
 
 def get_resolution(cells):
     return (np.asarray(cells, dtype=np.int64) & 0x1F)
+
+
+def n_cells(res: int) -> int:
+    return 4**res
+
+
+def pitch_deg(res: int) -> float:
+    """The constant lon span.  The lat span shrinks toward ±85°, so
+    this is the EQUATORIAL pitch: conservative-large for margins; covers
+    enumerate the lattice exactly and never sample quadkey."""
+    return 360.0 / (1 << res)
+
+
+def lattice(res: int):
+    """The tile lattice at ``res``: ``(u, v, nx, ny, to_cell,
+    v_to_lat)`` — lon linear, the N-S axis through the Mercator
+    fraction (rows are straight lines of the grid's own planar space);
+    ``v_to_lat`` extends the edge rows, which absorb the |lat| > MAX_LAT
+    clip, to the poles."""
+    n = 1 << res
+
+    def v_to_lat(v):
+        v = np.asarray(v, np.float64)
+        lat = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * v / n))))
+        lat = np.where(v <= 0, 90.0, lat)
+        return np.where(v >= n, -90.0, lat)
+
+    return (lambda lon: (lon + 180.0) / 360.0 * n,
+            lambda lat: _fy(lat) * n, n, n,
+            lambda ix, iy: tile_to_cell(ix, iy, res), v_to_lat)
+
+
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent` (drop trailing
+    base-4 digits); needs the cells' uniform ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("quadkey parent_col needs from_res")
+    drop = 2 * (from_res - parent_res)
+    bits = F.shiftrightunsigned(col, 5 + drop)
+    return F.shiftleft(bits, 5).bitwiseOR(F.lit(parent_res))
 
 
 def _unpack(cells):
@@ -119,15 +173,8 @@ def cell_to_children(cells, child_level: int):
     uniform count — the h3lib children contract)."""
     bits, lvl = _unpack(cells)
     if bits.size == 0:
-        return np.asarray(cells, dtype=np.int64)
-    l0 = int(lvl[0])
-    if np.any(lvl != l0):
-        raise ValueError("cell_to_children needs uniform input level")
-    dl = int(child_level) - l0
-    if dl < 0:
-        raise ValueError("child_level coarser than cell level")
-    if child_level > MAX_LEVEL:
-        raise ValueError(f"level 1..{MAX_LEVEL}")
+        return bits
+    dl = child_depth(lvl, child_level, MAX_LEVEL)
     pat = np.arange(4 ** dl, dtype=np.int64)
     kids = (bits[:, None] << (2 * dl)) | pat[None, :]
     return ((kids << 5) | np.int64(child_level)).ravel()

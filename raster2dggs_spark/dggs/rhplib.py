@@ -30,8 +30,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+
 FACES = "NOPQRS"
+MIN_RES = 0
 MAX_RES = 15
+PARENT_OFFSET = 5  # 9^5 ~ 59K subcells per parent partition
 NORTH_SQUARE = 0  # rhealpixdggs default (0, 0) layout
 SOUTH_SQUARE = 0
 
@@ -212,11 +216,30 @@ def cell_to_parent(cells, parent_res: int):
     return (out << 4) | parent_res
 
 
-def cell_to_children(cells, res: int):
-    """Direct 9 children (res -> res+1) — pure id arithmetic."""
-    bits, _ = _unpack(cells)
-    kids = (bits[:, None] * 9 + np.arange(9, dtype=np.int64)[None, :]).ravel()
-    return (kids << 4) | (res + 1)
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`; needs the cells'
+    uniform ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("rhp parent_col needs from_res")
+    prod = 9 ** (from_res - parent_res)
+    # 6*9^15 < 2^53 -> double floor-div exact
+    bits = F.shiftrightunsigned(col, 4)
+    return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
+        F.lit(parent_res)
+    )
+
+
+def cell_to_children(cells, child_res: int):
+    """All 9^k descendants at ``child_res`` (base-9 digit appends),
+    cell-major, ascending."""
+    bits, res = _unpack(cells)
+    if bits.size == 0:
+        return bits
+    n = 9 ** child_depth(res, child_res, MAX_RES)
+    kids = bits[:, None] * np.int64(n) + np.arange(n, dtype=np.int64)[None, :]
+    return ((kids << 4) | np.int64(child_res)).ravel()
 
 
 def children_size(res: int, child_res: int) -> int:
@@ -267,14 +290,26 @@ def cell_to_lonlat(cells):
     return np.degrees(lon), np.degrees(lat)
 
 
-def cell_area_m2(res: int, radius_m: float = 6371007.1809) -> float:
-    """Exact equal-area cell area: A_sphere / (6 * 9^res)."""
+def cell_area_m2(cells, radius_m: float = 6371007.1809):
+    """Exact equal-area cell areas: A_sphere / (6 * 9^res) per cell.
+    A bare resolution ``r`` (0..15) is itself a valid id — face N's
+    first res-``r`` cell — so ``cell_area_m2(r)`` reads as the per-res
+    constant."""
+    res = get_resolution(cells)
     return 4.0 * np.pi * radius_m * radius_m / (6.0 * 9.0 ** res)
+
+
+def n_cells(res: int) -> int:
+    return 6 * 9**res
 
 
 def cell_pitch_rad(res: int) -> float:
     """Angular size of a cell edge at ``res`` (plane edge pi/2 / 3^res)."""
     return float(_HALF / 3 ** res)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
 
 
 def cells_to_string(cells):

@@ -15,7 +15,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._hier import child_depth
+
 MAX_LEVEL = 30
+MIN_RES = 0
+MAX_RES = MAX_LEVEL
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
 _LOOKUP_BITS = 4
 _SWAP_MASK = 1
 _INVERT_MASK = 2
@@ -185,6 +190,41 @@ def cell_level(cell):
     low = (c & (~c + np.uint64(1))).astype(np.float64)  # lowest set bit (exact pow2)
     tz = np.round(np.log2(low)).astype(np.int64)
     return MAX_LEVEL - (tz >> 1)
+
+
+get_resolution = cell_level
+
+
+def parent_col(col, parent_res: int, from_res: int | None = None):
+    """Spark Column twin of :func:`cell_to_parent`: (id & -lsb) | lsb."""
+    from pyspark.sql import functions as F
+
+    lsb = 1 << (2 * (30 - parent_res))
+    return (col.bitwiseAND(F.lit(-lsb))).bitwiseOR(F.lit(lsb))
+
+
+def cell_to_children(cells, child_res: int):
+    """All 4^k descendants at ``child_res``, cell-major, ascending: they
+    tile the parent's leaf range at stride 2·lsb(child)."""
+    u = np.asarray(cells).astype(np.uint64).ravel()
+    if u.size == 0:
+        return u.astype(np.int64)
+    depth = child_depth(cell_level(u), child_res, MAX_LEVEL)
+    lsb = u & (~u + np.uint64(1))
+    new_lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - child_res))
+    start = u - lsb + new_lsb
+    step = np.uint64(2) * new_lsb
+    pat = step * np.arange(4 ** depth, dtype=np.uint64)
+    return (start[:, None] + pat[None, :]).ravel().astype(np.int64)
+
+
+def n_cells(res: int) -> int:
+    return 6 * 4**res
+
+
+def pitch_deg(res: int) -> float:
+    """Nominal cell edge: a cube face spans 90 degrees."""
+    return 90.0 / (1 << res)
 
 
 def cell_to_lonlat(cell):

@@ -10,50 +10,23 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs import grid_lib
+
 EARTH_AREA_M2 = 4.0 * np.pi * 6371007.1809**2
-
-
-def n_cells(res: int, dggs: str = "hex7") -> int:
-    # our H3 layout is uniformly 7-ary over 122 base cells; S2: 6*4^level;
-    # rHEALPix: 6 faces * 9^res (equal-area by construction)
-    if dggs == "hex7":
-        return 122 * 7**res
-    if dggs == "rhp":
-        return 6 * 9**res
-    if dggs == "i3h":
-        # aperture 3 over the same icosahedral lattice density as hex7
-        # res 0 (~122 res-0 cells globally)
-        return 122 * 3**res
-    if dggs == "a5":
-        # 12 pentagons; aperture 5 for res 0→1, aperture 4 thereafter
-        # (ref tests/regression/test_a5_cell_to_children_size.py)
-        return 12 if res == 0 else 60 * 4 ** (res - 1)
-    if dggs == "i4r":
-        return 10 * 4 ** res  # 10 icosahedral diamonds, aperture 4
-    if dggs == "i9r":
-        return 10 * 9 ** res  # same diamonds, aperture 9
-    if dggs == "e4r":
-        return 10 * 4 ** res  # equal-area diamonds, aperture 4
-    if dggs == "e9r":
-        return 10 * 9 ** res  # equal-area diamonds, aperture 9
-    if dggs == "quadkey":
-        return 4 ** res  # web-mercator quadtree (covers |lat|<=85.05)
-    return 6 * 4**res
 
 
 def cell_area_m2_mean(res: int, dggs: str = "hex7") -> float:
     """Mean cell area at ``res`` (exact: cells partition the sphere —
-    quadkey partitions the |lat| <= 85.05° Mercator band, whose area
-    fraction is sin(85.05...°))."""
-    if dggs == "quadkey":
-        covered = EARTH_AREA_M2 * float(np.sin(np.radians(85.05112878))) / 2.0
-        return covered * 2.0 / n_cells(res, dggs)
-    return EARTH_AREA_M2 / n_cells(res, dggs)
+    quadkey partitions the |lat| <= 85.05° Mercator band, its
+    ``AREA_FRACTION`` of the sphere)."""
+    lib = grid_lib(dggs)
+    return EARTH_AREA_M2 * getattr(lib, "AREA_FRACTION", 1.0) / lib.n_cells(res)
 
 
 def resolve_resolution(mode: str, mean_pixel_area_m2: float,
                        dggs: str = "hex7", max_res: int = 15) -> int:
-    """Reference mode semantics:
+    """Reference mode semantics, over the grid's ``MIN_RES..MAX_RES``
+    (``max_res`` caps the top):
 
     - ``smaller-than-pixel``: coarsest res whose cells are smaller than
       (or equal to) a pixel;
@@ -61,31 +34,19 @@ def resolve_resolution(mode: str, mean_pixel_area_m2: float,
       (or equal to) a pixel;
     - ``min-diff``: res whose cell area is closest to the pixel area.
     """
-    if dggs == "s2":
-        max_res = min(max_res, 30)
-    if dggs == "a5":
-        max_res = min(max_res, 27)
-    if dggs == "quadkey":
-        max_res = min(max_res, 23)
-    if dggs == "i4r":
-        max_res = min(max_res, 26)
-    if dggs == "i9r":
-        max_res = min(max_res, 16)
-    if dggs == "e4r":
-        max_res = min(max_res, 26)
-    if dggs == "e9r":
-        max_res = min(max_res, 16)
-    areas = np.array([cell_area_m2_mean(r, dggs) for r in range(max_res + 1)])
+    lib = grid_lib(dggs)
+    lo, hi = lib.MIN_RES, min(max_res, lib.MAX_RES)
+    areas = np.array([cell_area_m2_mean(r, dggs) for r in range(lo, hi + 1)])
     if mode == "smaller-than-pixel":
         ok = np.flatnonzero(areas <= mean_pixel_area_m2)
         if ok.size == 0:
-            return max_res
-        return int(ok[0])
+            return hi
+        return lo + int(ok[0])
     if mode == "larger-than-pixel":
         ok = np.flatnonzero(areas >= mean_pixel_area_m2)
         if ok.size == 0:
-            return 0
-        return int(ok[-1])
+            return lo
+        return lo + int(ok[-1])
     if mode == "min-diff":
-        return int(np.argmin(np.abs(areas - mean_pixel_area_m2)))
+        return lo + int(np.argmin(np.abs(areas - mean_pixel_area_m2)))
     raise ValueError(f"unknown mode {mode!r}")

@@ -354,39 +354,26 @@ def hist_normalize_cell_area(hist: DataFrame, res: int, dggs: str = "hex7",
                              cell_col: str = "cell",
                              out: str = "area_frac") -> DataFrame:
     """A11 CELL_AREA normalization: weight / cell area in m²
-    (histogram.py:135-151), on EVERY grid (round 5).  Equal-area grids
-    (rhp) divide by the exact closed-form constant — a pure native
-    expression; all other grids compute per-cell spherical areas in an
-    Arrow UDF (exact: spherical excess on the great-circle-edged grids,
-    R²·Δλ·Δsinφ on the lon/lat-rectangle grids)."""
-    if dggs == "rhp":
-        from raster2dggs_spark.dggs import rhplib
+    (histogram.py:135-151), on EVERY grid (round 5).  Constant-area grids
+    (rhp) divide by the exact closed-form area at ``res`` — a pure
+    native expression; all other grids compute per-cell spherical areas
+    from the grid's ``cell_area_m2`` in an Arrow UDF (exact: spherical
+    excess on the great-circle-edged grids, R²·Δλ·Δsinφ on the
+    lon/lat-rectangle grids)."""
+    import pandas as pd
 
+    from raster2dggs_spark.dggs import CONSTANT_AREA_GRIDS, grid_lib
+
+    lib = grid_lib(dggs)
+    if dggs in CONSTANT_AREA_GRIDS:
         return hist.withColumn(
-            out, F.col(weight_col) / F.lit(float(rhplib.cell_area_m2(res)))
-        )
-    if dggs in ("hex7", "i3h", "a5", "i4r", "i9r", "e4r", "e9r", "s2",
-                "geohash", "maidenhead", "quadkey"):
-        import pandas as pd
+            out, F.col(weight_col) / F.lit(float(lib.cell_area_m2(res))))
 
-        @F.pandas_udf("double")
-        def area_m2(c):
-            from raster2dggs_spark.dggs import (
-                a5lib, e4rlib, e9rlib, geohashlib, h3lib, i3hlib,
-                i4rlib, i9rlib, maidenheadlib, quadkeylib, s2lib,
-            )
+    @F.pandas_udf("double")
+    def area_m2(c):
+        return pd.Series(lib.cell_area_m2(c.values))
 
-            lib = {"hex7": h3lib, "i3h": i3hlib, "a5": a5lib,
-                   "i4r": i4rlib, "i9r": i9rlib, "e4r": e4rlib,
-                   "e9r": e9rlib, "s2": s2lib, "geohash": geohashlib,
-                   "maidenhead": maidenheadlib,
-                   "quadkey": quadkeylib}[dggs]
-            return pd.Series(lib.cell_area_m2(c.values))
-
-        return hist.withColumn(out, F.col(weight_col) / area_m2(cell_col))
-    raise ValueError(
-        f"cell-area normalization not implemented for grid {dggs!r}"
-    )
+    return hist.withColumn(out, F.col(weight_col) / area_m2(cell_col))
 
 
 def pack_fractions(df: DataFrame, keys: list[str], class_col: str = "class",

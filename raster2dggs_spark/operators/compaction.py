@@ -3,9 +3,9 @@
 Reference semantics (rasterindexer.py:474-513): bottom-up from res to
 parent_res, a parent replaces its children iff ALL expected children are
 present AND every value column is uniform across them; repeat per level.
-Our H3 layout is uniformly 7-ary (h3lib docstring), so expected_count is
-7 per level everywhere (libh3's pentagon-aware count differs — see
-h3lib).
+The expected count per level is the grid's ``n_cells(r) // n_cells(r-1)``
+(every nested grid here refines uniformly — hex7's H3 layout is 7-ary
+everywhere, unlike libh3's pentagon-aware count; a5 is 5-ary at res 1).
 
 Spark expression of one level: groupBy(native-bitwise parent) with
 count + per-column distinct-count; qualifying groups collapse to one
@@ -20,7 +20,19 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from raster2dggs_spark.dggs import MULTI_PARENT_GRIDS, grid_lib
 from raster2dggs_spark.operators.joins import parent_expr
+
+
+def _nested_lib(dggs: str):
+    """The grid module, for grids whose children partition their parent
+    (multi-parent grids compact through :func:`compact_cells_3h`)."""
+    lib = grid_lib(dggs)
+    if dggs in MULTI_PARENT_GRIDS:
+        raise ValueError(
+            f"compact: {dggs!r} children are shared between parents; "
+            "use compact_cells_3h")
+    return lib
 
 
 def compact_cells(df: DataFrame, value_cols: list[str], res: int,
@@ -28,26 +40,12 @@ def compact_cells(df: DataFrame, value_cols: list[str], res: int,
                   cell_col: str = "cell") -> DataFrame:
     """Compact a single-resolution cell frame bottom-up to ``min_res``.
 
-    Returns the mixed-resolution frame (cell ids carry their res — in
-    the bit layout for hex7/s2, in the packed res nibble for
-    geohash/rhp).  Exact-equality uniformity, NaN-safe via null-safe
-    comparison on a canonical struct.  All five hierarchical grids
-    compact: hex7 (7-ary), s2 (4-ary), geohash (32-ary prefix tree),
-    rhp (9-ary), a5 (4-ary, 5-ary at the res 1→0 level — the
-    aperture-5-then-4 schedule) — parent derivation stays native
-    bit/int arithmetic (joins.parent_expr), zero Python in the loop."""
-    if dggs not in ("hex7", "s2", "geohash", "rhp", "a5", "i4r", "i9r",
-                    "e4r", "e9r", "quadkey"):
-        raise ValueError(
-            f"compact: no hierarchy arithmetic for {dggs!r} "
-            "(maidenhead mixes 10/24-ary per level)"
-        )
-
-    def children_at(parent_res: int) -> int:
-        if dggs == "a5":
-            return 5 if parent_res == 0 else 4
-        return {"hex7": 7, "s2": 4, "geohash": 32, "rhp": 9, "i4r": 4,
-                "i9r": 9, "e4r": 4, "e9r": 9, "quadkey": 4}[dggs]
+    Returns the mixed-resolution frame (cell ids carry their res in
+    their packed layout).  Exact-equality uniformity, NaN-safe via
+    null-safe comparison on a canonical struct.  Every nested grid
+    compacts; parent derivation is the grid's native ``parent_col``
+    (joins.parent_expr), zero Python in the loop."""
+    lib = _nested_lib(dggs)
     out_parts: list[DataFrame] = []
     cur = df
     for r in range(res, min_res, -1):
@@ -60,7 +58,8 @@ def compact_cells(df: DataFrame, value_cols: list[str], res: int,
             F.first("__v").alias("__fv"),
         )
         compactable = stats.where(
-            (F.col("__n") == children_at(r - 1)) & (F.col("__d") == 1)
+            (F.col("__n") == lib.n_cells(r) // lib.n_cells(r - 1))
+            & (F.col("__d") == 1)
         )
         parents = compactable.select(
             F.col("__parent").alias(cell_col),
@@ -82,148 +81,25 @@ def uncompact_cells(df: DataFrame, res: int, dggs: str = "hex7",
                     cell_col: str = "cell") -> DataFrame:
     """Inverse: expand every cell to its res-``res`` descendants (values
     replicated).  Used by the round-trip invariant test; the descendant
-    enumeration happens in a vectorized UDF (digit arithmetic)."""
+    enumeration is the grid's ``cell_to_children`` in a vectorized UDF."""
     from pyspark.sql import types as T
     import numpy as np
     import pandas as pd
     from typing import Iterator
 
+    lib = _nested_lib(dggs)
     other = [c for c in df.columns if c != cell_col]
     schema = T.StructType(
         [T.StructField(cell_col, T.LongType(), False)]
         + [df.schema[c] for c in other]
     )
 
-    def _expand_hex7(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """(m,) cells at r_cur -> (m, 7^depth) descendants at res —
-        vectorized digit enumeration (no per-row Python)."""
-        depth = res - r_cur
-        n = 7 ** depth
-        u = group.astype(np.uint64)
-        base = (u & ~(np.uint64(0xF) << np.uint64(52))) | (
-            np.uint64(res) << np.uint64(52)
-        )
-        # clear the fill digits for levels r_cur+1..res
-        clear = np.uint64(0)
-        pat = np.zeros(n, dtype=np.uint64)
-        digs = np.arange(n)
-        for lvl in range(depth):
-            shift = 3 * (15 - (r_cur + 1 + lvl))
-            clear |= np.uint64(7) << np.uint64(shift)
-            d = ((digs // (7 ** (depth - lvl - 1))) % 7).astype(np.uint64)
-            pat |= d << np.uint64(shift)
-        return ((base & ~clear)[:, None] | pat[None, :]).astype(np.int64)
-
-    def _expand_s2(group: np.ndarray, r_cur: int) -> np.ndarray:
-        depth = res - r_cur
-        n = 4 ** depth
-        u = group.astype(np.uint64)
-        lsb = u & (~u + np.uint64(1))
-        new_lsb = np.uint64(1) << np.uint64(2 * (30 - res))
-        step = np.uint64(2) << np.uint64(2 * (30 - res))
-        start = u - lsb + new_lsb
-        return (start[:, None]
-                + step * np.arange(n, dtype=np.uint64)[None, :]).astype(np.int64)
-
-    def _expand_geohash(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """32-ary prefix tree: bits' = bits << 5·depth | pattern."""
-        depth = res - r_cur
-        n = 32 ** depth
-        bits = (group.astype(np.uint64) >> np.uint64(4))
-        pat = np.arange(n, dtype=np.uint64)
-        kids = (bits[:, None] << np.uint64(5 * depth)) | pat[None, :]
-        return ((kids << np.uint64(4)) | np.uint64(res)).astype(np.int64)
-
-    def _expand_rhp(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """9-ary: bits' = bits·9^depth + pattern."""
-        depth = res - r_cur
-        n = 9 ** depth
-        bits = (group.astype(np.int64) >> 4)
-        pat = np.arange(n, dtype=np.int64)
-        kids = bits[:, None] * np.int64(n) + pat[None, :]
-        return (kids << 4) | np.int64(res)
-
-    def _expand_a5(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """Aperture 5-then-4: append base-4 digits below the existing
-        MSB-aligned field (and enumerate the 5 quintants when expanding
-        a res-0 pentagon)."""
-        base = (group & ~(np.int64(0x1F) << np.int64(55))) | np.int64(
-            res << 55)
-        shift = np.int64(52 - 2 * (res - 1)) if res >= 2 else np.int64(52)
-        nd = 4 ** max(res - max(r_cur, 1), 0)
-        dig = np.arange(nd, dtype=np.int64) << shift
-        if r_cur == 0:
-            q = np.arange(5, dtype=np.int64) << np.int64(52)
-            pat = (q[:, None] | dig[None, :]).ravel()
-        else:
-            pat = dig
-        return base[:, None] | pat[None, :]
-
-    def _expand_i4r(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """Aperture-4 rhombus: per-axis bit append (row/col fields)."""
-        depth = res - r_cur
-        side = 1 << depth
-        d = (group >> np.int64(57)) & np.int64(0xF)
-        row = (group >> np.int64(26)) & np.int64(0x3FFFFFF)
-        col = group & np.int64(0x3FFFFFF)
-        dr = np.repeat(np.arange(side, dtype=np.int64), side)
-        dc = np.tile(np.arange(side, dtype=np.int64), side)
-        rows = (row[:, None] << depth) | dr[None, :]
-        cols = (col[:, None] << depth) | dc[None, :]
-        return ((d[:, None] << np.int64(57))
-                | np.int64(res << 52)
-                | (rows << np.int64(26)) | cols)
-
-    def _expand_i9r(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """Aperture-9 rhombus: per-axis base-3 digit append."""
-        depth = res - r_cur
-        side = 3 ** depth
-        d = (group >> np.int64(57)) & np.int64(0xF)
-        row = (group >> np.int64(26)) & np.int64(0x3FFFFFF)
-        col = group & np.int64(0x3FFFFFF)
-        dr = np.repeat(np.arange(side, dtype=np.int64), side)
-        dc = np.tile(np.arange(side, dtype=np.int64), side)
-        rows = row[:, None] * np.int64(side) + dr[None, :]
-        cols = col[:, None] * np.int64(side) + dc[None, :]
-        return ((d[:, None] << np.int64(57))
-                | np.int64(res << 52)
-                | (rows << np.int64(26)) | cols)
-
-    def _expand_quadkey(group: np.ndarray, r_cur: int) -> np.ndarray:
-        """4-ary quadtree: bits' = bits << 2·depth | pattern (5-bit
-        level field)."""
-        depth = res - r_cur
-        n = 4 ** depth
-        bits = (group.astype(np.int64) >> 5)
-        pat = np.arange(n, dtype=np.int64)
-        kids = (bits[:, None] << np.int64(2 * depth)) | pat[None, :]
-        return (kids << 5) | np.int64(res)
-
-    expanders = {"hex7": _expand_hex7, "s2": _expand_s2,
-                 "geohash": _expand_geohash, "rhp": _expand_rhp,
-                 "a5": _expand_a5, "i4r": _expand_i4r,
-                 "i9r": _expand_i9r, "e4r": _expand_i4r,
-                 "e9r": _expand_i9r, "quadkey": _expand_quadkey}
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import h3lib, s2lib
-
         for pdf in batches:
             if not len(pdf):
                 continue
             cells = pdf[cell_col].values
-            if dggs == "hex7":
-                cr = h3lib.get_resolution(cells)
-            elif dggs == "s2":
-                cr = s2lib.cell_level(cells)
-            elif dggs == "a5":
-                cr = (np.asarray(cells, dtype=np.int64) >> 55) & 0x1F
-            elif dggs in ("i4r", "i9r", "e4r", "e9r"):
-                cr = (np.asarray(cells, dtype=np.int64) >> 52) & 0x1F
-            elif dggs == "quadkey":  # 5-bit level field
-                cr = (np.asarray(cells, dtype=np.int64) & 0x1F)
-            else:  # geohash/rhp: packed res nibble
-                cr = (np.asarray(cells, dtype=np.int64) & 0xF)
+            cr = lib.get_resolution(cells)
             out_cells = []
             out_idx = []
             idx = np.arange(len(cells))
@@ -234,9 +110,9 @@ def uncompact_cells(df: DataFrame, res: int, dggs: str = "hex7",
                     out_cells.append(group)
                     out_idx.append(idx[m])
                     continue
-                kids = expanders[dggs](group, int(r_cur))
-                out_cells.append(kids.ravel())
-                out_idx.append(np.repeat(idx[m], kids.shape[1]))
+                kids = lib.cell_to_children(group, res)
+                out_cells.append(kids)
+                out_idx.append(np.repeat(idx[m], kids.size // group.size))
             cells_all = np.concatenate(out_cells)
             idx_all = np.concatenate(out_idx)
             data = {cell_col: cells_all}

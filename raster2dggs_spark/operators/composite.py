@@ -343,8 +343,9 @@ def composite_scenes(
     remaining ones.  Exactly two exchanges end to end: the
     (scene, cell) combine and the cell composite."""
     from raster2dggs_spark.operators.indexing import (
-        band_cols, default_parent_res, derived_parent_col, pixel_cells,
+        band_cols, default_parent_res, pixel_cells,
     )
+    from raster2dggs_spark.operators.joins import parent_expr
 
     if parent_res is None:
         parent_res = default_parent_res(res, dggs)
@@ -362,7 +363,7 @@ def composite_scenes(
         time_col="scene_ts",
     )
     return out.withColumn(
-        "parent", derived_parent_col("cell", parent_res, dggs, from_res=res))
+        "parent", parent_expr("cell", parent_res, dggs, from_res=res))
 
 
 def harmonic_fit_cells(

@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster2dggs_spark.dggs import EXACT_LATTICE_GRIDS, grid_lib
+
 EARTH_R = 6_371_007.1809  # authalic, matches geo/constants
 
 _AGGS = {
@@ -79,13 +81,16 @@ def _agg_exprs(value_cols: list[str], agg: str, prefix: str = "focal_"):
 
 def lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
                     dggs: str = "geohash") -> DataFrame:
-    """Attach the integer lattice coordinates (gx, gy) of each packed
-    rectangle-grid id — for geohash, gx = floor((lon+180)/360 * 2^nlon)
-    exactly as the encoder quantized it (dggs/geohashlib.py:37-40),
-    recovered by bit de-interleave; for quadkey the slippy (tx, ty)
-    tile indices (dggs/quadkeylib.py).  One narrow Arrow pass."""
-    if dggs not in ("geohash", "quadkey"):
-        raise ValueError(f"lattice focal: geohash | quadkey, got {dggs!r}")
+    """Attach the integer lattice coordinates (gx, gy) and the
+    resolution ``gprec`` of each packed rectangle-grid id — the cell's
+    index in the grid's ``lattice(res)`` (for geohash the encoder's
+    lon/lat quantizer indices, for quadkey the slippy (tx, ty) tile),
+    read off the cell center, half a cell from every lattice line.  One
+    narrow Arrow pass."""
+    if dggs not in EXACT_LATTICE_GRIDS:
+        raise ValueError(
+            f"lattice focal: {' | '.join(EXACT_LATTICE_GRIDS)}, got {dggs!r}")
+    lib = grid_lib(dggs)
     out_schema = T.StructType(
         list(cells_df.schema.fields)
         + [T.StructField("gx", T.LongType(), False),
@@ -93,44 +98,19 @@ def lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
            T.StructField("gprec", T.LongType(), False)])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import geohashlib, quadkeylib
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            if dggs == "quadkey":
-                c = pdf[cell_col].values.astype(np.int64)
-                lvl = quadkeylib.get_resolution(c)
-                if len(np.unique(lvl)) > 1:
-                    raise ValueError("mixed quadkey levels in focal input")
-                tx, ty, _ = quadkeylib.cell_to_tile(c)
-                pdf = pdf.copy()
-                pdf["gx"] = tx
-                pdf["gy"] = ty
-                pdf["gprec"] = np.int64(int(lvl[0]))
-                yield pdf
-                continue
-            c = pdf[cell_col].values.astype(np.uint64)
-            p = geohashlib.get_precision(c)
+            c = pdf[cell_col].values.astype(np.int64)
+            p = lib.get_resolution(c)
             if len(np.unique(p)) > 1:
-                raise ValueError("mixed geohash precisions in focal input")
-            prec = int(p[0])
-            nbits = 5 * prec
-            nlon = (nbits + 1) // 2
-            nlat = nbits // 2
-            bits = c >> np.uint64(4)
-            gx = np.zeros(c.shape[0], dtype=np.uint64)
-            gy = np.zeros(c.shape[0], dtype=np.uint64)
-            for k in range(nbits):
-                b = (bits >> np.uint64(nbits - 1 - k)) & np.uint64(1)
-                if k % 2 == 0:
-                    gx |= b << np.uint64(nlon - 1 - k // 2)
-                else:
-                    gy |= b << np.uint64(nlat - 1 - k // 2)
+                raise ValueError(f"mixed {dggs} resolutions in focal input")
+            u, v = lib.lattice(int(p[0]))[:2]
+            lon, lat = lib.cell_to_lonlat(c)
             pdf = pdf.copy()
-            pdf["gx"] = gx.astype(np.int64)
-            pdf["gy"] = gy.astype(np.int64)
-            pdf["gprec"] = np.int64(prec)
+            pdf["gx"] = np.floor(u(lon)).astype(np.int64)
+            pdf["gy"] = np.floor(v(lat)).astype(np.int64)
+            pdf["gprec"] = np.int64(p[0])
             yield pdf
 
     return cells_df.mapInPandas(fn, out_schema)
@@ -158,15 +138,7 @@ def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
     if k < 1:
         raise ValueError("k >= 1 required")
     g = lattice_indices(cells_df, cell_col, dggs)
-    if dggs == "quadkey":
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(gprec AS INT))")
-        wlat = wlon
-    else:
-        # lattice extents 2^nlon x 2^nlat, nlon = (5p+1)//2, nlat = 5p//2
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                      "CAST((5 * gprec + 1) DIV 2 AS INT))")
-        wlat = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                      "CAST((5 * gprec) DIV 2 AS INT))")
+    wlon, wlat = _lattice_extent_exprs(dggs)
     seq = F.sequence(F.lit(-k), F.lit(k))
     scat = (g
             .withColumn("dx", F.explode(seq))
@@ -185,16 +157,14 @@ def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
 
 
 def _lattice_extent_exprs(dggs: str):
-    """(wlon, wlat) lattice extents as native Columns (shared by
-    focal_lattice and the Moran operators)."""
-    if dggs == "quadkey":
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(gprec AS INT))")
-        return wlon, wlon
-    wlon = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                  "CAST((5 * gprec + 1) DIV 2 AS INT))")
-    wlat = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                  "CAST((5 * gprec) DIV 2 AS INT))")
-    return wlon, wlat
+    """(wlon, wlat) lattice extents of each row's ``gprec`` as native
+    Columns (shared by focal_lattice and the Moran operators)."""
+    lib = grid_lib(dggs)
+    dims = [lib.lattice(r)[2:4] for r in range(lib.MIN_RES, lib.MAX_RES + 1)]
+    at = F.col("gprec").cast("int") - (lib.MIN_RES - 1)
+    return tuple(
+        F.element_at(F.array(*[F.lit(d[i]) for d in dims]), at).cast("long")
+        for i in (0, 1))
 
 
 def morans_i_local(cells_df: DataFrame, value_col: str,
@@ -504,7 +474,7 @@ def focal_cells(cells_df: DataFrame, value_cols: list[str], res: int,
     from raster2dggs_spark.dggs import cover
 
     if radius_m is None:
-        pitch_m = np.radians(cover.pitch_deg(res, dggs)) * EARTH_R
+        pitch_m = np.radians(grid_lib(dggs).pitch_deg(res)) * EARTH_R
         radius_m = (k + 0.5) * float(pitch_m)
     schema = T.StructType(
         list(cells_df.schema.fields)
@@ -657,22 +627,17 @@ def morphology_cells(cells_df: DataFrame, op: str = "dilate", k: int = 1,
         T.StructField("gy", T.LongType(), False),
         T.StructField("gprec", T.LongType(), False)])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import geohashlib, quadkeylib
+    lib = grid_lib(dggs)
 
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             prec = pdf["gprec"].values
             if len(np.unique(prec)) > 1:
                 raise ValueError("mixed precisions in morphology input")
-            p = int(prec[0])
-            if dggs == "quadkey":
-                ids = quadkeylib.tile_to_cell(pdf["gx"].values,
-                                              pdf["gy"].values, p)
-            else:
-                ids = geohashlib.cell_from_indices(pdf["gx"].values,
-                                                   pdf["gy"].values, p)
+            to_cell = lib.lattice(int(prec[0]))[4]
+            ids = to_cell(pdf["gx"].values, pdf["gy"].values)
             yield pd.DataFrame({"cell": ids, "gx": pdf["gx"].values,
                                 "gy": pdf["gy"].values,
                                 "gprec": pdf["gprec"].values})

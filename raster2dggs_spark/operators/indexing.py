@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster2dggs_spark.dggs import grid_lib
+from raster2dggs_spark.dggs.cover import wrap_lon
+from raster2dggs_spark.operators.joins import parent_expr
+
 MAX_BANDS_DEFAULT = 4
 
 _UDF_INPUT_COLS = [
@@ -94,27 +98,6 @@ def band_cols(n_bands: int) -> list[str]:
     return [f"band_{i + 1}" for i in range(n_bands)]
 
 
-def derived_parent_col(cell_col, parent_res: int, dggs: str,
-                       from_res: int):
-    """Post-shuffle parent column: native bit arithmetic
-    (joins.parent_expr) for the nested grids; for the aperture-3 i3h
-    grid — whose centroid parent is hex-rounding math — a vectorized
-    pandas UDF over cover.cell_parent."""
-    from raster2dggs_spark.operators.joins import parent_expr
-
-    if dggs != "i3h":
-        return parent_expr(cell_col, parent_res, dggs, from_res=from_res)
-
-    @F.pandas_udf(T.LongType())
-    def par(c: pd.Series) -> pd.Series:
-        from raster2dggs_spark.dggs import cover
-
-        return pd.Series(cover.cell_parent(
-            c.values.astype(np.int64), parent_res, "i3h"))
-
-    return par(F.col(cell_col) if isinstance(cell_col, str) else cell_col)
-
-
 def cell_column_name(dggs: str, res: int) -> str:
     """Reference's zero-padded output column naming, e.g. ``h3_09``
     (/root/reference/raster2dggs/indexers/rasterindexer.py:76-82)."""
@@ -143,43 +126,20 @@ def _encode_points(lon, lat, res, parent_res, dggs):
     """Encode points; parent computed only when ``parent_res`` is not
     None (the shuffle-optimized paths derive parents post-aggregation
     with native bitwise expressions instead of shuffling them)."""
-    from raster2dggs_spark.dggs import (
-        h3lib, s2lib, geohashlib, maidenheadlib, rhplib,
-    )
-
-    from raster2dggs_spark.dggs.cover import wrap_lon
-
-    from raster2dggs_spark.dggs import (
-        a5lib, e4rlib, e9rlib, i3hlib, i4rlib, i9rlib, quadkeylib,
-    )
-
-    lib = {"hex7": h3lib, "s2": s2lib, "geohash": geohashlib,
-           "maidenhead": maidenheadlib, "rhp": rhplib,
-           "i3h": i3hlib, "a5": a5lib, "i4r": i4rlib,
-           "i9r": i9rlib, "e4r": e4rlib, "e9r": e9rlib,
-           "quadkey": quadkeylib}.get(dggs)
-    if lib is None:
-        raise ValueError(f"unknown dggs {dggs!r}")
+    lib = grid_lib(dggs)
     # antimeridian-crossing tiles produce pixel-centre lons beyond ±180
     # (F14) — canonicalize before the encode (flat grids would clamp)
-    lon = wrap_lon(lon)
-    if dggs == "hex7":
-        cell = lib.latlng_to_cell(lon, lat, res)
-    else:  # s2 / geohash use (lon, lat) naming
-        cell = lib.lonlat_to_cell(lon, lat, res)
+    cell = lib.lonlat_to_cell(wrap_lon(lon), lat, res)
     parent = None if parent_res is None else lib.cell_to_parent(cell, parent_res)
     return cell, parent
 
 
 def default_parent_res(res: int, dggs: str = "hex7") -> int:
-    """Reference default: parent_res = max(0, res - offset), offset sized
-    for ~64K subcells per partition (cli_factory.py:124-161): H3 offset 6
-    (7^6≈117K), S2 offset 8 (4^8=65K), geohash offset 3 (32^3=33K)."""
-    floor = 1 if dggs in ("geohash", "maidenhead", "quadkey") else 0
-    off = {"hex7": 6, "s2": 8, "geohash": 3, "maidenhead": 2, "rhp": 5,
-           "i3h": 10, "a5": 8, "i4r": 8, "i9r": 5, "e4r": 8,
-           "e9r": 5, "quadkey": 8}[dggs]  # 3^10≈59K; 4^8=65K; 9^5≈59K
-    return max(floor, res - off)
+    """Reference default: parent_res = max(MIN_RES, res - offset), the
+    grid's ``PARENT_OFFSET`` sized for ~64K subcells per partition
+    (cli_factory.py:124-161)."""
+    lib = grid_lib(dggs)
+    return max(lib.MIN_RES, res - lib.PARENT_OFFSET)
 
 
 def pixel_cells(
@@ -423,8 +383,8 @@ def index_point_agg(
     # the nested grids, a vectorized UDF for i3h (its centroid-parent is
     # hex-rounding math, inexpressible as a Column)
     g = partials.groupBy("cell").agg(*aggs)
-    g = g.withColumn("parent", derived_parent_col("cell", parent_res, dggs,
-                                                  from_res=res))
+    g = g.withColumn("parent", parent_expr("cell", parent_res, dggs,
+                                           from_res=res))
     out_cols = [F.col("parent"), F.col("cell"), F.col("npx")]
     for c in bcols:
         cnt = F.col(f"{c}_cnt")

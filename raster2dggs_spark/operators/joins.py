@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster2dggs_spark.dggs import (
+    EXACT_LATTICE_GRIDS, MULTI_PARENT_GRIDS, RECT_GRIDS, cover, grid_lib,
+)
+
 EARTH_R = 6371007.1809
 
 
@@ -70,83 +74,9 @@ def _point_segment_dist_deg(lon, lat, x1, y1, x2, y2):
     return np.sqrt(ex * ex + ey * ey)
 
 
-def _pitch_deg(res: int, dggs: str) -> float:
-    from raster2dggs_spark.dggs import cover
-
-    return cover.pitch_deg(res, dggs)
-
-
-def _cells_children(cells, res: int, dggs: str):
-    """All direct children of ``cells`` (at ``res``) — pure id arithmetic.
-
-    hex7: uniform 7-ary digit tree (clear the res-(res+1) digit, bump the
-    res nibble, OR in digit 0..6).  S2: the 4 children ids are
-    ``id + {-3,-1,1,3}·(lsb>>2)`` (standard S2 id arithmetic).  rhp:
-    base-9 append.  geohash: 5-bit append (32 children)."""
-    cells = np.asarray(cells, dtype=np.int64)
-    if dggs == "hex7":
-        r1 = res + 1
-        shift = 3 * (15 - r1)
-        base = (
-            (cells & ~np.int64(0xF << 52) & ~np.int64(7 << shift))
-            | np.int64(r1 << 52)
-        )
-        digits = (np.arange(7, dtype=np.int64) << shift)
-        return (base[:, None] | digits[None, :]).ravel()
-    if dggs == "rhp":
-        from raster2dggs_spark.dggs import rhplib
-
-        return rhplib.cell_to_children(cells, res)
-    if dggs == "geohash":
-        bits = cells >> 4
-        kids = ((bits[:, None] << 5)
-                | np.arange(32, dtype=np.int64)[None, :]).ravel()
-        return (kids << 4) | (res + 1)
-    if dggs == "s2":
-        lsb = cells & -cells
-        q = lsb >> 2
-        offs = np.array([-3, -1, 1, 3], dtype=np.int64)
-        return (cells[:, None] + offs[None, :] * q[:, None]).ravel()
-    if dggs == "maidenhead":
-        from raster2dggs_spark.dggs.maidenheadlib import BASES
-
-        b = BASES[res]  # next pair's base; children = b^2 mixed-radix append
-        bits = cells >> 4
-        kids = (bits[:, None] * (b * b)
-                + np.arange(b * b, dtype=np.int64)[None, :]).ravel()
-        return (kids << 4) | (res + 1)
-    if dggs == "a5":
-        from raster2dggs_spark.dggs import a5lib
-
-        return a5lib.cell_to_children(cells).ravel()
-    if dggs == "i4r":
-        from raster2dggs_spark.dggs import i4rlib
-
-        return i4rlib.cell_to_children(cells).ravel()
-    if dggs == "i9r":
-        from raster2dggs_spark.dggs import i9rlib
-
-        return i9rlib.cell_to_children(cells).ravel()
-    if dggs == "e4r":
-        from raster2dggs_spark.dggs import e4rlib
-
-        return e4rlib.cell_to_children(cells).ravel()
-    if dggs == "e9r":
-        from raster2dggs_spark.dggs import e9rlib
-
-        return e9rlib.cell_to_children(cells).ravel()
-    if dggs == "quadkey":
-        from raster2dggs_spark.dggs import quadkeylib
-
-        return quadkeylib.cell_to_children(cells, res + 1).ravel()
-    raise ValueError(f"children arithmetic not implemented for {dggs!r}")
-
-
-def _centers_edge_dist(cells, vx, vy, dggs: str):
+def _centers_edge_dist(cells, vx, vy, lib):
     """(center_in, min-edge-distance-deg) for every cell center."""
-    from raster2dggs_spark.dggs import cover
-
-    clon, clat = cover.cell_center(cells, dggs)
+    clon, clat = lib.cell_to_lonlat(cells)
     center_in = raycast_contains(clon, clat, vx, vy)
     mind = np.full(cells.shape[0], np.inf)
     n = len(vx)
@@ -174,27 +104,26 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     O(area-in-cells + perimeter·depth) — a continent at res 9 no longer
     samples a dense O((extent/pitch)²) lattice (the flat version's
     failure mode at scale)."""
-    from raster2dggs_spark.dggs import cover
-
+    lib = grid_lib(dggs)
     vx = np.asarray(vx, dtype=np.float64)
     vy = np.asarray(vy, dtype=np.float64)
     lon_min, lon_max = vx.min(), vx.max()
     lat_min, lat_max = vy.min(), vy.max()
     extent = max(lon_max - lon_min, lat_max - lat_min)
-    # halo multiple of pitch that bounds a cell circumradius (hex:
-    # ~0.58·pitch; s2 cells distort up to ~1.4× the nominal edge)
-    halo = 1.5 if dggs == "hex7" else 2.0
+    # halo multiple of pitch that bounds a cell circumradius (s2 cells
+    # distort up to ~1.4× the nominal edge; hex7 sets a tighter one)
+    halo = getattr(lib, "COVER_HALO", 2.0)
     # edge distances are measured in raw lon/lat degrees, but a cell's
     # lon extent grows by 1/cos(lat) — scale the descent margins so a
     # "deep interior" verdict holds for every descendant at any latitude
     maxlat = min(89.0, max(abs(lat_min), abs(lat_max)))
     distort = 1.0 / max(0.1, float(np.cos(np.radians(maxlat))))
     r0 = res
-    while r0 > 0 and extent / (0.35 * _pitch_deg(r0, dggs)) > _SEED_MAX:
+    while r0 > 0 and extent / (0.35 * lib.pitch_deg(r0)) > _SEED_MAX:
         r0 -= 1
 
     # --- seed: dense-but-bounded lattice at r0 -------------------------
-    pitch0 = _pitch_deg(r0, dggs)
+    pitch0 = lib.pitch_deg(r0)
     step = pitch0 * 0.35
     pad = pitch0
     lons = np.arange(lon_min - pad, lon_max + pad + step, step)
@@ -216,10 +145,14 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     cells = np.unique(cover.encode(glon[sel], glat[sel], r0, dggs))
 
     # --- descend: boundary cells refine, interior cells expand ---------
+    if r0 < res and dggs in MULTI_PARENT_GRIDS:
+        raise ValueError(
+            f"polygon cover descent needs nested children; {dggs!r} "
+            "children are shared between parents")
     interior_pool: list[tuple[np.ndarray, int]] = []
     for r in range(r0, res):
-        pitch_r = _pitch_deg(r, dggs)
-        center_in, mind = _centers_edge_dist(cells, vx, vy, dggs)
+        pitch_r = lib.pitch_deg(r)
+        center_in, mind = _centers_edge_dist(cells, vx, vy, lib)
         # descendants of a cell wander up to ~1.2 pitch from its center
         # (circumradius + aperture-7/4 center drift), times the lon
         # distortion — only promote cells whose whole descendant union
@@ -228,7 +161,7 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
         if deep.any():
             interior_pool.append((cells[deep], r))
         band = ~deep & (center_in | (mind <= halo * distort * pitch_r))
-        cells = _cells_children(cells[band], r, dggs)
+        cells = lib.cell_to_children(cells[band], r + 1)
         if cells.size == 0:
             break
 
@@ -237,9 +170,9 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     # distances are raw degrees but a cell's lon extent is ~pitch/cos(lat),
     # so without it a high-latitude edge-straddling cell could be marked
     # interior and skip the exact raycast
-    pitch_deg = _pitch_deg(res, dggs)
+    pitch_deg = lib.pitch_deg(res)
     if cells.size:
-        center_in, mind = _centers_edge_dist(cells, vx, vy, dggs)
+        center_in, mind = _centers_edge_dist(cells, vx, vy, lib)
         interior = center_in & (mind > 1.3 * distort * pitch_deg)
         boundary = ~interior & (center_in | (mind <= 1.3 * distort * pitch_deg))
         sel2 = interior | boundary
@@ -250,10 +183,8 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
         out_cells, out_int, out_cin = [], [], []
 
     # expand the interior pool to res-level descendants (id arithmetic)
-    for pool_cells, r in interior_pool:
-        c = pool_cells
-        for rr in range(r, res):
-            c = _cells_children(c, rr, dggs)
+    for pool_cells, _ in interior_pool:
+        c = lib.cell_to_children(pool_cells, res)
         out_cells.append(c)
         out_int.append(np.ones(c.shape[0], dtype=bool))
         out_cin.append(np.ones(c.shape[0], dtype=bool))
@@ -288,8 +219,6 @@ def index_points(points: DataFrame, res: int, dggs: str = "hex7",
 
     @F.pandas_udf(T.LongType())
     def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from raster2dggs_spark.dggs import cover
-
         return pd.Series(cover.encode(lon.values, lat.values, res, dggs))
 
     return points.withColumn("cell", enc(F.col(lon_col), F.col(lat_col)))
@@ -355,10 +284,8 @@ def polygon_fill_cells(polys: DataFrame, res: int, dggs: str = "hex7",
     Scale shape: one narrow ``mapInPandas`` — a polygon is scanned,
     paired and expanded entirely inside its task, vectorized across the
     batch's edges; no shuffle, no cross-task state."""
-    from raster2dggs_spark.dggs import check_grid
-
-    check_grid(dggs)
-    if dggs not in ("quadkey", "geohash"):
+    lib = grid_lib(dggs)
+    if dggs not in EXACT_LATTICE_GRIDS:
         return (polygon_cells(polys, res, dggs)
                 .where(F.col("center_in"))
                 .select(F.col("poly_id").alias(id_col), "cell"))
@@ -368,31 +295,8 @@ def polygon_fill_cells(polys: DataFrame, res: int, dggs: str = "hex7",
         T.StructField("cell", T.LongType(), False),
     ])
 
-    def _axes():
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            n = 1 << res
-
-            def fy(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0
-
-            return (lambda lon: (lon + 180.0) / 360.0 * n,
-                    lambda lat: fy(lat) * n, n, n,
-                    lambda ix, iy: quadkeylib.tile_to_cell(ix, iy, res))
-        from raster2dggs_spark.dggs import geohashlib
-
-        nbits = 5 * res
-        nx, ny = 1 << ((nbits + 1) // 2), 1 << (nbits // 2)
-        return (lambda lon: (lon + 180.0) / 360.0 * nx,
-                lambda lat: (lat + 90.0) / 180.0 * ny, nx, ny,
-                lambda ix, iy: geohashlib.cell_from_indices(ix, iy, res))
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ufun, vfun, nx, ny, make = _axes()
+        ufun, vfun, nx, ny, make, _ = lib.lattice(res)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -479,9 +383,7 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
     encoded and deduped entirely in its task (vectorized over all of a
     batch's segments at once); no shuffle, no cross-task state.
     """
-    from raster2dggs_spark.dggs import check_grid
-
-    check_grid(dggs)
+    lib = grid_lib(dggs)
     schema = T.StructType([
         T.StructField("line_id", T.LongType(), False),
         T.StructField("cell", T.LongType(), False),
@@ -490,46 +392,9 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
     # floor(u) is bit-identical to the lib encode's quantizer;
     # maidenhead's mixed-radix digit-peel rounds per level and
     # would disagree on boundary-grazing spans -> sampling branch
-    rect = dggs in ("quadkey", "geohash")
-
-    def _axes(cover):
-        """(u(lon), v(lat), nx, ny, from_indices) for rectangle grids."""
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            n = 1 << res
-
-            def fy(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0
-
-            return (lambda lon: (lon + 180.0) / 360.0 * n,
-                    lambda lat: fy(lat) * n, n, n,
-                    lambda ix, iy: quadkeylib.tile_to_cell(ix, iy, res))
-        if dggs == "geohash":
-            from raster2dggs_spark.dggs import geohashlib
-
-            nbits = 5 * res
-            nx, ny = 1 << ((nbits + 1) // 2), 1 << (nbits // 2)
-            return (lambda lon: (lon + 180.0) / 360.0 * nx,
-                    lambda lat: (lat + 90.0) / 180.0 * ny, nx, ny,
-                    lambda ix, iy: geohashlib.cell_from_indices(
-                        ix, iy, res))
-        from raster2dggs_spark.dggs import maidenheadlib
-
-        n = 1
-        for b in maidenheadlib.BASES[:res]:
-            n *= b
-        return (lambda lon: (lon + 180.0) / 360.0 * n,
-                lambda lat: (lat + 90.0) / 180.0 * n, n, n,
-                lambda ix, iy: maidenheadlib.cell_from_indices(
-                    ix, iy, res))
+    rect = dggs in EXACT_LATTICE_GRIDS
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import cover
-
         def _ragged(counts):
             total = int(counts.sum())
             starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
@@ -566,7 +431,7 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
             x0 = np.concatenate(x0); y0 = np.concatenate(y0)
             x1 = np.concatenate(x1); y1 = np.concatenate(y1)
             if rect:
-                ufun, vfun, nx, ny, make = _axes(cover)
+                ufun, vfun, nx, ny, make, _ = lib.lattice(res)
                 u0, u1 = ufun(x0), ufun(x1)
                 v0, v1 = vfun(y0), vfun(y1)
                 du, dv = u1 - u0, v1 - v0
@@ -618,7 +483,7 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
             else:
                 dlon = x1 - x0
                 dlat = y1 - y0
-                p = cover.pitch_deg(res, dggs)
+                p = lib.pitch_deg(res)
                 cmax = np.cos(np.radians(
                     np.minimum(np.abs(y0), np.abs(y1))))
                 lx = np.abs(dlon) * cmax / p
@@ -659,9 +524,7 @@ def _estimate_cover_rows(polys: DataFrame, res: int, dggs: str) -> int:
     per cell only widens toward the poles, so bbox/pitch² over-counts;
     ×2 safety for lattice anisotropy.  Over-estimating is the safe
     direction: it only withholds the hint and leaves the join to AQE."""
-    from raster2dggs_spark.dggs import cover as _cover
-
-    p = _cover.pitch_deg(res, dggs)
+    p = grid_lib(dggs).pitch_deg(res)
     row = polys.select(
         F.sum(
             ((F.array_max("xs") - F.array_min("xs")) / p + 3.0)
@@ -745,93 +608,12 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
 
 def parent_expr(cell_col, parent_res: int, dggs: str = "hex7",
                 from_res: int | None = None):
-    """Native-Column cell→parent (pure bit arithmetic — zero Python).
-
-    H3: set res nibble, fill finer digits with 7 (h3lib.cell_to_parent
-    semantics).  S2: (id & -lsb) | lsb.  Geohash: prefix truncation —
-    requires ``from_res`` (the cells' uniform precision) since the packed
-    id carries its own length."""
+    """Spark Column cell→parent: the grid module's ``parent_col``
+    (native bit arithmetic everywhere but i3h); grids whose packed id
+    does not fix the digit positions need the cells' uniform
+    ``from_res``."""
     c = F.col(cell_col) if isinstance(cell_col, str) else cell_col
-    if dggs == "hex7":
-        res_mask = ~(0xF << 52)  # python int; fits int64
-        fill = (1 << (3 * (15 - parent_res))) - 1
-        return (c.bitwiseAND(F.lit(res_mask))).bitwiseOR(
-            F.lit(parent_res << 52)
-        ).bitwiseOR(F.lit(fill))
-    if dggs == "s2":
-        lsb = 1 << (2 * (30 - parent_res))
-        return (c.bitwiseAND(F.lit(-lsb))).bitwiseOR(F.lit(lsb))
-    if dggs == "geohash":
-        if from_res is None:
-            raise ValueError("geohash parent_expr needs from_res")
-        drop = 5 * (from_res - parent_res)
-        bits = F.shiftrightunsigned(c, 4 + drop)
-        return F.shiftleft(bits, 4).bitwiseOR(F.lit(parent_res))
-    if dggs == "rhp":
-        if from_res is None:
-            raise ValueError("rhp parent_expr needs from_res")
-        prod = 9 ** (from_res - parent_res)
-        # 6*9^15 < 2^53 -> double floor-div exact
-        bits = F.shiftrightunsigned(c, 4)
-        return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
-            F.lit(parent_res)
-        )
-    if dggs == "a5":
-        # zero the digits finer than parent_res (and the quintant when
-        # parent_res is 0), rewrite the 5-bit res field @55 — mirrors
-        # a5lib.cell_to_parent exactly
-        s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
-        mask = (-(1 << s)) & ~(0x1F << 55)
-        return (c.bitwiseAND(F.lit(mask))).bitwiseOR(F.lit(parent_res << 55))
-    if dggs in ("i4r", "e4r"):
-        # per-axis right shift of the 26-bit row/col fields — mirrors
-        # i4rlib.cell_to_parent exactly (e4r shares the id layout;
-        # needs the cells' uniform res)
-        if from_res is None:
-            raise ValueError("i4r parent_expr needs from_res")
-        sh = from_res - parent_res
-        row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
-        col = c.bitwiseAND(F.lit(0x3FFFFFF))
-        head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
-            F.lit(parent_res << 52))
-        return head.bitwiseOR(
-            F.shiftleft(F.shiftrightunsigned(row, sh), 26)
-        ).bitwiseOR(F.shiftrightunsigned(col, sh))
-    if dggs in ("i9r", "e9r"):
-        # per-axis floor-div of the 26-bit row/col fields by 3^k —
-        # mirrors i9rlib.cell_to_parent; values < 2^26 so the double
-        # floor-div is exact (rhp precedent)
-        if from_res is None:
-            raise ValueError("i9r parent_expr needs from_res")
-        div = 3 ** (from_res - parent_res)
-        row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
-        col = c.bitwiseAND(F.lit(0x3FFFFFF))
-        head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
-            F.lit(parent_res << 52))
-        return head.bitwiseOR(
-            F.shiftleft(F.floor(row / F.lit(div)).cast("long"), 26)
-        ).bitwiseOR(F.floor(col / F.lit(div)).cast("long"))
-    if dggs == "quadkey":
-        # drop trailing base-4 digits — mirrors quadkeylib.cell_to_parent
-        if from_res is None:
-            raise ValueError("quadkey parent_expr needs from_res")
-        drop = 2 * (from_res - parent_res)
-        bits = F.shiftrightunsigned(c, 5 + drop)
-        return F.shiftleft(bits, 5).bitwiseOR(F.lit(parent_res))
-    if dggs == "maidenhead":
-        if from_res is None:
-            raise ValueError("maidenhead parent_expr needs from_res")
-        from raster2dggs_spark.dggs.maidenheadlib import BASES
-
-        prod = 1
-        for b in BASES[parent_res:from_res]:
-            prod *= b * b
-        # max packed value (18·10·24·10·24)² < 2^53 → double floor-div exact
-        bits = F.shiftrightunsigned(c, 4)
-        return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
-            F.lit(parent_res)
-        )
-    raise ValueError(dggs)
+    return grid_lib(dggs).parent_col(c, parent_res, from_res)
 
 
 def _res_for_radius(radius_m: float, dggs: str, fine_res: int) -> int:
@@ -839,13 +621,12 @@ def _res_for_radius(radius_m: float, dggs: str, fine_res: int) -> int:
     covers at O(100-1000) candidate cells regardless of radius (any
     grid).  One level finer multiplies the ring-sample count ~7x (hex)
     per query per round — measured 8x wall on the kNN bench."""
-    from raster2dggs_spark.dggs import cover
-
+    pitch_deg = grid_lib(dggs).pitch_deg
     target = np.degrees(radius_m / EARTH_R) / 8.0
     r = 0
-    while r < fine_res and cover.pitch_deg(r, dggs) > target:
+    while r < fine_res and pitch_deg(r) > target:
         r += 1
-    if r > 0 and cover.pitch_deg(r, dggs) < target:
+    if r > 0 and pitch_deg(r) < target:
         r -= 1
     return r
 
@@ -889,15 +670,14 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
     # the disk-sample pattern (azimuth, angular distance) is shared by
     # every query in a batch -> precompute once per batch, vectorize
     # across the whole batch (one encode for all queries)
-    from raster2dggs_spark.dggs import cover as _cover
-
+    lib = grid_lib(dggs)
     ang = radius / EARTH_R
-    pitch0 = np.radians(_cover.pitch_deg(cres, dggs)) * 0.35
+    pitch0 = np.radians(lib.pitch_deg(cres)) * 0.35
     # grids whose cells are lon/lat-aligned rectangles get EXACT integer
     # enumeration (quadkey rows through the Mercator fy axis — its cells
     # SHRINK in lat-degrees toward the poles, so equatorial-pitch ring
     # sampling would skip rows there: the lat-distortion bug class)
-    fixed_deg_grid = dggs in ("geohash", "maidenhead", "quadkey")
+    fixed_deg_grid = dggs in RECT_GRIDS
 
     def disk_pattern(pitch):
         steps = int(np.ceil(ang / pitch)) + 1
@@ -920,44 +700,17 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
         return idx, np.repeat(lo, counts) + seq
 
     def fn_fixed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # geohash/maidenhead cells are lon/lat rectangles with FIXED
-        # degree spans, so the disk cover is enumerated EXACTLY as
+        # rectangle-grid cells have FIXED degree spans per row band, so
+        # the disk cover is enumerated EXACTLY as
         # integer index ranges per lat band (conservative lon width
         # per band) — an angular sampling pattern would need its
         # pitch shrunk by cos(lat) and blow up near the poles
-        from raster2dggs_spark.dggs import cover
-
         ang_deg = np.degrees(ang)
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            nq = 1 << cres
-            nlon = nlat = nq
-            lonspan = 360.0 / nq
-
-            def row_of_lat(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0 * nq
-
-            def lat_of_row(v):
-                # edge rows absorb the |lat| > MAX_LAT clip -> extend
-                # their band to the pole for the width computation
-                out = np.degrees(np.arctan(np.sinh(
-                    np.pi * (1.0 - 2.0 * np.asarray(v, np.float64) / nq))))
-                out = np.where(np.asarray(v) <= 0, 90.0, out)
-                return np.where(np.asarray(v) >= nq, -90.0, out)
-        else:
-            lonspan, latspan = cover.cell_spans(cres, dggs)
-            nlon = int(round(360.0 / lonspan))
-            nlat = int(round(180.0 / latspan))
-
-            def row_of_lat(lat):
-                return (lat + 90.0) / latspan
-
-            def lat_of_row(v):
-                return np.asarray(v, np.float64) * latspan - 90.0
+        # rows through the lattice's own N-S axis; the inverse extends
+        # quadkey's edge rows (they absorb the |lat| > MAX_LAT clip) to
+        # the pole for the width computation
+        _, row_of_lat, nlon, nlat, _, lat_of_row = lib.lattice(cres)
+        lonspan = 360.0 / nlon
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1037,7 +790,7 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
             })
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import cover, h3lib
+        from raster2dggs_spark.dggs import h3lib
 
         pat_az, pat_rad = disk_pattern(pitch0)
         for pdf in batches:
@@ -1192,9 +945,7 @@ def within_distance_join(queries: DataFrame, targets: DataFrame,
     # pad the sampled disk by one cover-cell pitch: a target just inside
     # the radius can sit in a cell whose disk overlap is a thin sliver —
     # the superset is free (exact filter below), the miss would not be
-    from raster2dggs_spark.dggs import cover as _cover
-
-    pad_m = np.radians(_cover.pitch_deg(cres, dggs)) * EARTH_R
+    pad_m = np.radians(grid_lib(dggs).pitch_deg(cres)) * EARTH_R
     cand = disk_cover_cells(q, radius_m + pad_m, cres, dggs, q_id,
                             lon_col, lat_col).join(tt, "jcell")
     dist = 2.0 * EARTH_R * F.asin(F.sqrt(
@@ -1226,8 +977,6 @@ def idw_to_cells(points: DataFrame, cells_df: DataFrame, radius_m: float,
     ONE equi-join + exact haversine filter, then ONE groupBy(cell) with
     map-side partial sums.  No windows, no cross joins; cost scales
     with actual (cell, point) proximity pairs, not |cells| x |points|."""
-    from raster2dggs_spark.dggs import cover as _cover
-
     schema = T.StructType(
         [cells_df.schema[cell_col],
          T.StructField(lon_col, T.DoubleType(), False),
@@ -1237,7 +986,7 @@ def idw_to_cells(points: DataFrame, cells_df: DataFrame, radius_m: float,
         for pdf in batches:
             if not len(pdf):
                 continue
-            lon, lat = _cover.cell_center(pdf[cell_col].values, dggs)
+            lon, lat = cover.cell_center(pdf[cell_col].values, dggs)
             yield pd.DataFrame({cell_col: pdf[cell_col].values,
                                 lon_col: lon, lat_col: lat})
 
@@ -1287,8 +1036,6 @@ def kde_to_cells(points: DataFrame, cells_df: DataFrame,
     """
     if kernel not in KDE_KERNELS:
         raise ValueError(f"kernel {KDE_KERNELS}, got {kernel!r}")
-    from raster2dggs_spark.dggs import cover as _cover
-
     schema = T.StructType(
         [cells_df.schema[cell_col],
          T.StructField(lon_col, T.DoubleType(), False),
@@ -1298,7 +1045,7 @@ def kde_to_cells(points: DataFrame, cells_df: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            lon, lat = _cover.cell_center(pdf[cell_col].values, dggs)
+            lon, lat = cover.cell_center(pdf[cell_col].values, dggs)
             yield pd.DataFrame({cell_col: pdf[cell_col].values,
                                 lon_col: lon, lat_col: lat})
 
@@ -1518,8 +1265,6 @@ def snap_to_segments(points: DataFrame, lines: DataFrame, radius_m: float,
     plus one cover-cell pitch, so the candidate set provably contains
     every pair whose FINAL metric is within ``radius_m``.
     """
-    from raster2dggs_spark.dggs import cover as _cover
-
     m_deg = float(np.radians(1.0) * EARTH_R)
     # analytic blocking margin (see docstring); one bounded scalar agg
     row = points.agg(F.max(F.abs(F.col(lat_col))).alias("m")).collect()[0]
@@ -1541,7 +1286,7 @@ def snap_to_segments(points: DataFrame, lines: DataFrame, radius_m: float,
     # cres while the point-side disk enumeration shrinks 4x — measured
     # 23% faster on the 50k-point bench with identical output
     cres = _res_for_radius(2.0 * radius_m, dggs, 30)
-    pad_m = np.radians(_cover.pitch_deg(cres, dggs)) * EARTH_R
+    pad_m = np.radians(grid_lib(dggs).pitch_deg(cres)) * EARTH_R
     cover_r = radius_m * float(max(1.0, margin)) + pad_m
 
     segs = explode_segments(lines, line_id, xs_col, ys_col)
@@ -1676,9 +1421,7 @@ def buffer_cells(points: DataFrame, radius_m: float, res: int,
     follows buffered area x point density; no point-point or
     cell-cell joins.
     """
-    from raster2dggs_spark.dggs import cover as _cover
-
-    pad_m = np.radians(_cover.pitch_deg(res, dggs)) * EARTH_R
+    pad_m = np.radians(grid_lib(dggs).pitch_deg(res)) * EARTH_R
     q = points.select(F.col(point_id).alias("q_id"), lon_col, lat_col)
     cand = disk_cover_cells(q, radius_m + pad_m, res, dggs, "q_id",
                             lon_col, lat_col)
@@ -1690,7 +1433,7 @@ def buffer_cells(points: DataFrame, radius_m: float, res: int,
         for pdf in batches:
             if not len(pdf):
                 continue
-            clon, clat = _cover.cell_center(pdf["jcell"].values, dggs)
+            clon, clat = cover.cell_center(pdf["jcell"].values, dggs)
             qlon = pdf["q_lon"].values
             qlat = pdf["q_lat"].values
             d = 2.0 * EARTH_R * np.arcsin(np.sqrt(

@@ -98,9 +98,9 @@ def _coverage_samples(affine, w, h, crs, s, res, dggs):
     encode — the 100-TB lever for fine rasters on coarse grids.  Falls
     back to the dense grid when pixels are cell-sized (everything
     straddles anyway)."""
-    from raster2dggs_spark.dggs import cover
+    from raster2dggs_spark.dggs import cover, grid_lib
 
-    pitch = cover.pitch_deg(res, dggs)
+    pitch = grid_lib(dggs).pitch_deg(res)
     px_deg = max(abs(affine[0]), abs(affine[4]))
     if crs != "EPSG:4326":
         px_deg = px_deg / 111_195.0

@@ -17,9 +17,10 @@ Method — first-order conservative "centroid regrid":
   temperature, NDVI) or the plain sum (extensive: counts, mass) of the
   source cells that land in it;
 - optional ``oversample=k`` refines each source cell into its own
-  children at ``src_res + k`` first (grids with a children surface),
-  splitting the parent's area equally across children — boundary-
-  accurate for source cells comparable in size to destination cells.
+  children at ``src_res + k`` first (every grid whose children
+  partition their parent), splitting the parent's area equally across
+  children — boundary-accurate for source cells comparable in size to
+  destination cells.
 
 Exactness: when the source pitch is well below the destination pitch
 (the downsample direction this is for), centroid assignment equals the
@@ -75,24 +76,23 @@ def regrid_cells(
     NULL/NaN source values contribute neither weight nor value to that
     column (per-column weights, like every NaN-aware mean here).
     """
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.dggs.cover import cell_center, encode, grid_lib
+    from raster2dggs_spark.dggs import MULTI_PARENT_GRIDS, check_grid, grid_lib
+    from raster2dggs_spark.dggs.cover import encode
 
-    check_grid(src_dggs)
+    src_lib = grid_lib(src_dggs)
     check_grid(dst_dggs)
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
     if oversample < 0:
         raise ValueError("oversample must be >= 0")
-    src_lib = grid_lib(src_dggs)
-    if oversample and src_dggs != "hex7":
-        # hex7 exposes the uniform multi-level partition children API
-        # this needs; i3h children are SHARED between parents (not a
-        # partition — wrong weights), and the others expand one level
-        # with per-grid shapes.  Centroid mode is grid-generic.
+    if oversample and src_dggs in MULTI_PARENT_GRIDS:
+        # children SHARED between parents are not a partition — equal
+        # area splits would be wrong weights.  Centroid mode is
+        # grid-generic.
         raise ValueError(
-            "oversample is supported for src_dggs='hex7' only; use "
-            "oversample=0 (centroid regrid) for other grids")
+            f"oversample needs children that partition their parent; "
+            f"{src_dggs!r} shares them — use oversample=0 (centroid "
+            "regrid)")
 
     part_fields = [T.StructField("cell", T.LongType(), False),
                    T.StructField("n_src", T.LongType(), False),
@@ -115,13 +115,15 @@ def regrid_cells(
                     raise ValueError(
                         "oversample requires a single source resolution")
                 child_res = int(res[0]) + oversample
-                kid_ids = src_lib.cell_to_children(src, child_res).ravel()
-                n_kids = kid_ids.shape[0] // src.shape[0]  # uniform 7^k
+                kid_ids = src_lib.cell_to_children(src, child_res)
+                n_kids = kid_ids.shape[0] // src.shape[0]  # uniform per res
                 rep = np.repeat(np.arange(src.shape[0]), n_kids)
                 w = w[rep] / float(n_kids)
-                vals = {c: v[rep] for c, v in vals.items()}
+                # intensive values replicate; extensive ones split
+                vals = {c: v[rep] if mode == "mean" else v[rep] / n_kids
+                        for c, v in vals.items()}
                 src = kid_ids
-            lon, lat = cell_center(src, src_dggs)
+            lon, lat = src_lib.cell_to_lonlat(src)
             dst = encode(lon, lat, dst_res, dst_dggs)
             data = {"cell": dst, "w_all": w}
             for c in value_cols:

@@ -270,10 +270,10 @@ def _routing_res(extent_deg: float) -> int:
     """Finest geohash res whose cell pitch still covers one tile — keeps
     the per-tile cover at ~<=9 cells while cells stay as small as the
     data allows (fewer candidate tiles per point)."""
-    from raster2dggs_spark.dggs import cover
+    from raster2dggs_spark.dggs import geohashlib
 
     r = 1
-    while r < 12 and cover.pitch_deg(r + 1, "geohash") >= extent_deg:
+    while r < 12 and geohashlib.pitch_deg(r + 1) >= extent_deg:
         r += 1
     return r
 
@@ -452,7 +452,7 @@ def _sample_points_join(
     ])
 
     def tile_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import cover
+        from raster2dggs_spark.dggs import cover, geohashlib
         from raster2dggs_spark.geo import apply_affine, to_lonlat
 
         for pdf in batches:
@@ -467,7 +467,7 @@ def _sample_points_join(
                 lons, lats = to_lonlat(x, y, row.crs)
                 ext = max(lons.max() - lons.min(), lats.max() - lats.min())
                 rres = _routing_res(ext)
-                pitch = cover.pitch_deg(rres, "geohash")
+                pitch = geohashlib.pitch_deg(rres)
                 c = cover.cover_bbox(
                     lons.min() - pitch, max(-90.0, lats.min() - pitch),
                     lons.max() + pitch, min(90.0, lats.max() + pitch),

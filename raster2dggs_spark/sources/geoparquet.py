@@ -44,41 +44,16 @@ def add_cell_geometry(df: DataFrame, dggs: str = "hex7",
     """Append a WKB ``geometry`` BinaryType column derived from ``cell``."""
     kind = geometry
 
+    from raster2dggs_spark.dggs import grid_lib
+
+    lib = grid_lib(dggs)
+
     @F.pandas_udf(T.BinaryType())
     def geom(cell: pd.Series) -> pd.Series:
-        from raster2dggs_spark.dggs import (
-            a5lib, cover, e4rlib, e9rlib, h3lib, i3hlib, i4rlib,
-            i9rlib, quadkeylib, rhplib, s2lib,
-        )
-
-        cells = cell.values
         if kind == "polygon":
-            blib = {"hex7": h3lib, "s2": s2lib, "rhp": rhplib,
-                    "i3h": i3hlib, "a5": a5lib, "i4r": i4rlib,
-                    "i9r": i9rlib, "e4r": e4rlib,
-                    "e9r": e9rlib, "quadkey": quadkeylib}.get(dggs)
-            if blib is not None:
-                vlon, vlat = blib.cell_to_boundary(cells)
-                return pd.Series(wkb_polygons(vlon, vlat))
-            # geohash/maidenhead cells ARE lon/lat rectangles: exact
-            # corner rings from center ± span/2, spans per each cell's
-            # own packed precision (compacted frames mix precisions)
-            import numpy as np
-
-            c = np.asarray(cells, dtype=np.int64)
-            res_of = c & 0xF
-            lon, lat = cover.cell_center(c, dggs)
-            vlon = np.empty((c.shape[0], 4), dtype=np.float64)
-            vlat = np.empty((c.shape[0], 4), dtype=np.float64)
-            for r in np.unique(res_of):
-                m = res_of == r
-                w, h = cover.cell_spans(int(r), dggs)
-                vlon[m] = lon[m, None] + np.array(
-                    [-w / 2, w / 2, w / 2, -w / 2])[None, :]
-                vlat[m] = lat[m, None] + np.array(
-                    [-h / 2, -h / 2, h / 2, h / 2])[None, :]
+            vlon, vlat = lib.cell_to_boundary(cell.values)
             return pd.Series(wkb_polygons(vlon, vlat))
-        lon, lat = cover.cell_center(cells, dggs)
+        lon, lat = lib.cell_to_lonlat(cell.values)
         return pd.Series(wkb_points(lon, lat))
 
     return df.withColumn("geometry", geom(F.col("cell")))

@@ -83,14 +83,12 @@ def test_compact_s2_roundtrip(spark):
     from raster2dggs_spark.operators.compaction import (
         compact_cells, uncompact_cells,
     )
-    from raster2dggs_spark.operators.joins import _cells_children
 
     base = s2lib.lonlat_to_cell(np.array([10.0, 40.0]),
                                 np.array([45.0, -20.0]), 10)
     rows = []
     for which, c10 in enumerate(base):
-        kids = _cells_children(np.array([c10], dtype=np.int64), 10, "s2")
-        grand = _cells_children(kids, 11, "s2")
+        grand = s2lib.cell_to_children(np.array([c10], dtype=np.int64), 12)
         for i, g in enumerate(grand.tolist()):
             rows.append((g, 7.0 if which == 0 else float(i)))
     pdf = pd.DataFrame(rows, columns=["cell", "v"])
@@ -137,18 +135,17 @@ def test_compact_geohash_rhp_roundtrip(spark, dggs, res, fan):
     tree) and rHEALPix (9-ary) compact via the same native-arithmetic
     parent loop; a complete uniform subtree rolls up two levels, a
     mixed one stays, uncompact round-trips exactly."""
-    from raster2dggs_spark.dggs import cover
+    from raster2dggs_spark.dggs import cover, grid_lib
     from raster2dggs_spark.operators.compaction import (
         compact_cells, uncompact_cells,
     )
-    from raster2dggs_spark.operators.joins import _cells_children
 
     base = cover.encode(np.array([10.0, 40.0]), np.array([45.0, -20.0]),
                         res - 2, dggs)
     rows = []
     for which, c in enumerate(np.unique(base)):
-        kids = _cells_children(np.array([c], dtype=np.int64), res - 2, dggs)
-        grand = _cells_children(kids, res - 1, dggs)
+        grand = grid_lib(dggs).cell_to_children(
+            np.array([c], dtype=np.int64), res)
         for i, g in enumerate(grand.tolist()):
             rows.append((g, 7.0 if which == 0 else float(i)))
     pdf = pd.DataFrame(rows, columns=["cell", "v"])
@@ -161,5 +158,33 @@ def test_compact_geohash_rhp_roundtrip(spark, dggs, res, fan):
     assert len(out) == fan * fan + 1
     back = uncompact_cells(spark.createDataFrame(out), res=res,
                            dggs=dggs).toPandas()
+    assert (set(map(tuple, back[["cell", "v"]].itertuples(index=False)))
+            == set(map(tuple, pdf.itertuples(index=False))))
+
+
+def test_compact_maidenhead_roundtrip(spark):
+    """Maidenhead's mixed-radix levels compact like any nested grid (the
+    expected count per level is the ``n_cells`` ratio, 10^2 squares per
+    field here); a mixed family stays; uncompact round-trips exactly."""
+    from raster2dggs_spark.dggs import maidenheadlib
+    from raster2dggs_spark.operators.compaction import (
+        compact_cells, uncompact_cells,
+    )
+
+    base = np.unique(maidenheadlib.lonlat_to_cell(
+        np.array([10.0, 120.0]), np.array([45.0, -20.0]), 1))
+    rows = []
+    for which, c in enumerate(base):
+        kids = maidenheadlib.cell_to_children(np.array([c]), 2)
+        for i, k in enumerate(kids.tolist()):
+            rows.append((k, 7.0 if which == 0 else float(i)))
+    pdf = pd.DataFrame(rows, columns=["cell", "v"])
+    out = compact_cells(spark.createDataFrame(pdf), ["v"], res=2,
+                        min_res=1, dggs="maidenhead").toPandas()
+    counts = pd.Series(out["cell"].values & 0xF).value_counts()
+    assert counts.get(1, 0) == 1
+    assert counts.get(2, 0) == 100
+    back = uncompact_cells(spark.createDataFrame(out), res=2,
+                           dggs="maidenhead").toPandas()
     assert (set(map(tuple, back[["cell", "v"]].itertuples(index=False)))
             == set(map(tuple, pdf.itertuples(index=False))))

@@ -55,7 +55,8 @@ def test_children_parent_inverse():
     lon, lat = _rand_points(500)
     for res in (0, 1, 5):
         p = a5lib.lonlat_to_cell(lon, lat, res)
-        kids = a5lib.cell_to_children(np.unique(p))
+        kids = a5lib.cell_to_children(np.unique(p), res + 1).reshape(
+            np.unique(p).size, -1)
         k = kids.shape[1]
         assert k == (5 if res == 0 else 4)
         back = a5lib.cell_to_parent(kids.ravel(), res)
@@ -184,12 +185,10 @@ def test_compact_roundtrip_identity(spark):
     # faces 2 and 9: face 9 exercises the bit-63 (negative-id) range
     faces = np.array([2, 9], dtype=np.int64)
     res0 = (faces << np.int64(60))
-    q2 = a5lib.cell_to_children(res0)               # res 1: (2, 5)
-    full2 = a5lib.cell_to_children(q2.ravel())      # res 2: (10, 4)
-    cells = full2.ravel()
+    cells = a5lib.cell_to_children(res0, 2)         # res 2: 2 x 5 x 4
     # a third pentagon contributes a PARTIAL family (one missing child)
-    part = a5lib.cell_to_children(a5lib.cell_to_children(
-        np.array([7], dtype=np.int64) << np.int64(60)).ravel()).ravel()[:-1]
+    part = a5lib.cell_to_children(
+        np.array([7], dtype=np.int64) << np.int64(60), 2)[:-1]
     pdf = pd.DataFrame({
         "cell": np.concatenate([cells, part]),
         "v": np.ones(cells.size + part.size),

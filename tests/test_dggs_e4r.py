@@ -57,7 +57,7 @@ def test_children_parent_inverse():
     lon, lat = _rand_points(400)
     for res in (0, 3):
         p = np.unique(e4rlib.lonlat_to_cell(lon, lat, res))
-        kids = e4rlib.cell_to_children(p)
+        kids = e4rlib.cell_to_children(p, res + 1).reshape(p.size, -1)
         assert kids.shape[1] == 4
         assert np.array_equal(
             e4rlib.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
@@ -153,11 +153,9 @@ def test_compact_roundtrip_identity(spark):
     )
 
     d0 = np.array([3, 8], dtype=np.int64) << np.int64(57)
-    full = e4rlib.cell_to_children(
-        e4rlib.cell_to_children(d0).ravel()).ravel()
-    part = e4rlib.cell_to_children(e4rlib.cell_to_children(
-        np.array([5], dtype=np.int64) << np.int64(57)).ravel()
-    ).ravel()[:-1]
+    full = e4rlib.cell_to_children(d0, 2)
+    part = e4rlib.cell_to_children(
+        np.array([5], dtype=np.int64) << np.int64(57), 2)[:-1]
     pdf = pd.DataFrame({
         "cell": np.concatenate([full, part]),
         "v": np.ones(full.size + part.size),

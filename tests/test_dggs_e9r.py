@@ -26,7 +26,7 @@ def test_counts_roundtrip_nesting():
         assert np.array_equal(
             e9rlib.cell_to_parent(c, pr),
             e9rlib.lonlat_to_cell(lon[:5000], lat[:5000], pr))
-    kids = e9rlib.cell_to_children(np.unique(c)[:50])
+    kids = e9rlib.cell_to_children(np.unique(c)[:50], 9).reshape(50, -1)
     assert kids.shape[1] == 9
     assert np.array_equal(
         e9rlib.cell_to_parent(kids.ravel(), 8).reshape(-1, 9),
@@ -86,8 +86,7 @@ def test_parent_expr_and_compaction(spark):
         assert np.array_equal(got, e9rlib.cell_to_parent(c, pr)), pr
 
     d0 = np.array([4], dtype=np.int64) << np.int64(57)
-    full = e9rlib.cell_to_children(e9rlib.cell_to_children(d0).ravel()
-                                   ).ravel()
+    full = e9rlib.cell_to_children(d0, 2)
     df2 = spark.createDataFrame(
         pd.DataFrame({"cell": full, "v": np.ones(full.size)}),
         "cell long, v double")

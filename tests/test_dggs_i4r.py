@@ -46,7 +46,7 @@ def test_children_parent_inverse():
     lon, lat = _rand_points(400)
     for res in (0, 3):
         p = np.unique(i4rlib.lonlat_to_cell(lon, lat, res))
-        kids = i4rlib.cell_to_children(p)
+        kids = i4rlib.cell_to_children(p, res + 1).reshape(p.size, -1)
         assert kids.shape[1] == 4
         assert np.array_equal(
             i4rlib.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
@@ -124,11 +124,9 @@ def test_compact_roundtrip_identity(spark):
     )
 
     d0 = np.array([3, 8], dtype=np.int64) << np.int64(57)
-    full = i4rlib.cell_to_children(
-        i4rlib.cell_to_children(d0).ravel()).ravel()          # res 2
-    part = i4rlib.cell_to_children(i4rlib.cell_to_children(
-        np.array([5], dtype=np.int64) << np.int64(57)).ravel()
-    ).ravel()[:-1]                                            # 15 of 16
+    full = i4rlib.cell_to_children(d0, 2)          # res 2
+    part = i4rlib.cell_to_children(
+        np.array([5], dtype=np.int64) << np.int64(57), 2)[:-1]                                            # 15 of 16
     pdf = pd.DataFrame({
         "cell": np.concatenate([full, part]),
         "v": np.ones(full.size + part.size),

@@ -55,7 +55,7 @@ def test_parent_hierarchy():
                 == R.lonlat_to_cell(lon, lat, pr)).all()
     # children invert parent
     c3 = np.unique(R.lonlat_to_cell(lon, lat, 3))
-    kids = R.cell_to_children(c3, 3)
+    kids = R.cell_to_children(c3, 4)
     assert (R.cell_to_parent(kids, 3) == np.repeat(c3, 9)).all()
     assert R.children_size(3, 6) == 9**3
 

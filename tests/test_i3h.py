@@ -18,7 +18,7 @@ def test_lattice_roundtrip_and_hierarchy():
     assert (L.lonlat_to_cell(clon, clat, 8) == c).mean() > 0.99
 
     cells = np.unique(L.lonlat_to_cell(lon, lat, 6))
-    ch = L.cell_to_children(cells)                  # (n, 7)
+    ch = L.cell_to_children(cells).reshape(-1, 7)  # (n, 7)
     assert ch.shape[1] == 7
     assert (L.get_resolution(ch.ravel()) == 7).all()
     par = L.cell_to_parents(ch.ravel())             # (n*7, 3)
@@ -48,7 +48,7 @@ def test_compact_3h_reference_semantics(spark):
     from raster2dggs_spark.operators.compaction import compact_cells_3h
 
     seed = L.lonlat_to_cell(np.array([12.0]), np.array([41.0]), 4)
-    l5 = L.cell_to_children(seed)                  # (1, 7)
+    l5 = L.cell_to_children(seed).reshape(1, 7)
     l6 = np.unique(L.cell_to_children(l5.ravel()))  # all res-6 descendants
     pdf = pd.DataFrame({"cell": l6, "v": 5.0})
     out = compact_cells_3h(
@@ -60,7 +60,7 @@ def test_compact_3h_reference_semantics(spark):
     # center children (single parent) removed at both levels
     assert l5[0, 0] not in set(out["cell"])
     for p in l5.ravel():
-        assert L.cell_to_children(np.array([p]))[0, 0] not in set(out["cell"])
+        assert L.cell_to_children(np.array([p]))[0] not in set(out["cell"])
     # level-5 vertex children stay (outside parents didn't compact)
     assert set(l5[0, 1:]) <= set(out["cell"])
     assert (res_of == 6).sum() > 0                 # boundary ring remains

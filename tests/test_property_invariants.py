@@ -6,7 +6,7 @@ No Spark; pure lattice math, so hundreds of cases stay fast."""
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from raster2dggs_spark.dggs import cover
+from raster2dggs_spark.dggs import cover, grid_lib
 
 lons = st.floats(min_value=-179.999, max_value=179.999,
                  allow_nan=False, allow_infinity=False)
@@ -56,4 +56,4 @@ def test_s2_rhp_encode_in_own_cell_bbox(lon, lat, dlon, dlat):
         clon, clat = cover.cell_center(c, dggs)
         dl = (clon[0] - lon + 180.0) % 360.0 - 180.0
         d = np.hypot(dl * np.cos(np.radians(lat)), clat[0] - lat)
-        assert d <= 2.0 * cover.pitch_deg(res, dggs), (dggs, lon, lat, d)
+        assert d <= 2.0 * grid_lib(dggs).pitch_deg(res), (dggs, lon, lat, d)

@@ -76,6 +76,31 @@ def test_sum_mode_conserves_totals(spark):
     assert got == pytest.approx(float(vals.sum()), rel=1e-12)
 
 
+@pytest.mark.parametrize("src,res,fan", [("s2", 9, 4), ("rhp", 5, 9)])
+def test_oversample_sum_mode_conserves_totals_any_nested_grid(
+        spark, src, res, fan):
+    """oversample works on every grid whose children partition their
+    parent: at oversample=2 each source cell splits into fan^2 children
+    and the sum-mode total, the contributed area and the contribution
+    count are all conserved."""
+    from raster2dggs_spark.dggs import grid_lib
+
+    rng = np.random.default_rng(11)
+    cells = np.unique(cover.encode(rng.uniform(-20.0, 20.0, 60),
+                                   rng.uniform(30.0, 50.0, 60), res, src))
+    vals = (cells % 89).astype(np.float64) + 1.0
+    df = spark.createDataFrame(
+        [(int(c), float(v)) for c, v in zip(cells, vals)],
+        "cell long, v double")
+    out = regrid_cells(df, ["v"], src, "hex7", 4, mode="sum", oversample=2)
+    got = out.agg(F.sum("v").alias("v"), F.sum("w_sum").alias("w"),
+                  F.sum("n_src").alias("n")).collect()[0]
+    assert got["v"] == pytest.approx(float(vals.sum()), rel=1e-12)
+    area = grid_lib(src).cell_area_m2(cells)
+    assert got["w"] == pytest.approx(float(area.sum()), rel=1e-9)
+    assert got["n"] == len(cells) * fan ** 2
+
+
 def test_oversample_refines_boundary_assignment(spark):
     """With src pitch comparable to dst pitch, oversampling must move
     SOME area across destination cells (children of a boundary cell
@@ -110,7 +135,7 @@ def test_error_paths(spark):
     with pytest.raises(ValueError, match="mode"):
         regrid_cells(df, ["v"], "hex7", "s2", 5, mode="max")
     with pytest.raises(ValueError, match="oversample"):
-        regrid_cells(df, ["v"], "s2", "hex7", 5, oversample=1)
+        regrid_cells(df, ["v"], "i3h", "hex7", 5, oversample=1)
     with pytest.raises(ValueError):
         regrid_cells(df, ["v"], "h3", "s2", 5)
 
