@@ -31,8 +31,8 @@ recursive CTE).
 At 100 TB: the range join shuffles O(candidate pairs within eps), the
 degree count and border assignment are plain aggregations, and the
 only iteration is the pointer-jumping loop on the CORE skeleton —
-each round two bounded shuffles with eager localCheckpoint plan
-truncation.  eps >> cell pitch or pathological density means the pair
+``connected_components``, whose rounds run on the ``plans/loops.py``
+superstep driver.  eps >> cell pitch or pathological density means the pair
 list itself is the cost, exactly as in any distributed DBSCAN.
 """
 

@@ -144,7 +144,7 @@ def compact_cells_3h(df: DataFrame, value_cols: list[str], res: int,
     parents edge explode (vectorized lattice arithmetic, ≤3 edges/row),
     the per-parent completeness+uniformity aggregate, and the per-child
     all-parents-compacted aggregate — with a localCheckpoint per level
-    (the kNN-loop plan hygiene).  Seam parents (some expected children
+    so the lineage never deepens.  Seam parents (some expected children
     on a neighbouring face) never reach 7 present children and are
     conservatively left uncompacted.
 

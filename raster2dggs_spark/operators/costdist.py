@@ -48,10 +48,10 @@ The correct wavefront therefore advances at least one full BLOCK per
 superstep: rounds scale with the block-graph diameter (world extent /
 block size), not the cell count, and each round is two bounded
 shuffles (seed scatter + block regroup) over the ACTIVE frontier only.
-Per-round eager ``localCheckpoint`` keeps the plan flat (the
-connected-components loop hygiene); termination is driver-synced on
-the improved-cell count and raises if ``max_rounds`` is hit
-(returning unconverged distances would silently overestimate).
+The supersteps run on the ``plans/loops.py`` driver: each round is
+checkpointed, the next active-block set is observed on that checkpoint,
+and the driver stops when it is empty and raises if ``max_rounds`` is
+hit (returning unconverged distances would silently overestimate).
 Distances are monotone non-increasing over a finite set of path sums,
 so the fixpoint is the exact Dijkstra answer.
 
@@ -286,7 +286,8 @@ _STATE_EXT_SCHEMA = T.StructType(
     ])
 
 
-def _superstep_fixpoint(state: DataFrame, wlon: int, W: int,
+def _superstep_fixpoint(state: DataFrame, guard: Observation,
+                        guard_msg: str, wlon: int, W: int,
                         nbx: int, nby: int, max_rounds: int,
                         stats: dict | None, op: str,
                         clump: bool = False,
@@ -295,28 +296,35 @@ def _superstep_fixpoint(state: DataFrame, wlon: int, W: int,
     initial ``_STATE_SCHEMA``+bx/by state to the global fixpoint.
     Shared by :func:`cost_distance` (chamfer relaxation) and
     :func:`clump_cells` (zero-weight same-class label propagation).
+
+    ``state`` arrives lazy: the driver's init checkpoint is its one
+    materialization, and the caller's input check (``guard``, a count
+    of bad rows raising ``ValueError(guard_msg)``) and the first
+    active-block set both ride that job as Observations.
     """
+    from raster2dggs_spark.plans.loops import fixpoint
+
     spark = state.sparkSession
-    full = state.withColumn("ext", F.lit(0).cast("long"))
     packed = F.col("bx") * int(nby) + F.col("by")
-    # initial active set: blocks holding sources (improved>0) — ONE
-    # bounded driver collect; every later round's set arrives free as
-    # an Observation on that round's checkpoint job (below)
-    act_keys = sorted(int(r["k"]) for r in full.where(
-        F.col("improved") > 0).select(packed.alias("k"))
-        .distinct().collect())
-    if not act_keys:
-        raise ValueError(f"{op}: no active cells (empty or no sources)")
-    rounds = 0
+    # initial active set: blocks holding sources (improved>0); every
+    # later round's set is the probe the driver observed on the
+    # previous round's checkpoint: the blocks a rim export landed in
+    first = Observation()
+    init = (state.withColumn("ext", F.lit(0).cast("long"))
+            .observe(first, F.collect_set(
+                F.when(F.col("improved") > 0, packed)).alias("act")))
     blocks_run = 0
-    while act_keys:
-        # a rim-export-free round == global fixpoint: improved interior
-        # cells cannot affect any other block, and their own block is
-        # already exactly settled
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"{op} did not converge in {max_rounds} rounds")
-        rounds += 1
+
+    def superstep(full: DataFrame, act) -> DataFrame:
+        nonlocal blocks_run
+        if act is None:
+            if int(guard.get["n"] or 0):
+                raise ValueError(guard_msg)
+            act = first.get["act"]
+            if not act:
+                raise ValueError(
+                    f"{op}: no active cells (empty or no sources)")
+        act_keys = sorted(int(k) for k in act)
         blocks_run += len(act_keys)
         if len(act_keys) <= 65536:
             # the usual case: the active-block id set is small — an
@@ -345,14 +353,15 @@ def _superstep_fixpoint(state: DataFrame, wlon: int, W: int,
             lambda key, pdf: _relax_block(pdf, wlon, W, nbx, nby,
                                           clump=clump, offs=offs),
             _STATE_EXT_SCHEMA)
-        obs = Observation()
-        full = (hold.unionByName(solved)
-                .observe(obs, F.collect_set(
-                    F.when(F.col("ext") == 1, packed)).alias("act"))
-                .localCheckpoint(eager=True))
-        act_keys = sorted(int(k) for k in (obs.get["act"] or []))
+        return hold.unionByName(solved)
+
+    # a rim-export-free round == global fixpoint: improved interior
+    # cells cannot affect any other block, and their own block is
+    # already exactly settled
+    full = fixpoint(superstep, init, max_rounds=max_rounds, name=op,
+                    stats=stats,
+                    probe=F.collect_set(F.when(F.col("ext") == 1, packed)))
     if stats is not None:
-        stats["rounds"] = rounds
         stats["blocks_run"] = blocks_run
     return full.where(F.col("ext") == 0).drop("ext")
 
@@ -420,14 +429,11 @@ def cost_distance(cells_df: DataFrame, cost_col: str = "cost",
                      .otherwise(no_alloc).alias("alloc"),
                      F.lit(float("inf")).alias("seen"),
                      no_alloc.alias("seena"),
-                     F.col("src").cast("long").alias("improved"))
-             .localCheckpoint(eager=True))
-    if int(bad_src.get["n"] or 0):
-        raise ValueError(
-            "cost_distance: source cell is impassable or has a NULL id")
-
-    state = _superstep_fixpoint(state, wlon, W, nbx, nby, max_rounds,
-                                stats, op="cost_distance")
+                     F.col("src").cast("long").alias("improved")))
+    state = _superstep_fixpoint(
+        state, bad_src,
+        "cost_distance: source cell is impassable or has a NULL id",
+        wlon, W, nbx, nby, max_rounds, stats, op="cost_distance")
 
     reached = F.col("dist") != float("inf")
     out_cols = [F.when(reached, F.col("dist")).alias("dist")]
@@ -529,13 +535,10 @@ def clump_cells(cells_df: DataFrame, class_col: str, id_col: str,
                      F.col("sid").alias("alloc"),
                      F.lit(float("inf")).alias("seen"),
                      F.lit(int(_NO_ALLOC)).cast("long").alias("seena"),
-                     F.lit(1).cast("long").alias("improved"))
-             .localCheckpoint(eager=True))
-    if int(bad_id.get["n"] or 0):
-        raise ValueError("clump_cells: NULL id on a classed cell")
-
+                     F.lit(1).cast("long").alias("improved")))
     state = _superstep_fixpoint(
-        state, wlon, W, nbx, nby, max_rounds, stats, op="clump_cells",
+        state, bad_id, "clump_cells: NULL id on a classed cell",
+        wlon, W, nbx, nby, max_rounds, stats, op="clump_cells",
         clump=True, offs=_OFFS if diagonal else _ROOK_OFFS)
 
     lab = state.select("cell", F.col("alloc").alias("clump"))
@@ -638,9 +641,9 @@ def least_cost_path(cells_df: DataFrame, cost_col: str = "cost",
     — jump table J doubles its stride each round while the small
     target frontier unions in newly reached nodes — so rounds scale
     with log2(path length), not path length, and the frontier side of
-    every join is broadcast-sized (|targets| x path cells).  Per-round
-    eager localCheckpoint keeps plans flat (the connected-components
-    loop hygiene).
+    every join is broadcast-sized (|targets| x path cells).  The rounds
+    run on the ``plans/loops.py`` superstep driver, which stops on the
+    count of newly reached path nodes.
     """
     base = cells_df.select(
         F.col(cell_col).alias("cell"), F.col(cost_col).alias("cost"),
@@ -681,22 +684,15 @@ def least_cost_path(cells_df: DataFrame, cost_col: str = "cost",
            .groupBy("pid")
            .agg(F.min("ppid").alias("np"))
            .select(F.col("pid").alias("u"), F.col("np").alias("v")))
-    nxt = nxt.localCheckpoint(eager=True)
 
-    # pointer doubling: frontier P = nodes known on some target's path.
-    # jump/path self-join per round -> their carried size estimate
-    # doubles in DIGITS per round without the persist-then-checkpoint
-    # idiom (plans/loops.py; the round-8 stats-overflow class)
-    from raster2dggs_spark.plans.loops import loop_checkpoint
+    # pointer doubling: frontier P = nodes known on some target's path,
+    # ``fresh`` marking the nodes the round added (the probe).  The
+    # jump/path self-joins are the driver's stats-reset case
+    # (plans/loops.py).
+    from raster2dggs_spark.plans.loops import fixpoint
 
-    targets = g.where(F.col("tgtf")).select(
-        F.col("pid").alias("tgt"), F.col("pid").alias("node"))
-    path, path_cache = loop_checkpoint(targets)
-    n_prev = path.count()
-    jump = nxt
-    jump_cache = None
-    for _lcp_round in range(max_rounds):
-        _reset = _lcp_round % 4 == 3
+    def trace(state, _fresh):
+        path, jump = state
         # frontier side broadcast into the big jump table, result small
         reach = (jump.join(F.broadcast(path.select(F.col("node")
                                                    .alias("u")).distinct()),
@@ -705,26 +701,24 @@ def least_cost_path(cells_df: DataFrame, cost_col: str = "cost",
         stepped = (path.join(F.broadcast(reach),
                              F.col("node") == F.col("u"))
                    .select("tgt", F.col("v").alias("node")))
-        path, path_cache = loop_checkpoint(
-            path.unionByName(stepped).distinct(), prev=path_cache,
-            reset=_reset)
-        n_now = path.count()
-        if n_now == n_prev:
-            break
-        n_prev = n_now
+        grown = (path.select("tgt", "node", F.lit(0).alias("fresh"))
+                 .unionByName(stepped.withColumn("fresh", F.lit(1)))
+                 .groupBy("tgt", "node")
+                 .agg(F.min("fresh").alias("fresh")))
         # double the stride: J2(u) = J(J(u)) (absorbing at chain ends)
-        jump, jump_cache = loop_checkpoint(
-            jump.alias("a")
-            .join(jump.alias("b"),
-                  F.col("a.v") == F.col("b.u"), "left")
-            .select(F.col("a.u").alias("u"),
-                    F.coalesce(F.col("b.v"), F.col("a.v")).alias("v")),
-            prev=jump_cache, reset=_reset)
-    else:
-        raise RuntimeError("least_cost_path: max_rounds exceeded")
-    path_cache.unpersist()
-    if jump_cache is not None:
-        jump_cache.unpersist()
+        doubled = (jump.alias("a")
+                   .join(jump.alias("b"),
+                         F.col("a.v") == F.col("b.u"), "left")
+                   .select(F.col("a.u").alias("u"),
+                           F.coalesce(F.col("b.v"), F.col("a.v"))
+                           .alias("v")))
+        return grown, doubled
+
+    targets = g.where(F.col("tgtf")).select(
+        F.col("pid").alias("tgt"), F.col("pid").alias("node"))
+    path, _jump = fixpoint(trace, (targets, nxt), max_rounds=max_rounds,
+                           name="least_cost_path",
+                           probe=F.sum("fresh"))
 
     w = Window.partitionBy("tgt").orderBy(F.col("dist").desc())
     out = (path.join(d.withColumnRenamed("pid", "node_pid"),

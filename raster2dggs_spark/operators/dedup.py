@@ -221,57 +221,10 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     return g.select(id_col, fp.alias("simhash"))
 
 
-def _local_contract(e: DataFrame, vt) -> DataFrame:
-    """Partition-local union-find over the edge list: (vertex, rep)
-    where ``rep`` is the MIN vertex of the vertex's component *within
-    its partition's edges*.  One Arrow pass, no shuffle.  This is the
-    standard first phase of large-graph CC: each partition's internal
-    structure collapses to super-vertices, so the distributed loop only
-    has to stitch components that CROSS partitions — on a 1000-node
-    chain whose edges land in few partitions, the contracted graph has
-    ~#partitions vertices and the loop needs ~log2(#partitions) rounds
-    instead of log2(diameter)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("vertex", vt, False),
-        T.StructField("rep", vt, False),
-    ])
-
-    def contract(batches: "Iterator[pd.DataFrame]"):
-        import pandas as pd
-
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for pdf in batches:  # the iterator spans ONE partition
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra  # min id stays root
-        if parent:
-            ks = list(parent.keys())
-            yield pd.DataFrame({"vertex": ks, "rep": [find(v) for v in ks]})
-
-    return e.mapInPandas(contract, schema)
-
-
 def connected_components(pairs: DataFrame, a_col: str = "id_a",
                          b_col: str = "id_b",
                          max_iters: int = 25,
                          stats: dict | None = None,
-                         local_contract: bool = False,
                          jump_broadcast_rows: int = 4_000_000) -> DataFrame:
     """Transitive closure of a near-dup pair list: every vertex gets the
     MIN vertex id of its connected component (the fuzzy-dedup cluster
@@ -282,93 +235,46 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     follows its label's label (path shortcut).  The shortcut halves
     label-chain depth each round, so convergence is O(log diameter)
     rounds — a plain neighbour-min walk would need O(diameter) rounds
-    (a 50-node chain = 50 rounds).  Each round is three bounded
-    shuffles, with per-round localCheckpoint so the plan stays flat
-    (the kNN-loop hygiene).  Termination is driver-synced on the
-    changed-label count and RAISES if the fixpoint is not reached
-    (returning unconverged labels would silently under-merge).
+    (a 50-node chain = 50 rounds).  Each round is one exchange plus the
+    pointer-jump lookup.  The rounds run on the ``plans/loops.py``
+    driver: termination is the changed-label count, observed on the
+    round's checkpoint, and the driver RAISES if the fixpoint is not
+    reached in ``max_iters`` rounds (returning unconverged labels would
+    silently under-merge).
 
     Returns (vertex, component).  Works on any undirected pair list —
     minhash_lsh_pairs, ngram_jaccard_pairs, hyperplane_near_dup.
 
     ``stats``: pass a dict to receive {"rounds": n} — the number of
-    propagation rounds actually run (bench evidence for the O(log
-    diameter) claim: a 1000-diameter chain must converge in ~log₂(1000)
-    ≈ 10-12 rounds, not 1000).
-
-    ``local_contract`` (round 5, default OFF): a shuffle-free
-    partition-local union-find pass first collapses each partition's
-    internal components to min-id super-vertices (``_local_contract``);
-    the loop then runs on the contracted cross-partition graph and one
-    mapping join recovers the answer.  Labels are unchanged (min-id
-    roots compose with the loop's min semantics).  Measured tradeoff on
-    the 100k-edge bench graph: rounds 10 → 6 but net wall ~15% SLOWER —
-    the relabel/recover joins and the Arrow contraction pass cost more
-    than 4 rounds save at tiny scale.  Turn it on when the graph is
-    large and partition-local structure exists (LSH pair lists bucketed
-    or sorted by doc id: most merges then happen shuffle-free and the
-    loop's per-round shuffle shrinks by the contraction ratio); leave
-    it off for small or randomly-partitioned graphs."""
+    propagation rounds actually run, the final no-change round included
+    (bench evidence for the O(log diameter) claim: a 1000-diameter chain
+    must converge in ~log₂(1000) ≈ 10-12 rounds, not 1000)."""
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    mapping = None
-    if local_contract:
-        vt = pairs.schema[a_col].dataType
-        # a vertex whose edges span partitions gets one rep PER
-        # partition — canonicalize to the min rep per vertex and
-        # relabel the ORIGINAL edges by it: the quotient graph merges
-        # vertices within a G-component only (reps are members of the
-        # vertex's own component), so connectivity is exactly preserved
-        # while the vertex/edge count shrinks by the contraction ratio
-        mapping = (
-            _local_contract(e, vt)
-            .groupBy("vertex").agg(F.min("rep").alias("rep"))
-            .localCheckpoint(eager=True)
-        )
-        ma = mapping.select(F.col("vertex").alias("src"),
-                            F.col("rep").alias("__ra"))
-        mb = mapping.select(F.col("vertex").alias("dst"),
-                            F.col("rep").alias("__rb"))
-        e = (
-            e.join(ma, "src").join(mb, "dst")
-            .where(F.col("__ra") != F.col("__rb"))
-            .select(F.col("__ra").alias("src"), F.col("__rb").alias("dst"))
-        )
-        if stats is not None:
-            stats["contracted_vertices"] = mapping.select(
-                F.countDistinct("rep")).first()[0]
     # hash-partition the persisted edge list by the join key: the
     # per-round edges-join-labels exchange is then satisfied by the
     # cached layout and Catalyst plans no edge shuffle in ANY round
     # (guide §2.4 — share one exchange across keyed operations).  No
     # edge dedupe: min-propagation is idempotent over duplicate edges,
     # so the distinct() exchange bought nothing per round it saved.
-    from raster2dggs_spark.plans.loops import loop_checkpoint
+    from raster2dggs_spark.plans.loops import fixpoint
 
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition(F.col("src")).persist()
     nv_obs = Observation()
-    # loop_checkpoint (persist-then-checkpoint) rather than a bare
-    # localCheckpoint: the checkpoint PRESERVES the child's size
-    # estimate, and the double pointer-jump self-join below would
-    # compound it ^4 per round until Catalyst's BigInteger stats
-    # arithmetic overflows (the round-8 contour_stitch failure — see
-    # plans/loops.py)
-    lab, prev_cache = loop_checkpoint(
-        edges.select(F.col("src").alias("vertex")).distinct()
-        .withColumn("label", F.col("vertex"))
-        # vertex count rides the init checkpoint — gates the
-        # pointer-jump broadcast below (no separate count job)
-        .observe(nv_obs, F.count(F.lit(1)).alias("n"))
-    )
-    n_vertices = int(nv_obs.get["n"])
-    for _round in range(max_iters):
+    init = (edges.select(F.col("src").alias("vertex")).distinct()
+            .withColumn("label", F.col("vertex"))
+            # vertex count rides the init checkpoint — gates the
+            # pointer-jump broadcast below (no separate count job)
+            .observe(nv_obs, F.count(F.lit(1)).alias("n")))
+
+    def step(lab: DataFrame, _changed) -> DataFrame:
         # neighbour-min, own-label carry and the least() fold in ONE
         # aggregation: every vertex receives its neighbours' labels
         # (via the pre-partitioned edge join) plus its OWN label as a
         # flagged self-message; min over the union IS
         # least(own, nbr_min), and the self row's label doubles as
-        # __old for the termination test.  This replaces the previous
+        # __old for the termination probe.  This replaces the previous
         # join -> groupBy -> left-join chain (3 exchanges per round)
         # with a single exchange (guide §2.4).  Checkpointed BEFORE
         # the pointer-jump self-join so the message subtree is not
@@ -397,22 +303,13 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
         # broadcast exchange — one driver-synced broadcast build per
         # round instead of two (round 8; ~0.15 s/round on the bench
         # graph), quartering label-chain depth per round as before.
-        bcast = n_vertices <= jump_broadcast_rows
-        cur = l1
+        bcast = int(nv_obs.get["n"]) <= jump_broadcast_rows
+        ptr = l1.select(F.col("vertex").alias("label"),
+                        F.col("label").alias("__ptr"))
         if bcast:
-            ptr = F.broadcast(l1.select(F.col("vertex").alias("label"),
-                                        F.col("label").alias("__ptr")))
-            for _ in range(3):
-                cur = (
-                    cur.join(ptr, "label", "left")
-                    .select(
-                        "vertex", "__old",
-                        F.coalesce("__ptr", "label").alias("label"),
-                    )
-                )
-        else:
-            ptr = cur.select(F.col("vertex").alias("label"),
-                             F.col("label").alias("__ptr"))
+            ptr = F.broadcast(ptr)
+        cur = l1
+        for _ in range(3 if bcast else 1):
             cur = (
                 cur.join(ptr, "label", "left")
                 .select(
@@ -420,45 +317,20 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
                     F.coalesce("__ptr", "label").alias("label"),
                 )
             )
-        obs = Observation()
-        new, prev_cache = loop_checkpoint(
-            cur
-            # termination metric rides the checkpoint job (Observation):
-            # the old label travelled with the row, so no (vertex) join
-            # and no separate driver-synced count job per round
-            .observe(obs, F.sum((F.col("label") != F.col("__old"))
-                                .cast("long")).alias("changed")),
-            prev=prev_cache,
-            # stats reset every 4th round bounds the carried estimate
-            # under ~5k digits at a quarter of the persist cost
-            # (plans/loops.py); the init checkpoint above seeded it
-            reset=(_round % 4 == 3))
-        changed = int(obs.get["changed"] or 0)
-        lab = new.select("vertex", "label")
-        if changed == 0:
-            if stats is not None:
-                stats["rounds"] = _round + 1
-            break
-    else:
+        return cur
+
+    try:
+        # the old label travels with the row, so the changed count needs
+        # no (vertex) join; the driver's persist-then-checkpoint rounds
+        # keep the double pointer-jump self-join from compounding the
+        # carried size estimate (plans/loops.py)
+        lab = fixpoint(step, init, max_rounds=max_iters,
+                       name="connected_components", stats=stats,
+                       probe=F.sum((F.col("label") != F.col("__old"))
+                                   .cast("long")))
+    finally:
         edges.unpersist()
-        prev_cache.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds"
-        )
-    edges.unpersist()
-    prev_cache.unpersist()
-    out = lab.select("vertex", F.col("label").alias("component"))
-    if mapping is not None:
-        # recover original vertices; reps whose whole component was
-        # partition-internal never entered the loop — their rep IS the
-        # component (min id by union-find construction)
-        out = (
-            mapping.join(out.withColumnRenamed("vertex", "rep"),
-                         "rep", "left")
-            .select("vertex",
-                    F.coalesce("component", "rep").alias("component"))
-        )
-    return out
+    return lab.select("vertex", F.col("label").alias("component"))
 
 
 def dedup_clusters(df: DataFrame, id_col: str, text_col: str,

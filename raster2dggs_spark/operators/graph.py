@@ -7,9 +7,9 @@ canonical graph workloads:
 - :func:`pagerank` — the standard damped power iteration with
   dangling-mass redistribution, as ``iters`` rounds of (join ranks to
   edges -> groupBy dst -> map).  Each round is one shuffle over the
-  edge list; plans are truncated with eager ``localCheckpoint`` every
-  few rounds (the connected-components loop hygiene) so the lineage
-  never deepens.  Deterministic given the graph: per-round float sums
+  edge list; the rounds run on the ``plans/loops.py`` superstep driver,
+  which materializes every round so the lineage never deepens.
+  Deterministic given the graph: per-round float sums
   are order-dependent only in the last ulps, which the 4dp gate
   rounding absorbs (the oracle unrolls the SAME iterations as chained
   CTEs).
@@ -37,6 +37,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     """Damped PageRank over a directed edge list; vertices are the
     union of endpoints, ranks start uniform at 1/N and renormalize
     through the dangling term each round.  Output: (vertex, rank)."""
+    from raster2dggs_spark.plans.loops import fixpoint
+
     e = edges.select(F.col(src).alias("src"),
                      F.col(dst).alias("dst")).distinct()
     verts = (e.select(F.col("src").alias("vertex"))
@@ -44,13 +46,12 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              .distinct().localCheckpoint(eager=True))
     n = verts.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    for _ in range(iters):
-        # one materialization per round: the dangling aggregate and the
-        # contribution join both read the checkpointed frame (no driver
-        # scalar sync, no recomputation of the round's lineage)
-        ranks = ranks.localCheckpoint(eager=True)
+
+    def step(ranks: DataFrame, _seen) -> DataFrame:
+        # the dangling aggregate and the contribution join both read the
+        # round's checkpointed frame (no driver scalar sync, no
+        # recomputation of the round's lineage)
         contrib = (ranks.join(outdeg,
                               ranks.vertex == outdeg.src, "left")
                    .select("vertex", "rank", "odeg"))
@@ -63,16 +64,18 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                .join(e, F.col("vertex") == F.col("src"))
                .groupBy("dst")
                .agg(F.sum(F.col("rank") / F.col("odeg")).alias("msum")))
-        ranks = (verts.crossJoin(F.broadcast(dang_df))
-                 .join(inc, verts.vertex == inc.dst, "left")
-                 .select("vertex",
-                         ((F.lit(base)
-                           + F.lit(damping) * F.col("dang")
-                           / F.lit(float(n)))
-                          + F.lit(damping)
-                          * F.coalesce(F.col("msum"), F.lit(0.0)))
-                         .alias("rank")))
-    return ranks
+        return (verts.crossJoin(F.broadcast(dang_df))
+                .join(inc, verts.vertex == inc.dst, "left")
+                .select("vertex",
+                        ((F.lit(base)
+                          + F.lit(damping) * F.col("dang")
+                          / F.lit(float(n)))
+                         + F.lit(damping)
+                         * F.coalesce(F.col("msum"), F.lit(0.0)))
+                        .alias("rank")))
+
+    return fixpoint(step, verts.withColumn("rank", F.lit(1.0 / n)),
+                    max_rounds=iters, name="pagerank")
 
 
 def _oriented_edges(e: DataFrame) -> DataFrame:
@@ -126,6 +129,62 @@ def triangle_count(edges: DataFrame, src: str = "src",
     return tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
+def _shortest_paths(edges: DataFrame, sources, keys: list[str],
+                    src: str, dst: str, w: str, max_rounds: int,
+                    directed: bool, stats: dict | None,
+                    name: str) -> DataFrame:
+    """Frontier Bellman-Ford shared by :func:`sssp` (``keys=[]``) and
+    :func:`sssp_multi` (``keys=["source"]``): the state is one frame of
+    ``(*keys, node, dist, fresh)`` rows, ``fresh`` marking the labels
+    improved last round — the frontier.  Each round relaxes the edges
+    leaving the frontier and folds the candidates into the labels with
+    ONE ``groupBy(*keys, node)`` min over ``(dist, is_candidate)``, so a
+    candidate wins (and turns fresh) only when strictly shorter than the
+    label it competes with."""
+    from raster2dggs_spark.plans.loops import fixpoint
+
+    e = edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst"),
+                     F.col(w).cast("double").alias("ew"))
+    if not directed:
+        e = e.unionByName(edges.select(
+            F.col(dst).alias("esrc"), F.col(src).alias("edst"),
+            F.col(w).cast("double").alias("ew")))
+    e = e.localCheckpoint(eager=True)
+    node_t = edges.schema[src].dataType
+    cols = [*keys, "node"]
+    seeds = edges.sparkSession.createDataFrame(
+        [(s,) * len(cols) + (0.0,) for s in sources],
+        T.StructType([T.StructField(c, node_t, False) for c in cols]
+                     + [T.StructField("dist", T.DoubleType(), False)]))
+    init = (seeds.groupBy(*cols).agg(F.min("dist").alias("dist"))
+            .withColumn("fresh", F.lit(True)))
+
+    def relax(dist: DataFrame, _improved) -> DataFrame:
+        frontier = dist.where("fresh")
+        cand = (frontier.join(e, frontier.node == e.esrc)
+                .select(*keys, F.col("edst").alias("node"),
+                        (F.col("dist") + F.col("ew")).alias("dist"),
+                        F.lit(1).alias("c")))
+        best = (dist.select(*cols, "dist", F.lit(0).alias("c"))
+                .unionByName(cand)
+                .groupBy(*cols)
+                .agg(F.min(F.struct("dist", "c")).alias("b")))
+        return best.select(*cols, F.col("b.dist").alias("dist"),
+                           (F.col("b.c") == 1).alias("fresh"))
+
+    # max_rounds caps IMPROVEMENT rounds; the +1 grants the final round
+    # that finds the frontier empty (a graph needing exactly max_rounds
+    # relaxations must converge, not raise — code-review finding), so
+    # the driver's cap error counts max_rounds + 1 rounds
+    run: dict = {}
+    dist = fixpoint(relax, init, max_rounds=max_rounds + 1, name=name,
+                    stats=run,
+                    probe=F.sum(F.col("fresh").cast("long")))
+    if stats is not None:
+        stats["rounds"] = run["rounds"] - 1
+    return dist.select(*cols, "dist")
+
+
 def sssp(edges: DataFrame, sources, src: str = "src", dst: str = "dst",
          w: str = "w", max_rounds: int = 64, directed: bool = True,
          stats: dict | None = None) -> DataFrame:
@@ -136,80 +195,26 @@ def sssp(edges: DataFrame, sources, src: str = "src", dst: str = "dst",
 
     Frontier Bellman-Ford supersteps (delta-stepping without the
     bucket refinement): each round relaxes ONLY edges leaving nodes
-    improved last round, folds candidate distances with one
-    ``groupBy(node).min``, and merges improvements into the running
-    labels.  Non-negative weights assumed (negative cycles would never
-    converge; the round cap RAISES rather than return wrong labels).
-    Converges in (max edges on any shortest path) rounds — O(diameter)
-    worst case, far fewer on expander-ish transport graphs.
+    improved last round and folds candidate distances into the running
+    labels with one ``groupBy(node).min``.  Non-negative weights
+    assumed (negative cycles would never converge; the round cap RAISES
+    rather than return wrong labels).  Converges in (max edges on any
+    shortest path) rounds — O(diameter) worst case, far fewer on
+    expander-ish transport graphs.
 
     Scale shape (100-TB): per round two bounded shuffles (frontier-edge
-    equi-join + min-combine) whose size tracks the FRONTIER, not the
-    graph; per-round eager ``localCheckpoint`` keeps the plan flat
-    (the kNN-loop hygiene); termination is driver-synced on the
-    improved-node count — the connected_components contract.
+    equi-join + min-combine); the rounds run on the ``plans/loops.py``
+    superstep driver, which checkpoints each round and stops on the
+    improved-node count observed on that checkpoint.
 
     ``sources``: iterable of node ids (distance 0 seeds).
-    ``stats``: pass a dict to receive {"rounds": n}.
+    ``stats``: pass a dict to receive {"rounds": n} — the improvement
+    rounds (``max_rounds`` caps these; the final round that finds
+    nothing to improve is not counted).
     Returns (node, dist) for REACHED nodes only.
     """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst"),
-                     F.col(w).cast("double").alias("ew"))
-    if not directed:
-        e = e.unionByName(edges.select(
-            F.col(dst).alias("esrc"), F.col(src).alias("edst"),
-            F.col(w).cast("double").alias("ew")))
-    e = e.localCheckpoint(eager=True)
-    node_t = edges.schema[src].dataType
-    dist = spark.createDataFrame(
-        [(s, 0.0) for s in sources],
-        T.StructType([T.StructField("node", node_t, False),
-                      T.StructField("dist", T.DoubleType(), False)]))
-    from raster2dggs_spark.plans.loops import loop_checkpoint
-
-    dist = dist.groupBy("node").agg(F.min("dist").alias("dist"))
-    # persist-then-checkpoint rounds (plans/loops.py): dist and the
-    # frontier both feed joins that reference the previous round's
-    # frame, so a bare localCheckpoint compounds the carried size
-    # estimate geometrically (the round-8 stats-overflow class)
-    dist, dist_cache = loop_checkpoint(dist)
-    frontier = dist
-    fr_cache = None
-    rounds = 0
-    # max_rounds caps IMPROVEMENT rounds; the +1 grants the final
-    # probe that observes the empty frontier (a graph needing exactly
-    # max_rounds relaxations must converge, not raise — code-review
-    # finding)
-    for _r in range(max_rounds + 1):
-        # stats reset every 4th round (plans/loops.py digit bound)
-        _reset = _r % 4 == 0
-        prop = (frontier.join(e, frontier.node == e.esrc)
-                .select(F.col("edst").alias("node"),
-                        (F.col("dist") + F.col("ew")).alias("nd"))
-                .groupBy("node").agg(F.min("nd").alias("nd")))
-        improved, fr_cache = loop_checkpoint(
-            prop.join(dist.withColumnRenamed("dist", "old"),
-                      "node", "left")
-            .where(F.col("old").isNull()
-                   | (F.col("nd") < F.col("old")))
-            .select("node", F.col("nd").alias("dist")),
-            prev=fr_cache, reset=_reset)
-        if improved.isEmpty():
-            if stats is not None:
-                stats["rounds"] = rounds
-            fr_cache.unpersist()
-            dist_cache.unpersist()
-            return dist
-        rounds += 1
-        dist, dist_cache = loop_checkpoint(
-            dist.unionByName(improved)
-            .groupBy("node").agg(F.min("dist").alias("dist")),
-            prev=dist_cache, reset=_reset)
-        frontier = improved
-    raise RuntimeError(
-        f"sssp did not converge in {max_rounds} rounds — "
-        "negative-weight cycle or raise max_rounds")
+    return _shortest_paths(edges, sources, [], src, dst, w, max_rounds,
+                           directed, stats, "sssp")
 
 
 def label_propagation(edges: DataFrame, src: str = "src",
@@ -226,26 +231,20 @@ def label_propagation(edges: DataFrame, src: str = "src",
     Scale shape (100-TB): per round one edge-label equi-join, one
     (vertex, label) count with map-side combine, one per-vertex
     lexicographic min (no window over a global key), one left-join
-    label merge; eager localCheckpoint per round keeps the plan flat.
+    label merge; the rounds run on the ``plans/loops.py`` superstep
+    driver, which materializes every round so the plan stays flat.
     Returns (vertex, community).
     """
+    from raster2dggs_spark.plans.loops import fixpoint
+
     e = edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst"))
     e = e.unionByName(edges.select(F.col(dst).alias("esrc"),
                                    F.col(src).alias("edst")))
     e = e.localCheckpoint(eager=True)
     verts = (e.select(F.col("esrc").alias("vertex")).distinct()
              .localCheckpoint(eager=True))
-    from raster2dggs_spark.plans.loops import loop_checkpoint
 
-    labels = verts.withColumn("lab", F.col("vertex"))
-    lab_cache = None
-    for _r in range(rounds):
-        # persist-then-checkpoint: the round references labels twice
-        # (message join + merge join), which doubles the carried size
-        # estimate's digits per round on a bare localCheckpoint
-        # (plans/loops.py); reset every 4th round bounds the digits
-        labels, lab_cache = loop_checkpoint(labels, prev=lab_cache,
-                                            reset=(_r % 4 == 0))
+    def step(labels: DataFrame, _seen) -> DataFrame:
         nb = (e.join(labels, e.esrc == labels.vertex)
               .select(F.col("edst").alias("vertex"), "lab"))
         cnt = (nb.groupBy("vertex", "lab")
@@ -255,11 +254,11 @@ def label_propagation(edges: DataFrame, src: str = "src",
                                     F.col("lab").alias("lab")))
                      .alias("b"))
                 .select("vertex", F.col("b.lab").alias("newlab")))
-        labels = (labels.join(pick, "vertex", "left")
-                  .select("vertex",
-                          F.coalesce("newlab", "lab").alias("lab")))
-    if lab_cache is not None:
-        lab_cache.unpersist()
+        return (labels.join(pick, "vertex", "left")
+                .select("vertex", F.coalesce("newlab", "lab").alias("lab")))
+
+    labels = fixpoint(step, verts.withColumn("lab", F.col("vertex")),
+                      max_rounds=rounds, name="label_propagation")
     return labels.select("vertex", F.col("lab").alias("community"))
 
 
@@ -274,58 +273,9 @@ def sssp_multi(edges: DataFrame, sources, src: str = "src",
     relaxation joins instead of K sequential :func:`sssp` runs — the
     round count is the MAX over sources, not the sum.
 
-    Same contract as :func:`sssp` otherwise: non-negative weights,
-    frontier-proportional work, eager per-round localCheckpoint,
-    driver-synced convergence that raises at the cap.  Returns
-    ``(source, node, dist)`` for reached pairs only.
+    Same contract and loop as :func:`sssp` otherwise: non-negative
+    weights, frontier-proportional work, convergence that raises at the
+    cap.  Returns ``(source, node, dist)`` for reached pairs only.
     """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst"),
-                     F.col(w).cast("double").alias("ew"))
-    if not directed:
-        e = e.unionByName(edges.select(
-            F.col(dst).alias("esrc"), F.col(src).alias("edst"),
-            F.col(w).cast("double").alias("ew")))
-    e = e.localCheckpoint(eager=True)
-    node_t = edges.schema[src].dataType
-    dist = spark.createDataFrame(
-        [(s, s, 0.0) for s in sources],
-        T.StructType([T.StructField("source", node_t, False),
-                      T.StructField("node", node_t, False),
-                      T.StructField("dist", T.DoubleType(), False)]))
-    from raster2dggs_spark.plans.loops import loop_checkpoint
-
-    # same round hygiene as sssp (plans/loops.py)
-    dist, dist_cache = loop_checkpoint(dist)
-    frontier = dist
-    fr_cache = None
-    rounds = 0
-    for _r in range(max_rounds + 1):
-        _reset = _r % 4 == 0
-        prop = (frontier.join(e, frontier.node == e.esrc)
-                .select("source", F.col("edst").alias("node"),
-                        (F.col("dist") + F.col("ew")).alias("nd"))
-                .groupBy("source", "node").agg(F.min("nd").alias("nd")))
-        improved, fr_cache = loop_checkpoint(
-            prop.join(dist.withColumnRenamed("dist", "old"),
-                      ["source", "node"], "left")
-            .where(F.col("old").isNull()
-                   | (F.col("nd") < F.col("old")))
-            .select("source", "node", F.col("nd").alias("dist")),
-            prev=fr_cache, reset=_reset)
-        if improved.isEmpty():
-            if stats is not None:
-                stats["rounds"] = rounds
-            fr_cache.unpersist()
-            dist_cache.unpersist()
-            return dist
-        rounds += 1
-        dist, dist_cache = loop_checkpoint(
-            dist.unionByName(improved)
-            .groupBy("source", "node")
-            .agg(F.min("dist").alias("dist")),
-            prev=dist_cache, reset=_reset)
-        frontier = improved
-    raise RuntimeError(
-        f"sssp_multi did not converge in {max_rounds} rounds — "
-        "negative-weight cycle or raise max_rounds")
+    return _shortest_paths(edges, sources, ["source"], src, dst, w,
+                           max_rounds, directed, stats, "sssp_multi")

@@ -20,6 +20,7 @@ on the cell key.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -855,23 +856,21 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
     )
     t = t.persist()
 
-    def ring_cells(df: DataFrame, radius: float, cres: int) -> DataFrame:
-        return disk_cover_cells(df, radius, cres, dggs, q_id,
-                                lon_col, lat_col)
-
     from raster2dggs_spark.operators.aggregates import top_k
+    from raster2dggs_spark.plans.loops import fixpoint
 
     remaining = queries.select(q_id, lon_col, lat_col)
     if remaining.rdd.getNumPartitions() < par:
         remaining = remaining.repartition(par)
-    results = None
-    tk = None
+    results = []
     radius = radius_m
-    rem_n = None  # count of unresolved queries (drives the round loop)
-    for _ in range(max_rounds):
+
+    def resolve(remaining: DataFrame, _left) -> DataFrame:
+        nonlocal radius
         cres = _res_for_radius(radius, dggs, res)
         tt = t.withColumn("jcell", parent_expr("cell", cres, dggs, from_res=res))
-        cand = ring_cells(remaining, radius, cres).join(tt, "jcell")
+        cand = disk_cover_cells(remaining, radius, cres, dggs, q_id,
+                                lon_col, lat_col).join(tt, "jcell")
         dist = 2.0 * EARTH_R * F.asin(F.sqrt(
             F.pow(F.sin(F.radians(F.col("t_lat") - F.col("q_lat")) / 2), 2)
             + F.cos(F.radians("q_lat")) * F.cos(F.radians("t_lat"))
@@ -879,30 +878,29 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
         ))
         cand = cand.withColumn("dist_m", dist).where(F.col("dist_m") <= radius)
         tk = top_k(cand, [q_id], "dist_m", k, ascending=True, tiebreak=[t_id])
-        # the round is driver-synced anyway (the loop needs the remaining
-        # count) — localCheckpoint the round's top-k so downstream unions
-        # don't re-run the candidate join and the per-round inputs can be
-        # unpersisted immediately
+        # localCheckpoint the round's top-k so the result union and the
+        # next round's remaining set don't re-run the candidate join
         tk = tk.select(q_id, t_id, "dist_m", "rank").localCheckpoint(eager=True)
+        if len(results) == max_rounds - 1:
+            # last round: accept < k neighbors for queries that exhausted
+            # the max radius — every row is a result, nothing remains
+            results.append(tk)
+            return remaining.where(F.lit(False))
         # a query is resolved when it has a rank-k row (top_k emits dense
         # ranks 1..min(k, hits))
         done_ids = tk.where(F.col("rank") >= k).select(q_id)
-        done = tk.join(done_ids, q_id, "left_semi")
-        results = done if results is None else results.unionByName(done)
-        prev_remaining = remaining
-        remaining = remaining.join(done_ids, q_id, "left_anti").persist()
-        rem_n = remaining.count()
-        prev_remaining.unpersist()  # no-op on the first (unpersisted) round
-        if rem_n == 0:
-            break
+        results.append(tk.join(done_ids, q_id, "left_semi"))
         radius *= 3.0
-    else:
-        # accept < k neighbors for queries that exhausted the max radius
-        leftover = tk.join(remaining.select(q_id), q_id, "left_semi")
-        results = results.unionByName(leftover)
-    remaining.unpersist()
-    t.unpersist()
-    return results
+        return remaining.join(done_ids, q_id, "left_anti")
+
+    try:
+        # the driver observes the unresolved-query count on each round's
+        # checkpoint of the remaining set and stops when it reaches zero
+        fixpoint(resolve, remaining, max_rounds=max_rounds, name="knn_join",
+                 probe=F.count(F.lit(1)))
+    finally:
+        t.unpersist()
+    return functools.reduce(DataFrame.unionByName, results)
 
 
 def within_distance_join(queries: DataFrame, targets: DataFrame,

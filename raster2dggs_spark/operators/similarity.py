@@ -119,7 +119,7 @@ def train_centroids(vectors: DataFrame, k: int, iters: int = 5,
     uniform pseudo-random draw reproducible in any engine).  Each
     iteration is one broadcast-assign (cross join vs k centroids, argmin
     by cosine) plus one groupBy mean over exploded dimensions — two
-    narrow shuffles per iter, driver-synced like the kNN radius rounds.
+    narrow shuffles per iter, on the ``plans/loops.py`` superstep driver.
     Empty clusters keep their previous centroid.
 
     ``round_dp``: round centroid components to this many decimals after
@@ -129,6 +129,8 @@ def train_centroids(vectors: DataFrame, k: int, iters: int = 5,
     stops the divergence from compounding) — negligible effect on
     cluster quality, used by the oracle-checked driver query."""
     from pyspark.sql import Window
+
+    from raster2dggs_spark.plans.loops import fixpoint
 
     v = vectors.select(F.col(v_id), _as_double(F.col(v_vec)).alias("__v"))
     # stable 0..k-1 centroid ids regardless of partitioning
@@ -140,7 +142,8 @@ def train_centroids(vectors: DataFrame, k: int, iters: int = 5,
             F.col("__v").alias("c_vec"),
         )
     )
-    for _ in range(iters):
+
+    def lloyd(cents: DataFrame, _seen) -> DataFrame:
         j = v.crossJoin(F.broadcast(cents)).withColumn(
             "__cos",
             _dot(F.col("__v"), _as_double(F.col("c_vec")))
@@ -158,17 +161,16 @@ def train_centroids(vectors: DataFrame, k: int, iters: int = 5,
             ).alias("__p")
         ).select("c_id", F.col("__p.m").alias("c_vec"))
         # empty clusters: keep the previous centroid
-        cents = cents.select("c_id", F.col("c_vec").alias("__old")).join(
+        return cents.select("c_id", F.col("c_vec").alias("__old")).join(
             new, "c_id", "left"
         ).select(
             "c_id", F.coalesce(F.col("c_vec"), F.col("__old")).alias("c_vec")
         )
-        # truncate the lineage per iteration (same hygiene as the kNN
-        # radius rounds, joins.py): without this the final plan chains
-        # every crossJoin+window of every prior iteration — planning
-        # time and recomputation grow ~linearly in iters
-        cents = cents.localCheckpoint(eager=True)
-    return cents
+
+    # the driver materializes every iteration: without it the final plan
+    # chains every crossJoin+window of every prior iteration — planning
+    # time and recomputation grow ~linearly in iters
+    return fixpoint(lloyd, cents, max_rounds=iters, name="train_centroids")
 
 
 def hyperplane_near_dup(vectors: DataFrame, threshold: float = 0.9,
@@ -460,6 +462,8 @@ def pq_train_codebooks(vectors: DataFrame, dim: int, m: int = 8,
     ``pq_codebooks`` schema, so it drops into pq_encode/pq_topk."""
     from pyspark.sql import Window
 
+    from raster2dggs_spark.plans.loops import fixpoint
+
     sub_dim = dim // m
     sv = vectors.select(
         F.col(v_id), F.posexplode(_as_double(F.col(v_vec))).alias("pos", "x")
@@ -480,10 +484,9 @@ def pq_train_codebooks(vectors: DataFrame, dim: int, m: int = 8,
     cents = (
         seeds.join(sv, [v_id, "sub"])
         .select("sub", "code", F.col("p"), F.col("x").alias("c"))
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        from raster2dggs_spark.operators.aggregates import top_k
+    )
 
+    def lloyd(cents: DataFrame, _seen) -> DataFrame:
         j = sv.join(F.broadcast(cents), ["sub", "p"])
         dist = j.groupBy(v_id, "sub", "code").agg(
             F.round(F.sum((F.col("x") - F.col("c")) ** 2), 6).alias("d")
@@ -498,11 +501,13 @@ def pq_train_codebooks(vectors: DataFrame, dim: int, m: int = 8,
         if round_dp is not None:
             new = new.withColumn("c", F.round("c", round_dp))
         # empty codes keep their previous centroid
-        cents = cents.select("sub", "code", "p", F.col("c").alias("__old")) \
+        return cents.select("sub", "code", "p", F.col("c").alias("__old")) \
             .join(new, ["sub", "code", "p"], "left") \
             .select("sub", "code", "p",
-                    F.coalesce("c", "__old").alias("c")) \
-            .localCheckpoint(eager=True)
+                    F.coalesce("c", "__old").alias("c"))
+
+    cents = fixpoint(lloyd, cents, max_rounds=iters,
+                     name="pq_train_codebooks")
     return cents.select(
         "sub", "code", (F.col("sub") * sub_dim + F.col("p")).alias("pos"), "c"
     )

@@ -239,8 +239,7 @@ def funnel(events: DataFrame, steps, entity_col: str = "user_id",
     # eager checkpoint per frame: each step frame is read TWICE (the
     # next step's join and its own count), and frame k's lineage
     # embeds frames 0..k-1 — without materialization the final union
-    # re-executes the event scan O(K^2) times (code-review finding;
-    # the sssp/label_propagation round hygiene)
+    # re-executes the event scan O(K^2) times (code-review finding)
     cur = (cur.withColumn("__t1", F.col("__t"))
            .localCheckpoint(eager=True))
     frames = [cur]

@@ -308,37 +308,6 @@ def test_tfidf_ubiquitous_term_scores_zero(spark):
     assert (out[out["term"] == "common"]["tfidf"] == 0.0).all()
 
 
-def test_connected_components_local_contract_equality(spark):
-    """local_contract=True must produce bit-identical components to the
-    plain loop (min-id roots compose with min-label propagation),
-    including components fully internal to one partition (they bypass
-    the loop via the rep mapping) and a long chain (contraction +
-    pointer jumping still converge)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from raster2dggs_spark.operators.dedup import connected_components
-
-    chain = spark.range(400).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    rand = spark.range(3000).select(
-        (F.lit(1000) + F.pmod(F.xxhash64(F.col("id")), F.lit(2000)))
-        .alias("id_a"),
-        (F.lit(1000) + F.pmod(F.xxhash64(F.col("id") + F.lit(99)),
-                              F.lit(2000))).alias("id_b"))
-    edges = chain.unionByName(rand).where("id_a != id_b")
-
-    st_a, st_b = {}, {}
-    a = connected_components(edges, stats=st_a,
-                             local_contract=False).toPandas()
-    b = connected_components(edges, stats=st_b,
-                             local_contract=True).toPandas()
-    key = lambda d: sorted(zip(d["vertex"], d["component"]))
-    assert key(a) == key(b)
-    assert st_b["rounds"] <= st_a["rounds"]
-    assert st_b["contracted_vertices"] <= len(a)
-
-
 def test_stratified_sample_deterministic_and_proportional(spark):
     """Per-stratum rates are honored (±2% at 20k rows), membership is a
     pure function of the id (subset invariance: a kept row stays kept
