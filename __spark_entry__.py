@@ -6842,7 +6842,9 @@ def _sssp_multi_sql(levels: int = 18) -> str:
 
 def _pagerank_sql(iters: int = 8) -> str:
     """Unrolled-iteration PageRank twin (chained CTEs, float
-    association matching operators/graph.py pagerank exactly)."""
+    association matching operators/graph.py pagerank exactly).  Every
+    rank level is MATERIALIZED: d{i} and m{i} both read r{i}, and an
+    inlined chain multiplies its plan per level (8 levels: minutes)."""
     head = """
             WITH s AS (SELECT CAST(s_suppkey AS BIGINT) AS k
                        FROM supplier),
@@ -6857,7 +6859,8 @@ def _pagerank_sql(iters: int = 8) -> str:
                     UNION ALL SELECT dst FROM e)),
             nv AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
             od AS (SELECT src, count(*) AS odeg FROM e GROUP BY src),
-            r0 AS (SELECT vertex, 1.0 / n AS rank FROM v, nv)"""
+            r0 AS MATERIALIZED (
+                SELECT vertex, 1.0 / n AS rank FROM v, nv)"""
     blocks = []
     for i in range(iters):
         blocks.append(f""",
@@ -6870,7 +6873,7 @@ def _pagerank_sql(iters: int = 8) -> str:
                      JOIN od ON od.src = r.vertex
                      JOIN e ON e.src = r.vertex
                      GROUP BY e.dst),
-            r{i + 1} AS (SELECT v.vertex,
+            r{i + 1} AS MATERIALIZED (SELECT v.vertex,
                             ((1.0 - 0.85) / nv.n
                              + 0.85 * d{i}.dang / nv.n)
                             + 0.85 * COALESCE(m{i}.msum, 0.0) AS rank

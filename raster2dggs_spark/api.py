@@ -425,8 +425,10 @@ def write_output(df: DataFrame, path: str, dggs: str = "hex7",
                  geometry: str = "polygon",
                  compression: str = "snappy") -> None:
     """Reference output sink: hive-partitioned (Geo)Parquet keyed by the
-    parent column (ref common.py:533-572; -c/--compression)."""
+    parent column, one file per parent (ref common.py:533-572;
+    -c/--compression)."""
     from raster2dggs_spark.operators.indexing import cell_column_name
+    from raster2dggs_spark.plans.layout import write_partitioned
 
     pcol = cell_column_name(dggs, parent_res)
     if geo:
@@ -443,5 +445,4 @@ def write_output(df: DataFrame, path: str, dggs: str = "hex7",
                          partition_col=pcol,
                          geometry_types=[geometry.capitalize()])
         return
-    (df.write.mode("overwrite").option("compression", compression)
-     .partitionBy(pcol).parquet(path))
+    write_partitioned(df, path, pcol, compression=compression)

@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from raster2dggs_spark.plans.layout import write_partitioned
 from raster2dggs_spark.sources.icetable import IceTable
 
 
@@ -65,8 +66,7 @@ def checkpointed_write(
                     lineage={**(lineage or {}), "partial": True})
         raise RuntimeError("simulated failure after partial commit")
     if fail_before_commit:
-        (todo.write.mode("append").partitionBy(partition_by)
-         .parquet(table.data_dir))
+        write_partitioned(todo, table.data_dir, partition_by, mode="append")
         raise RuntimeError("simulated failure before commit")
     return table.write(
         todo, partition_by, mode="append",

@@ -1,4 +1,6 @@
-"""Input-layout guards (guide §2.5 "input skew").
+"""Physical-layout helpers: input fan-out and the partitioned sink.
+
+Input-layout guard (guide §2.5 "input skew").
 
 A single parquet file — the common shape of a small dimension table or a
 freshly-exported corpus — scans as ONE partition, so any CPU-heavy
@@ -15,6 +17,15 @@ The guard is a NO-OP whenever the input already has at least half the
 session's shuffle partitions — at production scale inputs arrive as
 thousands of files and the extra exchange would be pure cost, so this
 only fires on the coarse-scan shape it exists for.
+
+Sink layout: :func:`write_partitioned` is the one hive-partitioned
+writer.  ``partitionBy(col)`` opens a file for every partition value a
+write task holds, so writing a frame whose last exchange is keyed by
+another column (an aggregate hashed on ``cell``, written by ``parent``)
+leaves about one file per (task, value) pair.  The helper rebalances on
+the partition column first; AQE then sizes the write tasks by bytes,
+coalescing small values into shared tasks (one file each) and splitting
+a hot value into several advisory-sized files instead of one task.
 """
 
 from __future__ import annotations
@@ -40,3 +51,16 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     if key_cols:
         return df.repartition(p, *[F.col(c) for c in key_cols])
     return df.repartition(p)
+
+
+def write_partitioned(df: DataFrame, path: str, partition_col: str,
+                      mode: str = "overwrite",
+                      compression: str | None = None) -> None:
+    """Write ``df`` as Parquet hive-partitioned on ``partition_col``,
+    one file per partition value (several for a value hotter than the
+    AQE advisory partition size).  The rebalance exchange runs over the
+    rows being written, after any aggregation upstream."""
+    w = df.hint("rebalance", partition_col).write.mode(mode)
+    if compression is not None:
+        w = w.option("compression", compression)
+    w.partitionBy(partition_col).parquet(path)

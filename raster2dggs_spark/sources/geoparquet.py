@@ -108,6 +108,35 @@ def wkb_bbox(blobs) -> list[float] | None:
     return [float(xmin), float(ymin), float(xmax), float(ymax)]
 
 
+def _write_stamped(df: DataFrame, path: str, partition_col: str | None,
+                   stamp) -> None:
+    """Write ``df`` as Parquet (hive-partitioned on ``partition_col``
+    when given, one file per partition value), then merge ``stamp(table)``
+    -> ``{key: value}`` into each file's footer metadata.  The rewrite
+    reads every file on the driver, so ``stamp`` can derive its value
+    from that file's own rows."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    if partition_col:
+        write_partitioned(df, path, partition_col)
+    else:
+        df.write.mode("overwrite").parquet(path)
+    for fp in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+        t = pq.read_table(fp)
+        md = dict(t.schema.metadata or {})
+        md.update(stamp(t))
+        pq.write_table(t.replace_schema_metadata(md), fp)
+    # the rewrite invalidates Hadoop's .crc sidecars — drop them so Spark
+    # can read the stamped files back
+    for crc in glob.glob(os.path.join(path, "**", ".*.crc"), recursive=True):
+        os.remove(crc)
+
+
 def write_geoparquet(df: DataFrame, path: str, partition_col: str | None = None,
                      geometry_types: list[str] = ("Polygon",)) -> None:
     """Write a DataFrame carrying a WKB ``geometry`` column as GeoParquet:
@@ -117,27 +146,13 @@ def write_geoparquet(df: DataFrame, path: str, partition_col: str | None = None,
     from the data) so bbox-pruning readers get real extents, not the
     whole world.  The footer rewrite already reads the file, so the bbox
     scan adds no extra IO."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    w = df.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)
-    for fp in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        t = pq.read_table(fp)
+    def stamp(t):
         bbox = wkb_bbox(t.column("geometry").to_pylist())
         if bbox is None:
             bbox = [-180.0, -90.0, 180.0, 90.0]
-        md = dict(t.schema.metadata or {})
-        md[b"geo"] = geo_metadata(bbox, list(geometry_types))
-        pq.write_table(t.replace_schema_metadata(md), fp)
-    # the rewrite invalidates Hadoop's .crc sidecars — drop them so Spark
-    # can read the stamped files back
-    for crc in glob.glob(os.path.join(path, "**", ".*.crc"), recursive=True):
-        os.remove(crc)
+        return {b"geo": geo_metadata(bbox, list(geometry_types))}
+
+    _write_stamped(df, path, partition_col, stamp)
 
 
 def histogram_metadata(mode: str, edges=None, width=None, origin=0.0,
@@ -162,20 +177,6 @@ def write_histogram_parquet(df: DataFrame, path: str, mode: str,
     """Histogram sink: partitioned parquet + the histogram-spec metadata
     stamped into every file footer (same metadata-only Arrow rewrite as
     the GeoParquet sink)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    w = df.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)
     meta_val = histogram_metadata(mode, edges, width, origin, weight, normalize)
-    for fp in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        t = pq.read_table(fp)
-        md = dict(t.schema.metadata or {})
-        md[b"raster2dggs:histogram"] = meta_val
-        pq.write_table(t.replace_schema_metadata(md), fp)
-    for crc in glob.glob(os.path.join(path, "**", ".*.crc"), recursive=True):
-        os.remove(crc)
+    _write_stamped(df, path, partition_col,
+                   lambda t: {b"raster2dggs:histogram": meta_val})

@@ -27,6 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from raster2dggs_spark.plans.layout import write_partitioned
+
 
 class IceTable:
     def __init__(self, root: str):
@@ -83,7 +85,7 @@ class IceTable:
         published (readers select manifest files, not the directory)."""
         os.makedirs(self.meta_dir, exist_ok=True)
         before = self._list_data_files() if mode == "append" else None
-        (df.write.mode(mode).partitionBy(partition_by).parquet(self.data_dir))
+        write_partitioned(df, self.data_dir, partition_by, mode=mode)
         new_files = (self._list_data_files() - before
                      if before is not None else None)
         spark = df.sparkSession
@@ -276,8 +278,7 @@ class IceTable:
         merged = survivors.unionByName(updates.select(*current.columns))
 
         before = self._list_data_files()
-        (merged.write.mode("append").partitionBy(part_col)
-         .parquet(self.data_dir))
+        write_partitioned(merged, self.data_dir, part_col, mode="append")
         new_files = self._list_data_files() - before
 
         affected = {f"{part_col}={v}" for v in pvals}
@@ -329,8 +330,7 @@ class IceTable:
         if pvals:
             keep = self.read(spark, partition_values=pvals).where(~cond)
             before = self._list_data_files()
-            (keep.write.mode("append").partitionBy(part_col)
-             .parquet(self.data_dir))
+            write_partitioned(keep, self.data_dir, part_col, mode="append")
             new_files = self._list_data_files() - before
         for part, m in self._manifests_from_files(new_files,
                                                   spark).items():
@@ -355,10 +355,11 @@ class IceTable:
         beside the old ones and the commit swaps the manifests, so
         concurrent readers of older versions (time travel) keep
         working until ``vacuum`` reclaims the superseded files.
-        Scale shape: ONE ``repartition(partition_col)`` shuffle over
+        Scale shape: ONE rebalance shuffle on the partition column over
         only the affected partitions' rows (compact partitions are not
-        read at all), and the footer scan of the new files fans out to
-        executors past the driver limit.  Returns the new snapshot (or
+        read at all; a partition past the AQE advisory size splits into
+        a few advisory-sized files), and the footer scan of the new
+        files fans out to executors past the driver limit.  Returns the new snapshot (or
         the current one unchanged if nothing needed rewriting)."""
         snap = self.snapshot()
         if snap is None:
@@ -377,9 +378,7 @@ class IceTable:
         old = [os.path.join(self.root, f)
                for m in rewrite for f in m["files"]]
         df = spark.read.option("basePath", self.data_dir).parquet(*old)
-        (df.repartition(part_col)
-           .write.mode("append").partitionBy(part_col)
-           .parquet(self.data_dir))
+        write_partitioned(df, self.data_dir, part_col, mode="append")
         new_files = self._list_data_files() - before
         manifests = dict(keep)
         manifests.update(self._manifests_from_files(new_files, spark))

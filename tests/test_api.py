@@ -105,6 +105,116 @@ def test_write_output_roundtrip(spark, tmp_path):
     assert "hex7_01" in back.columns
 
 
+# --- sink layout: one file per partition value ---------------------------
+#
+# The frames below span several parents and are spread over 4 tasks
+# first, so every parent sits in several write tasks; a plain
+# ``partitionBy`` would leave one file per (task, parent).
+
+
+def _spread_raw(spark):
+    from raster2dggs_spark.api import index_raster
+
+    raw = index_raster(_imgs(spark, 4), resolution=7, parent_res=1,
+                       raw_ids=True).repartition(4)
+    assert raw.select("parent").distinct().count() >= 3
+    return raw
+
+
+def _read_layout(path, pcol):
+    """All rows of a hive-partitioned dataset, with the directory value
+    of each row in ``__dir``; asserts one Parquet file per directory."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    parts = []
+    dirs = glob.glob(os.path.join(path, f"{pcol}=*"))
+    assert len(dirs) >= 3
+    for d in dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, (d, files)
+        t = pq.read_table(files[0]).to_pandas()
+        t["__dir"] = os.path.basename(d).split("=", 1)[1]
+        parts.append(t)
+    return pd.concat(parts, ignore_index=True)
+
+
+def test_write_output_one_file_per_parent(spark, tmp_path):
+    from raster2dggs_spark.api import write_output
+    from raster2dggs_spark.dggs import grid_lib
+    from raster2dggs_spark.operators.indexing import to_reference_output
+
+    out = to_reference_output(_spread_raw(spark), "hex7", 7, 1)
+    path = str(tmp_path / "out")
+    write_output(out, path, "hex7", 1)
+    back = _read_layout(path, "hex7_01")
+    exp = out.toPandas()
+    key = ["hex7_07"]
+    got = (back.rename(columns={"__dir": "hex7_01"})[exp.columns]
+           .sort_values(key).reset_index(drop=True))
+    pd.testing.assert_frame_equal(
+        got, exp.sort_values(key).reset_index(drop=True))
+    cells = np.array([int(c, 16) for c in back["hex7_07"]], dtype=np.int64)
+    parents = grid_lib("hex7").cell_to_parent(cells, 1)
+    assert [format(int(p), "x") for p in parents] == list(back["__dir"])
+
+
+def test_write_output_geo_one_file_per_parent(spark, tmp_path):
+    from raster2dggs_spark.api import write_output
+    from raster2dggs_spark.sources.geoparquet import add_cell_geometry
+
+    raw = _spread_raw(spark)
+    path = str(tmp_path / "geo")
+    write_output(raw, path, "hex7", 1, geo=True)
+    back = _read_layout(path, "hex7_01")
+    exp = (add_cell_geometry(raw).select(
+        "geometry", F.lower(F.hex("parent")).alias("__dir")).toPandas())
+    assert (sorted(zip(back["geometry"], back["__dir"]))
+            == sorted(zip(exp["geometry"], exp["__dir"])))
+
+
+def test_icetable_append_one_file_per_partition(spark, tmp_path):
+    from raster2dggs_spark.dggs import grid_lib
+    from raster2dggs_spark.sources.icetable import IceTable
+
+    raw = _spread_raw(spark).select("parent", "cell", "band_1")
+    t = IceTable(str(tmp_path / "t"))
+    snap = t.write(raw, "parent", mode="append")
+    assert all(len(m["files"]) == 1 for m in snap["manifests"])
+    back = _read_layout(t.data_dir, "parent")
+    assert (sorted(zip(back["cell"], back["band_1"]))
+            == sorted((r.cell, r.band_1) for r in raw.collect()))
+    parents = grid_lib("hex7").cell_to_parent(back["cell"].to_numpy(), 1)
+    assert [str(int(p)) for p in parents] == list(back["__dir"])
+
+
+def test_no_partitioned_write_outside_layout():
+    """Every hive-partitioned write goes through
+    plans/layout.write_partitioned: no other package module calls a
+    writer's ``partitionBy`` (``Window.partitionBy`` is not a write)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "raster2dggs_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "plans" / "layout.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "partitionBy"):
+                continue
+            recv = node.func.value
+            while isinstance(recv, (ast.Call, ast.Attribute)):
+                recv = recv.func if isinstance(recv, ast.Call) else recv.value
+            if not (isinstance(recv, ast.Name) and recv.id == "Window"):
+                hits.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+    assert not hits, "\n".join(hits)
+
+
 def test_point_histogram_output(spark):
     """--point histogram parity: categorical struct {values, counts}
     with counts summing to the cell's pixel count; binned variant emits
