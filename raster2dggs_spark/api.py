@@ -443,6 +443,7 @@ def write_output(df: DataFrame, path: str, dggs: str = "hex7",
         geo_df = geo_df.withColumn(pcol, F.lower(F.hex("parent")))
         write_geoparquet(geo_df.drop("parent", "cell"), path,
                          partition_col=pcol,
-                         geometry_types=[geometry.capitalize()])
+                         geometry_types=[geometry.capitalize()],
+                         compression=compression)
         return
     write_partitioned(df, path, pcol, compression=compression)

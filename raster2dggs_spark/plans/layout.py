@@ -19,16 +19,32 @@ thousands of files and the extra exchange would be pure cost, so this
 only fires on the coarse-scan shape it exists for.
 
 Sink layout: :func:`write_partitioned` is the one hive-partitioned
-writer.  ``partitionBy(col)`` opens a file for every partition value a
-write task holds, so writing a frame whose last exchange is keyed by
-another column (an aggregate hashed on ``cell``, written by ``parent``)
-leaves about one file per (task, value) pair.  The helper rebalances on
-the partition column first; AQE then sizes the write tasks by bytes,
-coalescing small values into shared tasks (one file each) and splitting
-a hot value into several advisory-sized files instead of one task.
+writer.  A write task that holds many partition values leaves one file
+per (task, value) pair, so writing a frame whose last exchange is keyed
+by another column (an aggregate hashed on ``cell``, written by
+``parent``) scatters every value over many small files.  The writer
+rebalances on the partition column first; AQE then sizes the write
+tasks by bytes, coalescing small values into shared tasks (one file
+each) and splitting a hot value into several advisory-sized files
+instead of one task.
+
+The files are written with pyarrow inside the tasks, and the driver
+only commits them from the tasks' manifest.  Spark's own Parquet sink
+goes through Hadoop's local filesystem, which without the native
+Hadoop library forks a ``chmod`` process for every data file, checksum
+sidecar and partition directory it creates.
 """
 
 from __future__ import annotations
+
+import os
+import posixpath
+import uuid
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,14 +69,175 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(p)
 
 
+# Spark's ExternalCatalogUtils.escapePathName character set: these ASCII
+# characters are written as %XX in partition directory names
+_ESCAPED = (frozenset(chr(c) for c in range(1, 32))
+            | frozenset('"#%\'*/:=?\\\x7f{[]^'))
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# parquet-mr's default row-group size; an unstamped file flushes a row
+# group whenever this much is buffered
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def escape_path_name(name: str) -> str:
+    """A partition column or value as Spark writes it in a path."""
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in name)
+
+
+def _dictionary_columns(t: pa.Table) -> list[str]:
+    """The flat columns worth a dictionary: at most half their values
+    distinct.  parquet-mr drops a dictionary that does not pay for
+    itself; pyarrow would keep one as large as a unique id column."""
+    return [f.name for f, c in zip(t.schema, t.columns)
+            if not (pa.types.is_nested(f.type) or pa.types.is_null(f.type))
+            and 2 * pc.count_distinct(c).as_py() <= len(t)]
+
+
+class _PartFile:
+    """One output file of a write task.  Batches are buffered and written
+    as row groups; a stamped file is buffered to its close, because
+    pyarrow fixes the footer metadata when the writer opens."""
+
+    def __init__(self, fs, stage: str, rel: str, codec: str, stamp):
+        self.fs, self.path, self.rel = fs, f"{stage}/{rel}", rel
+        self.codec, self.stamp = codec, stamp
+        self.batches, self.buffered, self.rows = [], 0, 0
+        self.writer = None
+
+    def add(self, batch: pa.RecordBatch) -> None:
+        self.batches.append(batch)
+        self.buffered += batch.nbytes
+        self.rows += batch.num_rows
+        if self.stamp is None and self.buffered >= _ROW_GROUP_BYTES:
+            self._flush(pa.Table.from_batches(self.batches))
+
+    def _flush(self, t: pa.Table, meta=None) -> None:
+        if self.writer is None:
+            schema = t.schema
+            if meta:
+                schema = schema.with_metadata({**(schema.metadata or {}),
+                                               **meta})
+            self.fs.create_dir(posixpath.dirname(self.path))
+            # pyarrow 16 writes footer key-values only beside its own
+            # ARROW:schema blob, which unstamped files leave out
+            self.writer = pq.ParquetWriter(
+                self.path, schema, filesystem=self.fs,
+                compression=self.codec,
+                use_dictionary=_dictionary_columns(t),
+                store_schema=bool(meta))
+        self.writer.write_table(t)
+        self.batches, self.buffered = [], 0
+
+    def close(self) -> tuple[str, int]:
+        if self.batches:
+            t = pa.Table.from_batches(self.batches)
+            self._flush(t, self.stamp(t) if self.stamp else None)
+        self.writer.close()
+        return self.rel, self.rows
+
+
+def _write_task(batches, fs, stage: str, col: str, codec: str, stamp,
+                job: str):
+    """mapInArrow body: ``batches`` arrive sorted on the string partition
+    value ``col``; every run of one value goes to that value's file.
+    Yields the task's manifest, one (relative path, rows) per file."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    ext = "" if codec == "none" else f".{codec}"
+    name = (f"part-{ctx.partitionId():05d}-{job}-"
+            f"a{ctx.attemptNumber()}{ext}.parquet")
+    prefix = escape_path_name(col) + "="
+    out, cur, done = None, None, []
+    for b in batches:
+        runs = pc.run_end_encode(b.column(col))
+        data = b.drop_columns([col])
+        start = 0
+        for end, v in zip(runs.run_ends.to_pylist(),
+                          runs.values.to_pylist()):
+            d = prefix + (escape_path_name(v) if v else _DEFAULT_PARTITION)
+            if d != cur:
+                if out is not None:
+                    done.append(out.close())
+                out, cur = _PartFile(fs, stage, f"{d}/{name}", codec,
+                                     stamp), d
+            out.add(data.slice(start, end - start))
+            start = end
+    if out is not None:
+        done.append(out.close())
+    yield pa.RecordBatch.from_arrays(
+        [pa.array([p for p, _ in done], pa.string()),
+         pa.array([n for _, n in done], pa.int64())], ["path", "rows"])
+
+
+def _remove(fs, path: str) -> None:
+    info = fs.get_file_info(path)
+    if info.type == pafs.FileType.Directory:
+        fs.delete_dir(path)
+    elif info.type == pafs.FileType.File:
+        fs.delete_file(path)
+
+
 def write_partitioned(df: DataFrame, path: str, partition_col: str,
                       mode: str = "overwrite",
-                      compression: str | None = None) -> None:
+                      compression: str | None = None,
+                      stamp=None) -> list[tuple[str, int]]:
     """Write ``df`` as Parquet hive-partitioned on ``partition_col``,
     one file per partition value (several for a value hotter than the
-    AQE advisory partition size).  The rebalance exchange runs over the
-    rows being written, after any aggregation upstream."""
-    w = df.hint("rebalance", partition_col).write.mode(mode)
-    if compression is not None:
-        w = w.option("compression", compression)
-    w.partitionBy(partition_col).parquet(path)
+    AQE advisory partition size), and return the manifest: one
+    ``(path relative to path, rows)`` per file written, sorted.
+
+    The rebalance exchange runs over the rows being written, after any
+    aggregation upstream.  Each task sorts its rows on the partition
+    value (cast to string, so Spark formats it) and writes its files
+    with pyarrow under ``path/_temporary/<job>/``; the driver then
+    applies ``mode`` (``overwrite`` removes the old data only once every
+    task has succeeded, ``append`` keeps it), renames the manifest's
+    files into place, deletes ``_temporary`` with any orphans of failed
+    attempts and writes ``_SUCCESS``.  Every filesystem call goes
+    through the one ``pyarrow.fs`` filesystem resolved from ``path``.
+
+    ``stamp(table) -> {key: value}`` merges footer metadata computed
+    from each file's own rows (the whole file is then buffered in its
+    task: at most one AQE-sized task input)."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    spark = df.sparkSession
+    codec = (compression
+             or spark.conf.get("spark.sql.parquet.compression.codec")).lower()
+    if codec == "uncompressed":
+        codec = "none"
+    if codec != "none" and not pa.Codec.is_available(codec):
+        raise ValueError(f"Parquet codec {codec!r} is not available")
+    fs, root = pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path))
+    job = uuid.uuid4().hex
+    stage = f"{root}/_temporary/{job}"
+    fs.create_dir(stage)
+
+    hinted = df.hint("rebalance", partition_col)
+    keyed = hinted.select(
+        *[hinted[c] for c in df.columns if c != partition_col],
+        hinted[partition_col].cast("string").alias(partition_col),
+    ).sortWithinPartitions(partition_col)
+    try:
+        written = keyed.mapInArrow(
+            lambda it: _write_task(it, fs, stage, partition_col, codec,
+                                   stamp, job),
+            "path string, rows long").collect()
+    except BaseException:
+        _remove(fs, stage)
+        raise
+
+    if mode == "overwrite":
+        for info in fs.get_file_info(pafs.FileSelector(root)):
+            if info.base_name != "_temporary":
+                _remove(fs, info.path)
+    manifest = sorted((r.path, r.rows) for r in written)
+    for d in sorted({posixpath.dirname(p) for p, _ in manifest}):
+        fs.create_dir(f"{root}/{d}")
+    for p, _ in manifest:
+        fs.move(f"{stage}/{p}", f"{root}/{p}")
+    _remove(fs, f"{root}/_temporary")
+    fs.open_output_stream(f"{root}/_SUCCESS").close()
+    return manifest

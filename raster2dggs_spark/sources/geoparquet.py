@@ -2,41 +2,53 @@
 common.py:329-391) — WKB geometry column + ``geo`` schema metadata,
 hive-partitioned on the parent cell.
 
-WKB is encoded vectorized in NumPy (no shapely offline): little-endian
-Point (type 1) for cell centres, Polygon (type 3, one closed ring of the
-6 hex vertices) for cell boundaries.
+WKB is encoded vectorized in NumPy (no shapely offline) as one byte
+buffer plus int32 offsets per batch: little-endian Point (type 1) for
+cell centres, Polygon (type 3, one closed ring of the cell's vertices)
+for cell boundaries.  The footer metadata is stamped in the write tasks
+(``plans.layout.write_partitioned``), from each file's own rows.
 """
 
 from __future__ import annotations
 
 import json
-import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster2dggs_spark.plans.layout import write_partitioned
 
-def wkb_points(lon: np.ndarray, lat: np.ndarray) -> list[bytes]:
+
+def _wkb_array(head: bytes, xy: np.ndarray) -> pa.BinaryArray:
+    """One WKB blob per row: ``head`` then the row's (lon, lat) pairs,
+    ``xy`` shaped (n, points, 2)."""
+    n = xy.shape[0]
+    size = len(head) + 16 * xy.shape[1]
+    buf = np.empty((n, size), np.uint8)
+    buf[:, :len(head)] = np.frombuffer(head, np.uint8)
+    buf[:, len(head):] = (np.ascontiguousarray(xy, "<f8")
+                          .view(np.uint8).reshape(n, -1))
+    offsets = np.arange(n + 1, dtype=np.int32) * size
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(buf)])
+
+
+def wkb_points(lon: np.ndarray, lat: np.ndarray) -> pa.BinaryArray:
     head = b"\x01\x01\x00\x00\x00"  # LE, Point
-    return [head + struct.pack("<dd", float(x), float(y)) for x, y in zip(lon, lat)]
+    return _wkb_array(head, np.stack([lon, lat], -1)[:, None, :])
 
 
-def wkb_polygons(vlon: np.ndarray, vlat: np.ndarray) -> list[bytes]:
+def wkb_polygons(vlon: np.ndarray, vlat: np.ndarray) -> pa.BinaryArray:
     """(n, k) vertex arrays -> closed-ring WKB polygons."""
-    out = []
     k = vlon.shape[1]
-    head = b"\x01\x03\x00\x00\x00" + struct.pack("<I", 1) + struct.pack("<I", k + 1)
-    for i in range(vlon.shape[0]):
-        ring = b"".join(
-            struct.pack("<dd", float(vlon[i, j]), float(vlat[i, j])) for j in range(k)
-        )
-        ring += struct.pack("<dd", float(vlon[i, 0]), float(vlat[i, 0]))
-        out.append(head + ring)
-    return out
+    # LE, Polygon, one ring of k + 1 points (the first vertex repeated)
+    head = b"\x01\x03\x00\x00\x00" + np.array([1, k + 1], "<u4").tobytes()
+    ring = np.stack([vlon, vlat], -1)
+    return _wkb_array(head, np.concatenate([ring, ring[:, :1]], 1))
 
 
 def add_cell_geometry(df: DataFrame, dggs: str = "hex7",
@@ -48,13 +60,12 @@ def add_cell_geometry(df: DataFrame, dggs: str = "hex7",
 
     lib = grid_lib(dggs)
 
-    @F.pandas_udf(T.BinaryType())
-    def geom(cell: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.BinaryType())
+    def geom(cell: pa.Array) -> pa.Array:
+        c = cell.to_numpy()
         if kind == "polygon":
-            vlon, vlat = lib.cell_to_boundary(cell.values)
-            return pd.Series(wkb_polygons(vlon, vlat))
-        lon, lat = lib.cell_to_lonlat(cell.values)
-        return pd.Series(wkb_points(lon, lat))
+            return wkb_polygons(*lib.cell_to_boundary(c))
+        return wkb_points(*lib.cell_to_lonlat(c))
 
     return df.withColumn("geometry", geom(F.col("cell")))
 
@@ -75,84 +86,67 @@ def geo_metadata(bbox: list[float], geometry_types: list[str]) -> bytes:
     }).encode()
 
 
-def wkb_bbox(blobs) -> list[float] | None:
-    """[xmin, ymin, xmax, ymax] over the WKB layouts THIS module writes
-    (little-endian Point; little-endian single-ring Polygon).  Any other
-    geometry (multi-ring, big-endian, other types) returns None — the
-    caller falls back to the whole-world bbox rather than stamping a
+def _u32_at(data: np.ndarray, at: np.ndarray) -> np.ndarray:
+    """The little-endian uint32 starting at each byte offset ``at``."""
+    return data[at[:, None] + np.arange(4)].view("<u4").ravel()
+
+
+def wkb_bbox(geoms) -> list[float] | None:
+    """[xmin, ymin, xmax, ymax] over a binary Arrow column of the WKB
+    layouts THIS module writes (little-endian Point; little-endian
+    single-ring Polygon); nulls are skipped.  Any other geometry
+    (multi-ring, big-endian, other types) returns None — the caller
+    falls back to the whole-world bbox rather than stamping a
     silently-wrong extent parsed at the wrong offset."""
-    xmin = ymin = np.inf
-    xmax = ymax = -np.inf
-    for b in blobs:
-        if b is None:
+    lo, hi = np.full(2, np.inf), np.full(2, -np.inf)
+    chunks = geoms.chunks if isinstance(geoms, pa.ChunkedArray) else [geoms]
+    for a in chunks:
+        a = a.drop_null()
+        if not len(a):
             continue
-        if len(b) < 21 or b[0] != 1:  # little-endian only
+        off = np.frombuffer(a.buffers()[1], np.int32, len(a) + 1,
+                            4 * a.offset)
+        data = np.frombuffer(a.buffers()[2], np.uint8)
+        start, end = off[:-1], off[1:]
+        if (end - start < 21).any() or (data[start] != 1).any():
             return None
-        geom_type = int.from_bytes(b[1:5], "little")
-        if geom_type == 1:
-            off = 5
-        elif geom_type == 3 and int.from_bytes(b[5:9], "little") == 1:
-            off = 13  # exactly one ring: skip ring + point counts
-        else:
+        gtype, rings = _u32_at(data, start + 1), _u32_at(data, start + 5)
+        skip = np.where(gtype == 1, 5,
+                        np.where((gtype == 3) & (rings == 1), 13, 0))
+        if (skip == 0).any() or ((end - start - skip) % 16).any():
             return None
-        if (len(b) - off) % 16 != 0:
-            return None
-        coords = np.frombuffer(b, dtype="<f8", offset=off)
-        xs, ys = coords[0::2], coords[1::2]
-        xmin = min(xmin, xs.min())
-        xmax = max(xmax, xs.max())
-        ymin = min(ymin, ys.min())
-        ymax = max(ymax, ys.max())
-    if not np.isfinite(xmin):
+        # the coordinate bytes of every blob, concatenated: +1 where a
+        # blob's coordinates start, -1 where the blob ends
+        mark = np.zeros(len(data) + 1, np.int8)
+        mark[start + skip] = 1
+        mark[end] -= 1
+        xy = data[np.cumsum(mark[:-1]) > 0].view("<f8").reshape(-1, 2)
+        lo = np.minimum(lo, xy.min(0))
+        hi = np.maximum(hi, xy.max(0))
+    if not np.isfinite(lo).all():
         return None
-    return [float(xmin), float(ymin), float(xmax), float(ymax)]
+    return [float(lo[0]), float(lo[1]), float(hi[0]), float(hi[1])]
 
 
-def _write_stamped(df: DataFrame, path: str, partition_col: str | None,
-                   stamp) -> None:
-    """Write ``df`` as Parquet (hive-partitioned on ``partition_col``
-    when given, one file per partition value), then merge ``stamp(table)``
-    -> ``{key: value}`` into each file's footer metadata.  The rewrite
-    reads every file on the driver, so ``stamp`` can derive its value
-    from that file's own rows."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from raster2dggs_spark.plans.layout import write_partitioned
-
-    if partition_col:
-        write_partitioned(df, path, partition_col)
-    else:
-        df.write.mode("overwrite").parquet(path)
-    for fp in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        t = pq.read_table(fp)
-        md = dict(t.schema.metadata or {})
-        md.update(stamp(t))
-        pq.write_table(t.replace_schema_metadata(md), fp)
-    # the rewrite invalidates Hadoop's .crc sidecars — drop them so Spark
-    # can read the stamped files back
-    for crc in glob.glob(os.path.join(path, "**", ".*.crc"), recursive=True):
-        os.remove(crc)
-
-
-def write_geoparquet(df: DataFrame, path: str, partition_col: str | None = None,
-                     geometry_types: list[str] = ("Polygon",)) -> None:
+def write_geoparquet(df: DataFrame, path: str, partition_col: str,
+                     geometry_types: list[str] = ("Polygon",),
+                     compression: str | None = None) -> None:
     """Write a DataFrame carrying a WKB ``geometry`` column as GeoParquet:
-    plain partitioned parquet + the ``geo`` metadata stamped into every
-    file footer.  Each file's bbox is computed from ITS OWN geometries
-    (reference parity: common.py:357-381 derives the partition extent
-    from the data) so bbox-pruning readers get real extents, not the
-    whole world.  The footer rewrite already reads the file, so the bbox
-    scan adds no extra IO."""
+    partitioned parquet with the ``geo`` metadata in every file footer.
+    Each file's bbox is computed in its write task from ITS OWN
+    geometries (reference parity: common.py:357-381 derives the
+    partition extent from the data), so bbox-pruning readers get real
+    extents, not the whole world."""
+    types = list(geometry_types)
+
     def stamp(t):
-        bbox = wkb_bbox(t.column("geometry").to_pylist())
+        bbox = wkb_bbox(t.column("geometry"))
         if bbox is None:
             bbox = [-180.0, -90.0, 180.0, 90.0]
-        return {b"geo": geo_metadata(bbox, list(geometry_types))}
+        return {b"geo": geo_metadata(bbox, types)}
 
-    _write_stamped(df, path, partition_col, stamp)
+    write_partitioned(df, path, partition_col, compression=compression,
+                      stamp=stamp)
 
 
 def histogram_metadata(mode: str, edges=None, width=None, origin=0.0,
@@ -173,10 +167,10 @@ def histogram_metadata(mode: str, edges=None, width=None, origin=0.0,
 def write_histogram_parquet(df: DataFrame, path: str, mode: str,
                             edges=None, width=None, origin=0.0,
                             weight: str = "count", normalize: str = "none",
-                            partition_col: str | None = None) -> None:
-    """Histogram sink: partitioned parquet + the histogram-spec metadata
-    stamped into every file footer (same metadata-only Arrow rewrite as
-    the GeoParquet sink)."""
-    meta_val = histogram_metadata(mode, edges, width, origin, weight, normalize)
-    _write_stamped(df, path, partition_col,
-                   lambda t: {b"raster2dggs:histogram": meta_val})
+                            *, partition_col: str) -> None:
+    """Histogram sink: partitioned parquet with the histogram-spec
+    metadata in every file footer, stamped in the write tasks like the
+    GeoParquet sink's."""
+    meta = {b"raster2dggs:histogram":
+            histogram_metadata(mode, edges, width, origin, weight, normalize)}
+    write_partitioned(df, path, partition_col, stamp=lambda t: meta)

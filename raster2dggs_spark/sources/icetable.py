@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
 import time
 import uuid
 
@@ -84,92 +85,34 @@ class IceTable:
         that crashed between its data write and its commit are never
         published (readers select manifest files, not the directory)."""
         os.makedirs(self.meta_dir, exist_ok=True)
-        before = self._list_data_files() if mode == "append" else None
-        write_partitioned(df, self.data_dir, partition_by, mode=mode)
-        new_files = (self._list_data_files() - before
-                     if before is not None else None)
-        spark = df.sparkSession
-        return self._commit(spark, partition_by, lineage, new_files=new_files)
+        files = write_partitioned(df, self.data_dir, partition_by, mode=mode)
+        carried = self._untouched(self.snapshot(), set()) \
+            if mode == "append" else {}
+        return self._commit(partition_by, lineage, carried, files)
 
-    # below this many files the driver reads footers itself; above it the
-    # footer scan is fanned out to the executors (shared-filesystem
-    # assumption, same as the data path)
-    _DRIVER_FOOTER_LIMIT = 256
+    @staticmethod
+    def _untouched(snap: dict | None, rewritten: set[str]) -> dict[str, dict]:
+        """Copies of ``snap``'s manifests, minus the ``rewritten``
+        partitions."""
+        return {m["partition"]: {"partition": m["partition"],
+                                 "files": list(m["files"]),
+                                 "row_count": m["row_count"]}
+                for m in (snap or {}).get("manifests", [])
+                if m["partition"] not in rewritten}
 
-    def _file_row_counts(self, files, spark: SparkSession | None) -> list:
-        """(rel_path, num_rows) per data file.  Parquet footer reads are
-        pure metadata, but at 10⁵–10⁶ partitions a driver-side loop is
-        the commit bottleneck (round-4 VERDICT "what's wrong" #3) — so
-        beyond ``_DRIVER_FOOTER_LIMIT`` files the footers are read on
-        the executors and only the aggregated (path, count) pairs —
-        exactly the manifest content that must reach the driver anyway
-        to be committed as one JSON — are collected."""
-        files = sorted(files)
-        root = self.root
-
-        def _read(rels):
-            import pyarrow.parquet as _pq
-            for rel in rels:
-                yield (rel,
-                       _pq.ParquetFile(
-                           os.path.join(root, rel)).metadata.num_rows)
-
-        if spark is None or len(files) <= self._DRIVER_FOOTER_LIMIT:
-            return list(_read(files))
-        sc = spark.sparkContext
-        nslices = min(len(files), sc.defaultParallelism * 4)
-        return sorted(
-            sc.parallelize(files, nslices)
-            .mapPartitions(lambda it: _read(it)).collect()
-        )
-
-    def _manifests_from_files(self, files,
-                              spark: SparkSession | None = None
-                              ) -> dict[str, dict]:
-        manifests: dict[str, dict] = {}
-        for rel, nrows in self._file_row_counts(files, spark):
-            part = os.path.dirname(os.path.relpath(
-                os.path.join(self.root, rel), self.data_dir))
-            if not part or part == ".":
-                continue
-            m = manifests.setdefault(
-                part, {"partition": part, "files": [], "row_count": 0}
-            )
-            m["files"].append(rel)
-            m["row_count"] += nrows
-        return manifests
-
-    def _commit(self, spark: SparkSession, partition_by: str, lineage,
-                new_files: set[str] | None = None,
-                manifests: dict | None = None) -> dict:
-        """Commit a snapshot.  ``new_files=None`` (overwrite semantics)
-        manifests the whole data dir; with a file set (append semantics)
-        the previous snapshot's manifests are carried forward and only
-        ``new_files`` are added — uncommitted orphans stay unpublished.
-        An explicit ``manifests`` dict (maintenance ops) is committed
-        verbatim."""
+    def _commit(self, partition_by: str, lineage, manifests: dict,
+                new_files) -> dict:
+        """Commit a snapshot of ``manifests`` plus the writer's manifest
+        ``new_files`` ((path relative to ``data_dir``, rows) pairs).
+        Only files this write produced are published, so orphans of a
+        crashed writer stay invisible."""
         os.makedirs(self.meta_dir, exist_ok=True)
-        if manifests is not None:
-            pass
-        elif new_files is None:
-            manifests = self._manifests_from_files(
-                self._list_data_files(), spark)
-        else:
-            manifests = {}
-            snap = self.snapshot()
-            if snap:
-                for m in snap["manifests"]:
-                    manifests[m["partition"]] = {
-                        "partition": m["partition"],
-                        "files": list(m["files"]),
-                        "row_count": m["row_count"],
-                    }
-            for part, m in self._manifests_from_files(new_files, spark).items():
-                if part in manifests:
-                    manifests[part]["files"] += m["files"]
-                    manifests[part]["row_count"] += m["row_count"]
-                else:
-                    manifests[part] = m
+        for rel, nrows in new_files:
+            part = posixpath.dirname(rel)
+            m = manifests.setdefault(
+                part, {"partition": part, "files": [], "row_count": 0})
+            m["files"].append(posixpath.join("data", rel))
+            m["row_count"] += nrows
         prev = self.current_version()
         version = prev + 1
         snap = {
@@ -277,27 +220,15 @@ class IceTable:
             updates.select(*keys).distinct(), keys, "left_anti")
         merged = survivors.unionByName(updates.select(*current.columns))
 
-        before = self._list_data_files()
-        write_partitioned(merged, self.data_dir, part_col, mode="append")
-        new_files = self._list_data_files() - before
-
+        files = write_partitioned(merged, self.data_dir, part_col,
+                                  mode="append")
         affected = {f"{part_col}={v}" for v in pvals}
-        manifests: dict[str, dict] = {}
-        for m in snap["manifests"]:
-            if m["partition"] not in affected:
-                manifests[m["partition"]] = {
-                    "partition": m["partition"],
-                    "files": list(m["files"]),
-                    "row_count": m["row_count"],
-                }
-        for part, m in self._manifests_from_files(new_files,
-                                                  spark).items():
-            manifests[part] = m
         lin = dict(lineage or {})
         lin.setdefault("operation", "merge")
         lin.setdefault("merge_keys", keys)
         lin.setdefault("partitions_rewritten", sorted(affected))
-        return self._commit(spark, part_col, lin, manifests=manifests)
+        return self._commit(part_col, lin, self._untouched(snap, affected),
+                            files)
 
     def delete_where(self, spark: SparkSession, condition,
                      lineage: dict | None = None) -> dict:
@@ -317,28 +248,17 @@ class IceTable:
         cur = self.read(spark)
         pvals = [r[0] for r in
                  cur.where(cond).select(part_col).distinct().collect()]
-        manifests: dict[str, dict] = {}
         affected = {f"{part_col}={v}" for v in pvals}
-        for m in snap["manifests"]:
-            if m["partition"] not in affected:
-                manifests[m["partition"]] = {
-                    "partition": m["partition"],
-                    "files": list(m["files"]),
-                    "row_count": m["row_count"],
-                }
-        new_files: set[str] = set()
+        files = []
         if pvals:
             keep = self.read(spark, partition_values=pvals).where(~cond)
-            before = self._list_data_files()
-            write_partitioned(keep, self.data_dir, part_col, mode="append")
-            new_files = self._list_data_files() - before
-        for part, m in self._manifests_from_files(new_files,
-                                                  spark).items():
-            manifests[part] = m
+            files = write_partitioned(keep, self.data_dir, part_col,
+                                      mode="append")
         lin = dict(lineage or {})
         lin.setdefault("operation", "delete")
         lin.setdefault("partitions_rewritten", sorted(affected))
-        return self._commit(spark, part_col, lin, manifests=manifests)
+        return self._commit(part_col, lin, self._untouched(snap, affected),
+                            files)
 
     def optimize(self, spark: SparkSession, min_files: int = 2) -> dict:
         """Small-file compaction (the Iceberg ``rewrite_data_files`` /
@@ -358,9 +278,8 @@ class IceTable:
         Scale shape: ONE rebalance shuffle on the partition column over
         only the affected partitions' rows (compact partitions are not
         read at all; a partition past the AQE advisory size splits into
-        a few advisory-sized files), and the footer scan of the new
-        files fans out to executors past the driver limit.  Returns the new snapshot (or
-        the current one unchanged if nothing needed rewriting)."""
+        a few advisory-sized files).  Returns the new snapshot (or the
+        current one unchanged if nothing needed rewriting)."""
         snap = self.snapshot()
         if snap is None:
             raise FileNotFoundError(
@@ -370,25 +289,17 @@ class IceTable:
                    if len(m["files"]) >= min_files]
         if not rewrite:
             return snap
-        keep = {m["partition"]: {"partition": m["partition"],
-                                 "files": list(m["files"]),
-                                 "row_count": m["row_count"]}
-                for m in snap["manifests"] if len(m["files"]) < min_files}
-        before = self._list_data_files()
         old = [os.path.join(self.root, f)
                for m in rewrite for f in m["files"]]
         df = spark.read.option("basePath", self.data_dir).parquet(*old)
-        write_partitioned(df, self.data_dir, part_col, mode="append")
-        new_files = self._list_data_files() - before
-        manifests = dict(keep)
-        manifests.update(self._manifests_from_files(new_files, spark))
+        files = write_partitioned(df, self.data_dir, part_col, mode="append")
         return self._commit(
-            spark, part_col,
+            part_col,
             {"operator": "optimize",
              "rewrote_partitions": len(rewrite),
              "rewrote_files": sum(len(m["files"]) for m in rewrite),
              "parent_snapshot": snap["version"]},
-            manifests=manifests)
+            self._untouched(snap, {m["partition"] for m in rewrite}), files)
 
     def vacuum(self, min_age_s: float = 0.0) -> list[str]:
         """Delete data files not referenced by the current snapshot
@@ -422,36 +333,41 @@ class IceTable:
             removed.append(rel)
         return removed
 
+    # below this many files the audit reads footers on the driver; above
+    # it the footer scan is fanned out to the executors (shared-filesystem
+    # assumption, same as the data path)
+    _DRIVER_FOOTER_LIMIT = 256
+
+    def _file_row_counts(self, files, spark: SparkSession) -> dict[str, int]:
+        """rows per data file (paths relative to the root), read from the
+        Parquet footers: on the driver up to ``_DRIVER_FOOTER_LIMIT``
+        files, on the executors beyond it."""
+        files = sorted(set(files))
+        root = self.root
+
+        def _read(rels):
+            import pyarrow.parquet as _pq
+            for rel in rels:
+                yield (rel,
+                       _pq.ParquetFile(
+                           os.path.join(root, rel)).metadata.num_rows)
+
+        if len(files) <= self._DRIVER_FOOTER_LIMIT:
+            return dict(_read(files))
+        sc = spark.sparkContext
+        nslices = min(len(files), sc.defaultParallelism * 4)
+        return dict(sc.parallelize(files, nslices)
+                    .mapPartitions(lambda it: _read(it)).collect())
+
     def verify_counts(self, spark: SparkSession) -> bool:
-        """Audit: recount rows per partition and compare to the manifest.
-
-        The comparison is DISTRIBUTED (round-4 VERDICT #3 note): the
-        recount and the manifest expectations full-outer-join on the
-        partition key and only the mismatch COUNT crosses to the driver
-        — at parent-cell partitioning on a 100-TB table the per-
-        partition table is 10⁵–10⁶ rows, which must not be collected."""
-        from pyspark.sql import functions as F
-
+        """Audit: recount every manifest file's rows from its Parquet
+        footer and compare each partition's sum to the manifest.  Only
+        (file, rows) pairs reach the driver, as many as the snapshot
+        already lists; a missing file raises."""
         snap = self.snapshot()
         if snap is None:
             return False
-        df = self.read(spark)
-        col = snap["partition_by"]
-        actual = df.groupBy(col).count().select(
-            F.concat(F.lit(f"{col}="), F.col(col).cast("string"))
-            .alias("partition"),
-            F.col("count").alias("actual"),
-        )
-        expected = spark.createDataFrame(
-            [(m["partition"], m["row_count"]) for m in snap["manifests"]],
-            "partition string, expected long",
-        )
-        mismatches = (
-            actual.join(expected, "partition", "full_outer")
-            .where(
-                F.col("actual").isNull() | F.col("expected").isNull()
-                | (F.col("actual") != F.col("expected"))
-            )
-            .count()
-        )
-        return mismatches == 0
+        counts = self._file_row_counts(
+            [f for m in snap["manifests"] for f in m["files"]], spark)
+        return all(sum(counts[f] for f in m["files"]) == m["row_count"]
+                   for m in snap["manifests"])

@@ -190,18 +190,286 @@ def test_icetable_append_one_file_per_partition(spark, tmp_path):
     assert [str(int(p)) for p in parents] == list(back["__dir"])
 
 
+# --- writer contract: write_partitioned against Spark's own writer -------
+
+
+def _ref_wkb_polygons(vlon, vlat):
+    """The per-vertex struct.pack encoder the vectorized one replaced."""
+    import struct
+
+    k = vlon.shape[1]
+    head = b"\x01\x03\x00\x00\x00" + struct.pack("<II", 1, k + 1)
+    return [head + b"".join(struct.pack("<dd", float(vlon[i, j % k]),
+                                        float(vlat[i, j % k]))
+                            for j in range(k + 1))
+            for i in range(vlon.shape[0])]
+
+
+def _ref_wkb_bbox(blobs):
+    """The per-blob loop the vectorized bbox replaced."""
+    xmin = ymin = np.inf
+    xmax = ymax = -np.inf
+    for b in blobs:
+        if b is None:
+            continue
+        if len(b) < 21 or b[0] != 1:
+            return None
+        geom_type = int.from_bytes(b[1:5], "little")
+        if geom_type == 1:
+            off = 5
+        elif geom_type == 3 and int.from_bytes(b[5:9], "little") == 1:
+            off = 13
+        else:
+            return None
+        if (len(b) - off) % 16 != 0:
+            return None
+        coords = np.frombuffer(b, dtype="<f8", offset=off)
+        xmin = min(xmin, coords[0::2].min())
+        xmax = max(xmax, coords[0::2].max())
+        ymin = min(ymin, coords[1::2].min())
+        ymax = max(ymax, coords[1::2].max())
+    if not np.isfinite(xmin):
+        return None
+    return [float(xmin), float(ymin), float(xmax), float(ymax)]
+
+
+def test_wkb_matches_loop_encoder():
+    import struct
+
+    import pyarrow as pa
+
+    from raster2dggs_spark.dggs import grid_lib
+    from raster2dggs_spark.sources.geoparquet import (
+        wkb_bbox, wkb_points, wkb_polygons,
+    )
+
+    lib = grid_lib("hex7")
+    rng = np.random.default_rng(5)
+    cells = lib.latlng_to_cell(rng.uniform(-179, 179, 300),
+                               rng.uniform(-80, 80, 300), 7)
+    vlon, vlat = lib.cell_to_boundary(cells)
+    poly = wkb_polygons(vlon, vlat)
+    assert poly.to_pylist() == _ref_wkb_polygons(vlon, vlat)
+    lon, lat = lib.cell_to_lonlat(cells)
+    pts = wkb_points(lon, lat)
+    assert pts.to_pylist() == [b"\x01\x01\x00\x00\x00"
+                               + struct.pack("<dd", x, y)
+                               for x, y in zip(lon, lat)]
+    # bbox: sliced, chunked, mixed-layout and null-bearing columns
+    mixed = pa.chunked_array([poly.slice(7, 50),
+                              pa.array([None, *pts.to_pylist()[:9]],
+                                       pa.binary())])
+    assert wkb_bbox(mixed) == _ref_wkb_bbox(mixed.to_pylist())
+    assert wkb_bbox(poly) == _ref_wkb_bbox(poly.to_pylist())
+    # layouts this module does not write keep the None fallback
+    two_rings = (b"\x01\x03\x00\x00\x00" + struct.pack("<II", 2, 1)
+                 + bytes(16))
+    big_endian = b"\x00\x00\x00\x00\x01" + bytes(16)
+    for odd in (two_rings, big_endian):
+        assert wkb_bbox(pa.array([poly[0].as_py(), odd])) is None
+    assert wkb_bbox(pa.array([None], pa.binary())) is None
+
+
+def test_write_output_geo_in_tasks(spark, tmp_path, monkeypatch):
+    """The geo sink writes its files and footers in the tasks: the
+    driver opens no output file, the codec is the one asked for, and
+    every file's bbox and geometry bytes are those of the loop encoder
+    over that file's own cells."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from raster2dggs_spark.api import write_output
+    from raster2dggs_spark.dggs import grid_lib
+
+    raw = _spread_raw(spark)
+    path = str(tmp_path / "geo")
+
+    def opened(*a, **k):
+        raise AssertionError("the driver opened an output file")
+
+    with monkeypatch.context() as m:
+        for name in ("read_table", "ParquetFile", "write_table"):
+            m.setattr(pq, name, opened)
+        write_output(raw, path, "hex7", 1, geo=True, compression="zstd")
+
+    lib = grid_lib("hex7")
+    cells = {format(int(p), "x"): [] for p in
+             {r.parent for r in raw.select("parent").distinct().collect()}}
+    for r in raw.select("parent", "cell").collect():
+        cells[format(int(r.parent), "x")].append(r.cell)
+    files = glob.glob(os.path.join(path, "hex7_01=*", "*.parquet"))
+    assert len(files) == len(cells)
+    for fp in files:
+        md = pq.ParquetFile(fp).metadata
+        assert {md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)} == {"ZSTD"}
+        t = pq.read_table(fp)
+        blobs = t.column("geometry").to_pylist()
+        parent = os.path.basename(os.path.dirname(fp)).split("=", 1)[1]
+        exp = _ref_wkb_polygons(*lib.cell_to_boundary(
+            np.array(cells[parent], dtype=np.int64)))
+        assert sorted(blobs) == sorted(exp)
+        geo = json.loads(t.schema.metadata[b"geo"])
+        assert geo["columns"]["geometry"]["bbox"] == _ref_wkb_bbox(exp)
+
+
+def _contract_frame(spark):
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("s", T.ShortType()),
+        T.StructField("b", T.ByteType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("txt", T.StringType()),
+        T.StructField("bin", T.BinaryType()),
+        T.StructField("flag", T.BooleanType()),
+        T.StructField("arr", T.ArrayType(T.DoubleType())),
+        T.StructField("st", T.StructType([
+            T.StructField("x", T.IntegerType()),
+            T.StructField("y", T.StringType())])),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("p", T.StringType()),
+    ])
+    rows = []
+    for k in range(40):
+        v = k % 7 != 3  # every column but the id and key has nulls
+        rows.append((
+            k, k * 1000 if v else None, k - 20 if v else None,
+            k % 100 - 50 if v else None, k / 3 if v else None,
+            k / 4 if v else None, f"t{k}" if v else None,
+            bytes([k, 255 - k]) if v else None, k % 2 == 0 if v else None,
+            [k / 2, None, -1.0] if v else None,
+            (k, f"y{k}") if v else None,
+            dt.date(2000, 1, 1) + dt.timedelta(days=37 * k) if v else None,
+            dt.datetime(2020, 5, 17, 3, 4, 5, 123456)
+            + dt.timedelta(hours=13 * k) if v else None,
+            Decimal(k * 1234) / 100 if v else None,
+            None if k % 9 == 0 else f"p{k % 3}"))
+    return spark.createDataFrame(rows, schema)
+
+
+def test_write_partitioned_schema_roundtrip(spark, tmp_path):
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    df = _contract_frame(spark)
+    ours, theirs = str(tmp_path / "ours"), str(tmp_path / "spark")
+    manifest = write_partitioned(df, ours, "p")
+    df.write.partitionBy("p").parquet(theirs)
+    a, b = spark.read.parquet(ours), spark.read.parquet(theirs)
+    assert a.schema == b.schema
+    assert a.orderBy("id").collect() == b.orderBy("id").collect()
+    assert sum(n for _, n in manifest) == df.count()
+
+
+def test_write_partitioned_dir_names_match_spark(spark, tmp_path):
+    import os
+
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    vals = ["a/b", "x=y", "50%", "c:d", "q?r", "h#s", "sp ace", "ñandú 地",
+            "", None, "plain", "".join(chr(c) for c in range(1, 128))]
+    df = spark.createDataFrame([(v, i) for i, v in enumerate(vals)],
+                               "k string, v long")
+    ours, theirs = str(tmp_path / "ours"), str(tmp_path / "spark")
+    write_partitioned(df, ours, "k")
+    df.write.partitionBy("k").parquet(theirs)
+    dirs = lambda p: sorted(d for d in os.listdir(p)  # noqa: E731
+                            if os.path.isdir(os.path.join(p, d)))
+    assert dirs(ours) == dirs(theirs)
+    assert len(dirs(ours)) == len(vals) - 1  # "" and null share a dir
+    got = spark.read.parquet(ours).orderBy("v").collect()
+    assert got == spark.read.parquet(theirs).orderBy("v").collect()
+
+
+def test_write_partitioned_commit_and_modes(spark, tmp_path):
+    """Only the manifest's files are published: a stray file staged
+    under _temporary stays out and _temporary is gone after the write;
+    append keeps the old files, overwrite replaces them."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    path = str(tmp_path / "t")
+    df = spark.range(60).select((F.col("id") % 3).cast("string").alias("k"),
+                                F.col("id"))
+    stray = os.path.join(path, "_temporary", "crashed", "k=0", "part-x.parquet")
+    os.makedirs(os.path.dirname(stray))
+    pq.write_table(pa.table({"id": [-1]}), stray)
+
+    files = lambda: sorted(  # noqa: E731
+        os.path.relpath(f, path)
+        for f in glob.glob(os.path.join(path, "*", "*.parquet")))
+    first = write_partitioned(df, path, "k")
+    assert [p for p, _ in first] == files()
+    assert [n for _, n in first] == [20, 20, 20]
+    assert not os.path.exists(os.path.join(path, "_temporary"))
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert spark.read.parquet(path).count() == 60
+
+    second = write_partitioned(df.where("id < 30"), path, "k", mode="append")
+    assert files() == sorted(p for p, _ in first + second)
+    assert spark.read.parquet(path).count() == 90
+
+    third = write_partitioned(df.where("id < 6"), path, "k")
+    assert files() == [p for p, _ in third]
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) \
+        == list(range(6))
+    with pytest.raises(ValueError, match="mode"):
+        write_partitioned(df, path, "k", mode="ignore")
+
+
+def test_write_partitioned_dictionary_choice(spark, tmp_path):
+    """A low-cardinality string column keeps its dictionary; a unique
+    id column is written PLAIN, as parquet-mr falls back to, so the
+    files are no larger than Spark's own."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    df = spark.range(2000).select(
+        (F.col("id") % 2).alias("p"), F.format_string("%016x", "id").alias("uid"),
+        (F.col("id") % 5).cast("string").alias("cls"))
+    path = str(tmp_path / "d")
+    write_partitioned(df, path, "p")
+    for fp in glob.glob(os.path.join(path, "p=*", "*.parquet")):
+        md = pq.ParquetFile(fp).metadata
+        cols = {md.schema.column(c).name: md.row_group(0).column(c)
+                for c in range(md.num_columns)}
+        assert cols["cls"].has_dictionary_page
+        assert not cols["uid"].has_dictionary_page
+        assert b"ARROW:schema" not in (md.metadata or {})
+
+
 def test_no_partitioned_write_outside_layout():
     """Every hive-partitioned write goes through
-    plans/layout.write_partitioned: no other package module calls a
-    writer's ``partitionBy`` (``Window.partitionBy`` is not a write)."""
+    plans/layout.write_partitioned, which writes with pyarrow in the
+    tasks: no package module, layout.py included, calls a writer's
+    ``partitionBy`` (``Window.partitionBy`` is not a write)."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "raster2dggs_spark"
     hits = []
     for path in sorted(pkg.rglob("*.py")):
-        if path == pkg / "plans" / "layout.py":
-            continue
         for node in ast.walk(ast.parse(path.read_text())):
             if not (isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
