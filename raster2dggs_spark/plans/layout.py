@@ -74,9 +74,8 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
 _ESCAPED = (frozenset(chr(c) for c in range(1, 32))
             | frozenset('"#%\'*/:=?\\\x7f{[]^'))
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-# parquet-mr's default row-group size; an unstamped file flushes a row
-# group whenever this much is buffered
-_ROW_GROUP_BYTES = 128 << 20
+# Hadoop's object-store schemes that pyarrow serves under another name
+_SCHEMES = {"s3a": "s3", "s3n": "s3"}
 
 
 def escape_path_name(name: str) -> str:
@@ -93,47 +92,32 @@ def _dictionary_columns(t: pa.Table) -> list[str]:
             and 2 * pc.count_distinct(c).as_py() <= len(t)]
 
 
-class _PartFile:
-    """One output file of a write task.  Batches are buffered and written
-    as row groups; a stamped file is buffered to its close, because
-    pyarrow fixes the footer metadata when the writer opens."""
+def _part_name(ctx, job: str, codec: str) -> str:
+    """A task's file name.  ``taskAttemptId`` is unique in the
+    application; ``attemptNumber`` restarts at 0 when a stage is
+    resubmitted, so an old and a new attempt of one partition, both
+    still running, would write the same file."""
+    ext = "" if codec == "none" else f".{codec}"
+    return (f"part-{ctx.partitionId():05d}-{job}-"
+            f"a{ctx.taskAttemptId()}{ext}.parquet")
 
-    def __init__(self, fs, stage: str, rel: str, codec: str, stamp):
-        self.fs, self.path, self.rel = fs, f"{stage}/{rel}", rel
-        self.codec, self.stamp = codec, stamp
-        self.batches, self.buffered, self.rows = [], 0, 0
-        self.writer = None
 
-    def add(self, batch: pa.RecordBatch) -> None:
-        self.batches.append(batch)
-        self.buffered += batch.nbytes
-        self.rows += batch.num_rows
-        if self.stamp is None and self.buffered >= _ROW_GROUP_BYTES:
-            self._flush(pa.Table.from_batches(self.batches))
-
-    def _flush(self, t: pa.Table, meta=None) -> None:
-        if self.writer is None:
-            schema = t.schema
-            if meta:
-                schema = schema.with_metadata({**(schema.metadata or {}),
-                                               **meta})
-            self.fs.create_dir(posixpath.dirname(self.path))
-            # pyarrow 16 writes footer key-values only beside its own
-            # ARROW:schema blob, which unstamped files leave out
-            self.writer = pq.ParquetWriter(
-                self.path, schema, filesystem=self.fs,
-                compression=self.codec,
-                use_dictionary=_dictionary_columns(t),
-                store_schema=bool(meta))
-        self.writer.write_table(t)
-        self.batches, self.buffered = [], 0
-
-    def close(self) -> tuple[str, int]:
-        if self.batches:
-            t = pa.Table.from_batches(self.batches)
-            self._flush(t, self.stamp(t) if self.stamp else None)
-        self.writer.close()
-        return self.rel, self.rows
+def _write_file(fs, path: str, batches, codec: str, stamp) -> int:
+    """Write one output file from its buffered batches: at most one
+    AQE-sized task input.  Buffering to the close lets ``stamp`` see the
+    file's rows, since pyarrow fixes the footer metadata when the writer
+    opens."""
+    t = pa.Table.from_batches(batches)
+    meta = stamp(t) if stamp else None
+    if meta:
+        t = t.replace_schema_metadata({**(t.schema.metadata or {}), **meta})
+    fs.create_dir(posixpath.dirname(path))
+    # pyarrow 16 writes footer key-values only beside its own
+    # ARROW:schema blob, which unstamped files leave out
+    pq.write_table(t, path, filesystem=fs, compression=codec,
+                   use_dictionary=_dictionary_columns(t),
+                   store_schema=bool(meta))
+    return t.num_rows
 
 
 def _write_task(batches, fs, stage: str, col: str, codec: str, stamp,
@@ -143,12 +127,15 @@ def _write_task(batches, fs, stage: str, col: str, codec: str, stamp,
     Yields the task's manifest, one (relative path, rows) per file."""
     from pyspark import TaskContext
 
-    ctx = TaskContext.get()
-    ext = "" if codec == "none" else f".{codec}"
-    name = (f"part-{ctx.partitionId():05d}-{job}-"
-            f"a{ctx.attemptNumber()}{ext}.parquet")
+    name = _part_name(TaskContext.get(), job, codec)
     prefix = escape_path_name(col) + "="
-    out, cur, done = None, None, []
+    cur, buf, done = None, [], []
+
+    def close():
+        rel = f"{cur}/{name}"
+        done.append((rel, _write_file(fs, f"{stage}/{rel}", buf, codec,
+                                      stamp)))
+
     for b in batches:
         runs = pc.run_end_encode(b.column(col))
         data = b.drop_columns([col])
@@ -157,17 +144,38 @@ def _write_task(batches, fs, stage: str, col: str, codec: str, stamp,
                           runs.values.to_pylist()):
             d = prefix + (escape_path_name(v) if v else _DEFAULT_PARTITION)
             if d != cur:
-                if out is not None:
-                    done.append(out.close())
-                out, cur = _PartFile(fs, stage, f"{d}/{name}", codec,
-                                     stamp), d
-            out.add(data.slice(start, end - start))
+                if buf:
+                    close()
+                cur, buf = d, []
+            buf.append(data.slice(start, end - start))
             start = end
-    if out is not None:
-        done.append(out.close())
+    if buf:
+        close()
     yield pa.RecordBatch.from_arrays(
         [pa.array([p for p, _ in done], pa.string()),
          pa.array([n for _, n in done], pa.int64())], ["path", "rows"])
+
+
+def _filesystem(path: str):
+    """The ``pyarrow.fs`` filesystem and root for a Spark output path:
+    a plain or ``file:`` path is local, ``s3a://``/``s3n://`` are
+    ``s3://``, any other ``scheme://`` is whatever pyarrow serves."""
+    if path[:5].lower() == "file:":
+        path = path[5:]
+        if path.startswith("//"):
+            host, _, rest = path[2:].partition("/")
+            if host not in ("", "localhost"):
+                raise ValueError(f"cannot write Parquet to {host!r} "
+                                 f"through a file: path")
+            path = "/" + rest
+    if "://" not in path:
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+    scheme, rest = path.split("://", 1)
+    try:
+        return pafs.FileSystem.from_uri(
+            f"{_SCHEMES.get(scheme.lower(), scheme)}://{rest}")
+    except pa.ArrowException as e:
+        raise ValueError(f"cannot write Parquet to {path!r}: {e}") from e
 
 
 def _remove(fs, path: str) -> None:
@@ -198,8 +206,8 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str,
     through the one ``pyarrow.fs`` filesystem resolved from ``path``.
 
     ``stamp(table) -> {key: value}`` merges footer metadata computed
-    from each file's own rows (the whole file is then buffered in its
-    task: at most one AQE-sized task input)."""
+    from each file's own rows.  Each file is buffered in its task up to
+    its close: at most one AQE-sized task input."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     spark = df.sparkSession
@@ -209,8 +217,7 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str,
         codec = "none"
     if codec != "none" and not pa.Codec.is_available(codec):
         raise ValueError(f"Parquet codec {codec!r} is not available")
-    fs, root = pafs.FileSystem.from_uri(
-        path if "://" in path else os.path.abspath(path))
+    fs, root = _filesystem(path)
     job = uuid.uuid4().hex
     stage = f"{root}/_temporary/{job}"
     fs.create_dir(stage)

@@ -434,6 +434,45 @@ def test_write_partitioned_commit_and_modes(spark, tmp_path):
         write_partitioned(df, path, "k", mode="ignore")
 
 
+def test_part_name_from_task_attempt_id():
+    """A resubmitted stage restarts attemptNumber at 0, so the file name
+    carries the application-unique taskAttemptId: two live attempts of
+    one partition never write the same file."""
+    from types import SimpleNamespace
+
+    from raster2dggs_spark.plans.layout import _part_name
+
+    def ctx(tid):
+        return SimpleNamespace(partitionId=lambda: 3,
+                               attemptNumber=lambda: 0,
+                               taskAttemptId=lambda: tid)
+
+    assert _part_name(ctx(17), "j", "zstd") == "part-00003-j-a17.zstd.parquet"
+    assert _part_name(ctx(18), "j", "none") == "part-00003-j-a18.parquet"
+
+
+def test_write_partitioned_path_schemes(spark, tmp_path, monkeypatch):
+    """A ``file:`` path is the local path Spark resolves it to; a scheme
+    pyarrow serves no filesystem for is refused before any write."""
+    import glob
+    import os
+
+    from raster2dggs_spark.plans.layout import write_partitioned
+
+    monkeypatch.chdir(tmp_path)
+    df = spark.range(12).select((F.col("id") % 2).alias("k"), "id")
+    for uri in (f"file:{tmp_path}/a", f"file://{tmp_path}/b"):
+        manifest = write_partitioned(df, uri, "k")
+        out = uri.split(":", 1)[1].lstrip("/")
+        assert sorted(os.path.relpath(f, "/" + out) for f in glob.glob(
+            os.path.join("/" + out, "k=*", "*.parquet"))) \
+            == [p for p, _ in manifest]
+        assert spark.read.parquet(uri).count() == 12
+    assert sorted(os.listdir(tmp_path)) == ["a", "b"]
+    with pytest.raises(ValueError, match="cannot write Parquet"):
+        write_partitioned(df, "nosuchfs://bucket/t", "k")
+
+
 def test_write_partitioned_dictionary_choice(spark, tmp_path):
     """A low-cardinality string column keeps its dictionary; a unique
     id column is written PLAIN, as parquet-mr falls back to, so the
