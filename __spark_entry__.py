@@ -3811,10 +3811,8 @@ def q_audio_features(spark, sf_dir):
 
 
 def q_windowed_events(spark, sf_dir):
-    """Batch analogue of streaming.windowed_event_stats (tumbling 1h
-    windows); date_trunc on the NTZ timestamp keeps it timezone-free so
-    the DuckDB twin is exact.  The streaming variant (watermark +
-    window()) is equivalence-tested in pytest."""
+    """Event stats per tumbling 1h window; date_trunc on the NTZ
+    timestamp keeps it timezone-free so the DuckDB twin is exact."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).cast("string").alias("window_start"),
@@ -3830,9 +3828,7 @@ def q_zonal_windowed_events(spark, sf_dir):
     (integer arithmetic on event_id), are spatially joined to zones via
     the full PIP machinery (cover cells + ray-cast refinement), then
     aggregated per (hour window, zone).  The oracle reduces the geometry
-    to BETWEEN (rect zones) and the window to date_trunc — both exact.
-    The streaming twin (broadcast cell cover + watermarked window) is
-    equivalence-tested in pytest."""
+    to BETWEEN (rect zones) and the window to date_trunc — both exact."""
     from raster2dggs_spark.operators.joins import point_in_polygon_join
 
     ev = _t(spark, sf_dir, "events").select(
@@ -3859,11 +3855,10 @@ def q_zonal_windowed_events(spark, sf_dir):
 
 
 def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (batch plan; the applyInPandasWithState
-    streaming twin is equivalence-tested in pytest).  Timestamps emitted
-    as wall-clock strings (tz-safe: NTZ→LTZ→string round-trips in any
-    session timezone)."""
-    from raster2dggs_spark.streaming.sessions import sessionize_batch
+    """Gap-based sessionization (temporal.sessionize_batch).  Timestamps
+    emitted as wall-clock strings (tz-safe: NTZ→LTZ→string round-trips
+    in any session timezone)."""
+    from raster2dggs_spark.operators.temporal import sessionize_batch
 
     ev = _t(spark, sf_dir, "events")
     out = sessionize_batch(ev, gap_seconds=900)

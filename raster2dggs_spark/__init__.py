@@ -17,7 +17,6 @@ Layout
                   aggregation surface, spatial joins (PIP / kNN / zonal),
                   compaction, dedup / text / similarity pipelines.
 - ``plans``     — skew-aware (salted) aggregation helpers, checkpoint/lineage.
-- ``streaming`` — Structured Streaming analogues of the batch aggregations.
 """
 
 __version__ = "0.1.0"

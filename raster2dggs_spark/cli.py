@@ -188,7 +188,14 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     import os
 
-    if os.path.exists(args.output_directory) and not args.overwrite:
+    from pyarrow.fs import FileType
+
+    from raster2dggs_spark.plans.layout import _filesystem
+
+    # resolved as the writer resolves it, so file: paths are seen too
+    fs, root = _filesystem(args.output_directory)
+    if fs.get_file_info(root).type != FileType.NotFound \
+            and not args.overwrite:
         raise SystemExit(
             f"{args.output_directory} exists; pass -o/--overwrite")
 

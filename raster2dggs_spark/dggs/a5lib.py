@@ -371,17 +371,6 @@ def get_num_children(parent_res: int, child_res: int) -> int:
     return n
 
 
-def cell_to_children_size(cells, child_res: int):
-    """Vectorized per-cell children count at ``child_res``."""
-    res = get_resolution(cells)
-    if np.any(child_res < res):
-        raise ValueError("child_res must be >= cell res")
-    out = np.empty(res.shape[0], dtype=np.int64)
-    for r in np.unique(res):
-        out[res == r] = get_num_children(int(r), child_res)
-    return out
-
-
 def cell_to_children(cells, child_res: int):
     """All descendants at ``child_res``, cell-major: the base-4 digits
     of levels res+1..child_res are appended below the MSB-aligned field

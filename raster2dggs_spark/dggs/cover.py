@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs import RECT_GRIDS, grid_lib, h3lib
+from raster2dggs_spark.dggs import RECT_GRIDS, grid_lib
 
 
 def wrap_lon(lon):
@@ -48,10 +48,11 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
                dggs: str = "hex7", max_samples: int = 4_000_000):
     """All cells (any grid) whose center lies in [lon_min,lon_max) x
     [lat_min,lat_max) — reference cells_in_bbox semantics."""
-    if dggs == "hex7":  # keeps h3lib's tuned lattice
-        return h3lib.cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
-                                max_samples=max_samples)
     lib = grid_lib(dggs)
+    own = getattr(lib, "cover_bbox", None)  # a grid's own tuned cover
+    if own is not None:
+        return own(lon_min, lat_min, lon_max, lat_max, res,
+                   max_samples=max_samples)
     if dggs in RECT_GRIDS:
         # EXACT enumeration of the index lattice (quadkey's degree pitch
         # is latitude-dependent, so sampling would be wrong near ±85°)

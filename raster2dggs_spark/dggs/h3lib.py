@@ -19,8 +19,9 @@ near-seam boundary micro-shape may therefore differ from libh3; hierarchy,
 determinism and the equal-area statistics are preserved, and every cell id
 is stable across processes/executors (pure function of the constants).
 Pentagons (icosahedron-vertex base cells) are flagged, but the digit tree
-is uniformly 7-ary (no deleted-K subsequence) — ``children_size`` is
-``7**n`` everywhere, which simplifies compaction (SURVEY.md §2.4 A16).
+is uniformly 7-ary (no deleted-K subsequence) — a cell has ``7**n``
+children ``n`` levels down everywhere, which simplifies compaction
+(SURVEY.md §2.4 A16).
 
 Everything is vectorized NumPy — safe under Spark's executor threads by
 construction (no shared mutable state; cf. the reference's module locks,
@@ -107,13 +108,7 @@ _DIGIT_CCW = np.array([0, 5, 3, 1, 6, 4, 2], dtype=np.int64)  # rotate 60° ccw
 _DIGIT_CW = np.array([0, 3, 6, 2, 5, 1, 4], dtype=np.int64)
 
 # --- bit layout (exact H3) --------------------------------------------
-_MODE_CELL = np.uint64(1)
 _H3_INIT = np.uint64(0x08001FFFFFFFFFFF)  # mode=1, res=0, bc=0, digits=7
-
-
-def _pos_angle(a):
-    tau = 2.0 * np.pi
-    return np.mod(np.mod(a, tau) + tau, tau)
 
 
 def _geo_azimuth(lat1, lon1, lat2, lon2):
@@ -173,15 +168,6 @@ def _axial_to_hex2d(a, b):
     return af - 0.5 * bf, bf * M_SIN60
 
 
-def _rdiv7(t):
-    """round(t/7) half-away-from-zero in pure integer arithmetic (exact:
-    t/7 can never be a .5 tie for integer t, so this matches C lround —
-    np.round's banker's rounding would be wrong on hypothetical ties)."""
-    ta = np.abs(t)
-    q = (2 * ta + 7) // 14
-    return np.where(t >= 0, q, -q)
-
-
 def _rdiv7_f(x):
     """round(x/7) for float64 arrays holding exact integers — one fused
     multiply/floor instead of abs + 2·mul + div + where (measured ~2x on
@@ -193,26 +179,19 @@ def _rdiv7_f(x):
     return np.floor(x * (1.0 / 7.0) + 0.5)
 
 
-def _up_ap7(a, b, class3: bool):
-    """One aperture-7 coarsening step on axial coords (vectorized,
-    integer-only)."""
-    if class3:
-        return _rdiv7(3 * a - b), _rdiv7(a + 2 * b)
-    return _rdiv7(2 * a + b), _rdiv7(3 * b - a)
-
-
 def _up_ap7_f(a, b, class3: bool):
-    """Float64 twin of :func:`_up_ap7` for the encode digit loop — the
-    linear combinations of small integers are exact in float64 and
-    :func:`_rdiv7_f` matches :func:`_rdiv7` bit-for-bit on this domain
-    (validated by the seam round-trip battery + known-vector tests)."""
+    """One aperture-7 coarsening step on axial coords, in float64 for
+    the encode digit loop — the linear combinations of small integers
+    are exact in float64 and :func:`_rdiv7_f` rounds them exactly on
+    this domain (validated by the seam round-trip battery +
+    known-vector tests)."""
     if class3:
         return _rdiv7_f(3.0 * a - b), _rdiv7_f(a + 2.0 * b)
     return _rdiv7_f(2.0 * a + b), _rdiv7_f(3.0 * b - a)
 
 
 def _down_ap7(a, b, class3: bool):
-    # exact inverses of _up_ap7: class III (ccw) [[2,1],[-1,3]],
+    # exact inverses of _up_ap7_f: class III (ccw) [[2,1],[-1,3]],
     # class II (cw) [[3,-1],[1,2]]
     if class3:
         return 2 * a + b, 3 * b - a
@@ -494,9 +473,9 @@ def _latlng_to_cell_chunk(lon_deg, lat_deg, res: int):
     x = rp * cos_t
     y = rp * sin_t
     # digit loop in float64: every axial coord is an exact small integer
-    # (< 2^24 at MAX_RES), so the float twins reproduce the integer path
-    # bit-for-bit while skipping the int64 division and astype churn of
-    # _rdiv7 (~2x on the loop, ~20% on the whole encode — round 8)
+    # (< 2^24 at MAX_RES), so float64 reproduces integer arithmetic
+    # bit-for-bit while skipping int64 division and astype churn (~2x on
+    # the loop, ~20% on the whole encode — round 8)
     a, b = _hex2d_to_axial_f(x, y)
 
     digits = np.zeros((n, res), dtype=np.int64) if res else np.zeros((n, 0), np.int64)
@@ -748,12 +727,6 @@ def cell_to_center_child(cells, child_res: int):
     return h.astype(np.int64)
 
 
-def children_size(cells, child_res: int):
-    """7**(child_res - res) — uniform 7-ary tree (see module docstring)."""
-    res = get_resolution(cells)
-    return np.int64(7) ** (np.int64(child_res) - res)
-
-
 def cell_to_children(cells, child_res: int):
     """All 7^(child_res−res) children of each cell (uniform 7-ary tree —
     the hex7 contract, so no pentagon digit-1 exclusions).  Input cells
@@ -781,20 +754,6 @@ def cell_to_children(cells, child_res: int):
         pat |= (tmp % np.uint64(7)) << shift
         tmp //= np.uint64(7)
     return (base[:, None] | pat[None, :]).ravel().astype(np.int64)
-
-
-def is_pentagon(cells):
-    c = np.asarray(cells).astype(np.uint64)
-    bc = get_base_cell(c)
-    res = get_resolution(c)
-    pent = _BASE_IS_PENT[bc]
-    # pentagon cell = pentagon base cell with all-zero digits
-    allzero = np.ones_like(pent, dtype=bool)
-    for rr in range(1, MAX_RES + 1):
-        shift = np.uint64(3 * (MAX_RES - rr))
-        dig = ((c >> shift) & np.uint64(7)).astype(np.int64)
-        allzero &= (dig == 0) | (rr > res)
-    return pent & allzero
 
 
 def is_valid_cell(cells):
@@ -915,24 +874,3 @@ def cell_area_m2(cells, radius_m: float = 6371007.1809):
     phi2 = np.roll(phi, -1, axis=1)
     s = np.sum((lam2 - lam) * (np.sin(phi) + np.sin(phi2)), axis=1)
     return 0.5 * radius_m * radius_m * np.abs(s)
-
-
-def cover_disk(lon, lat, radius_m, res: int, earth_radius_m: float = 6371007.1809):
-    """Cells within ``radius_m`` of a point (center-distance semantics) —
-    the radius-expansion analogue of ``grid_disk`` ring expansion used for
-    kNN candidate generation (SURVEY.md §2.3 J6)."""
-    ang = radius_m / earth_radius_m
-    pitch = cell_pitch_rad(res) * 0.35
-    steps = int(np.ceil(ang / pitch)) + 1
-    rr = np.linspace(0.0, ang, steps + 1)
-    pts_lat = [np.array([np.radians(lat)])]
-    pts_lon = [np.array([np.radians(lon)])]
-    for rad in rr[1:]:
-        k = max(6, int(np.ceil(2 * np.pi * rad / pitch)))
-        az = np.linspace(0.0, 2 * np.pi, k, endpoint=False)
-        la, lo = _geo_az_distance(np.radians(lat), np.radians(lon), az, rad)
-        pts_lat.append(la)
-        pts_lon.append(lo)
-    glat = np.degrees(np.concatenate(pts_lat))
-    glon = np.degrees(np.concatenate(pts_lon))
-    return _sample_cover(glon, glat, res)

@@ -247,28 +247,14 @@ def cell_to_lonlat(cell):
     return lon, lat
 
 
-def range_min_max(cell):
-    """(range_min, range_max) leaf bounds — containment check via range."""
-    c = np.asarray(cell).astype(np.uint64)
-    lsb = c & (~c + np.uint64(1))
-    lo = c - lsb + np.uint64(1)
-    hi = c + lsb - np.uint64(1)
-    return lo.astype(np.int64), hi.astype(np.int64)
-
-
 def contains(parent_cell, cell):
-    lo, hi = range_min_max(parent_cell)
+    """Whether ``cell`` lies in ``parent_cell``'s leaf range."""
+    p = np.asarray(parent_cell).astype(np.uint64)
+    lsb = p & (~p + np.uint64(1))
+    lo = (p - lsb + np.uint64(1)).astype(np.int64)
+    hi = (p + lsb - np.uint64(1)).astype(np.int64)
     c = np.asarray(cell)
     return (c >= lo) & (c <= hi)
-
-
-def cell_to_token(cell):
-    """Canonical s2 token: hex of the id with trailing zeros stripped."""
-    out = []
-    for c in np.asarray(cell).astype(np.uint64).ravel():
-        tok = format(int(c), "016x").rstrip("0")
-        out.append(tok or "X")
-    return out
 
 
 def cell_to_boundary(cell):

@@ -56,28 +56,6 @@ def with_hilbert_key(df: DataFrame, gx_col: str, gy_col: str,
     return cur.select(*keep, F.col("__hd").alias(out_col))
 
 
-def hilbert_cluster(cells_df: DataFrame, dggs: str = "geohash",
-                    cell_col: str = "cell",
-                    order: int | None = None) -> DataFrame:
-    """Attach ``hkey`` (the Hilbert position of the cell's lattice
-    coordinates) and range-partition + sort by it — ready for a
-    locality-clustered write (per-file min/max stats become tight
-    prune predicates for bbox scans).  ``order`` defaults to the
-    smallest grid covering the observed lattice extent."""
-    from raster2dggs_spark.operators.focal import lattice_indices
-
-    lat = lattice_indices(cells_df, cell_col, dggs)
-    if order is None:
-        head = lat.select(F.max("gx").alias("mx"),
-                          F.max("gy").alias("my")).first()
-        order = max(int(head["mx"]), int(head["my"]), 1).bit_length()
-    out = with_hilbert_key(lat, "gx", "gy", order)
-    out = out.drop("gx", "gy", "gprec")
-    np_ = max(cells_df.sparkSession.sparkContext.defaultParallelism, 1)
-    return (out.repartitionByRange(np_, "hkey")
-            .sortWithinPartitions("hkey"))
-
-
 def hilbert_sql_ctes(base: str, carry: list, order: int,
                      first_cte: str = "hl") -> tuple[str, str]:
     """Generated SQL twin: a chain of CTE definitions (one per bit

@@ -189,27 +189,6 @@ def hist_binned_edges(df: DataFrame, keys: list[str], val: str, edges: list[floa
     )
 
 
-def pack_histogram(hist: DataFrame, keys: list[str], value_col: str = "value",
-                   weight_col: str = "weight", out: str = "histogram") -> DataFrame:
-    """Output-edge packing of an exploded histogram into the reference's
-    struct form ``{values: array, counts: array}`` with values ascending
-    (histogram.py:53-73 categorical schema).  Keep histograms exploded
-    through the pipeline (shuffle-friendly); pack only for export."""
-    g = hist.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(value_col).alias("v"),
-                                    F.col(weight_col).alias("w")))
-        ).alias("__p")
-    )
-    return g.select(
-        *keys,
-        F.struct(
-            F.col("__p.v").alias("values"),
-            F.col("__p.w").alias("counts"),
-        ).alias(out),
-    )
-
-
 def hist_normalize(hist: DataFrame, keys: list[str], weight_col: str = "weight",
                    out: str = "weight_frac") -> DataFrame:
     """A11 VALID_OVERLAP normalization: weight / total weight per group."""
@@ -374,30 +353,6 @@ def hist_normalize_cell_area(hist: DataFrame, res: int, dggs: str = "hex7",
         return pd.Series(lib.cell_area_m2(c.values))
 
     return hist.withColumn(out, F.col(weight_col) / area_m2(cell_col))
-
-
-def pack_fractions(df: DataFrame, keys: list[str], class_col: str = "class",
-                   fraction_col: str = "fraction",
-                   out: str = "fractions") -> DataFrame:
-    """Output-edge packing of exploded class fractions into the
-    reference's FRACTIONS struct ``{classes: array<long>, fractions:
-    array<double>}`` with classes ascending (common.py:487-494).  Keep
-    fractions exploded through the pipeline; pack only for export."""
-    g = df.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(F.struct(
-                F.col(class_col).cast("long").alias("c"),
-                F.col(fraction_col).cast("double").alias("f"),
-            ))
-        ).alias("__p")
-    )
-    return g.select(
-        *keys,
-        F.struct(
-            F.col("__p.c").alias("classes"),
-            F.col("__p.f").alias("fractions"),
-        ).alias(out),
-    )
 
 
 def crosstab_cells(a: DataFrame, b: DataFrame, cell_col: str = "cell",

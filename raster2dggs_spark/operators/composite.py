@@ -97,9 +97,6 @@ def composite_cells(
     )
 
 
-CHANGE_CLASSES = ("gain", "loss", "stable", "new", "gone")
-
-
 def change_cells(
     scene_cells: DataFrame,
     value_cols: list[str],

@@ -116,12 +116,6 @@ def lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
     return cells_df.mapInPandas(fn, out_schema)
 
 
-def geohash_lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
-                            ) -> DataFrame:
-    """Back-compat alias of :func:`lattice_indices` for geohash."""
-    return lattice_indices(cells_df, cell_col, "geohash")
-
-
 def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
                   agg: str = "mean", cell_col: str = "cell",
                   keep_indices: bool = False,
@@ -462,38 +456,6 @@ def focal_metric(points: DataFrame, value_cols: list[str], radius_m: float,
     out = points.join(gathered, points[key_col] == gathered["r_key"])
     focal_cols = ([f"focal_{c}" for c in value_cols] if agg != "count" else [])
     return out.select(*points.columns, *focal_cols, "n_window")
-
-
-def focal_cells(cells_df: DataFrame, value_cols: list[str], res: int,
-                dggs: str, radius_m: float | None = None, k: int = 1,
-                agg: str = "mean", cell_col: str = "cell") -> DataFrame:
-    """Focal aggregate over a cell-indexed table on ANY grid: attaches
-    cell centers and runs the metric window (default radius: k ring
-    pitches + a half — the metric analogue of a k-ring).  For geohash,
-    prefer :func:`focal_lattice` (exact window semantics)."""
-    from raster2dggs_spark.dggs import cover
-
-    if radius_m is None:
-        pitch_m = np.radians(grid_lib(dggs).pitch_deg(res)) * EARTH_R
-        radius_m = (k + 0.5) * float(pitch_m)
-    schema = T.StructType(
-        list(cells_df.schema.fields)
-        + [T.StructField("lon", T.DoubleType(), False),
-           T.StructField("lat", T.DoubleType(), False)])
-
-    def ctr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon, lat = cover.cell_center(pdf[cell_col].values, dggs)
-            pdf = pdf.copy()
-            pdf["lon"] = lon
-            pdf["lat"] = lat
-            yield pdf
-
-    pts = cells_df.mapInPandas(ctr, schema)
-    out = focal_metric(pts, value_cols, radius_m, agg=agg, key_col=cell_col)
-    return out.drop("lon", "lat")
 
 
 def zonal_geometry(cells_df: DataFrame, zone_col: str,

@@ -203,13 +203,6 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
 # Spark-side operators
 # ---------------------------------------------------------------------------
 
-POLY_SCHEMA = T.StructType([
-    T.StructField("poly_id", T.LongType(), False),
-    T.StructField("xs", T.ArrayType(T.DoubleType()), False),
-    T.StructField("ys", T.ArrayType(T.DoubleType()), False),
-])
-
-
 def index_points(points: DataFrame, res: int, dggs: str = "hex7",
                  lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Add a ``cell`` column (Arrow-vectorized batch encode; a *map*, not

@@ -46,8 +46,6 @@ from raster2dggs_spark.operators.indexing import (
     _prune,
 )
 
-OPS = ("weighted_mean", "weighted_sum", "mass_sum", "fractions", "mode")
-
 
 def _subsample_grid(affine, w, h, crs, s):
     """lon/lat of all w*h*s*s subsample centres + parent-pixel index."""

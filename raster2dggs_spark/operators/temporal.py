@@ -310,3 +310,32 @@ def cohort_retention(events: DataFrame, entity_col: str = "user_id",
                     .alias("cohort_size"),
                     F.round(F.col("n_active") / F.col("cohort_size"), 6)
                     .alias("retention")))
+
+
+def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """(user_id, session_idx, n_events, start_ts, end_ts) per session —
+    a new session starts when the gap to the previous event exceeds
+    ``gap_seconds``.  session_idx is 0-based per user in time order.
+    Lag + cumulative sum over a per-user window: native expressions
+    only, exactly reproducible in ANSI SQL."""
+    e = events.select(
+        "user_id", F.col("ts").cast("timestamp").alias("ts")
+    )
+    w = Window.partitionBy("user_id").orderBy("ts")
+    # microsecond gap arithmetic, so sub-second events sessionize exactly
+    gap = (
+        F.unix_micros("ts")
+        - F.unix_micros(F.lag("ts").over(w))
+    )
+    marked = e.withColumn(
+        "__new",
+        F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0),
+    )
+    sess = marked.withColumn(
+        "session_idx", F.sum("__new").over(w).cast("long") - 1
+    )
+    return sess.groupBy("user_id", "session_idx").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("start_ts"),
+        F.max("ts").alias("end_ts"),
+    )

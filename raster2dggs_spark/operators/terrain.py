@@ -689,24 +689,6 @@ def horizon_cells(
     return _prune(images, keep_image_id).mapInPandas(fn, schema)
 
 
-def terrain_point_agg(images: DataFrame, res: int, dggs: str = "hex7",
-                      parent_res: int | None = None, **kw) -> DataFrame:
-    """Mean slope/aspect/hillshade per cell — one exchange (aspect is a
-    circular quantity; the plain mean here matches the oracle's
-    definition and is documented as such — use vector averaging
-    downstream if wrap-aware means are needed)."""
-    px = terrain_cells(images, res, dggs, parent_res, **kw)
-
-    def _nn(c):  # NaN-aware mean (flat pixels carry NaN aspect)
-        col = F.col(c)
-        return F.avg(F.when(F.isnan(col), None).otherwise(col)).alias(c)
-
-    return px.groupBy("parent", "cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        _nn("slope_deg"), _nn("aspect_deg"), _nn("hillshade"),
-    )
-
-
 def viewshed(z: np.ndarray, observer: tuple, obs_height: float = 0.0):
     """Tile-local line-of-sight viewshed (GRASS ``r.viewshed`` /
     ArcGIS Viewshed, the R3 formulation): a pixel is VISIBLE from the

@@ -11,12 +11,14 @@ version of the reference's idempotent stage-1 store
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from raster2dggs_spark.plans.layout import write_partitioned
+from raster2dggs_spark.plans.layout import (
+    _DEFAULT_PARTITION,
+    unescape_path_name,
+    write_partitioned,
+)
 from raster2dggs_spark.sources.icetable import IceTable
 
 
@@ -43,13 +45,14 @@ def checkpointed_write(
     ``fail_before_commit`` writes the data files then raises (crash
     before any commit — the orphan-duplication scenario)."""
     done = table.committed_partitions()
-    done_vals = [p.split("=", 1)[1] for p in done]
+    # committed names are escaped (a/b -> a%2Fb); compare raw values
+    done_vals = [unescape_path_name(p.split("=", 1)[1]) for p in done]
     # null-safe partition key: isin() is NULL (dropped) for null keys,
     # which would silently lose the __HIVE_DEFAULT_PARTITION__ rows on
-    # resume — coalesce to the hive null-partition token first (that is
-    # also exactly the directory name a committed null partition has)
-    key = F.coalesce(F.col(partition_by).cast("string"),
-                     F.lit("__HIVE_DEFAULT_PARTITION__"))
+    # resume — map null and "" to the hive null-partition token first
+    # (the writer files both under that directory name)
+    key = F.coalesce(F.nullif(F.col(partition_by).cast("string"), F.lit("")),
+                     F.lit(_DEFAULT_PARTITION))
     todo = df
     if done_vals:
         todo = df.where(~key.isin(done_vals))

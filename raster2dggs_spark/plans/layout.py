@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import os
 import posixpath
+import re
 import uuid
 
 import pyarrow as pa
@@ -56,10 +57,6 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     downstream ``groupBy(key)`` plans no second exchange; round-robin
     otherwise).  No-op when the scan is already parallel enough —
     results are unchanged either way (pure physical layout)."""
-    if df.isStreaming:
-        # no RDD inspection on streaming frames; micro-batch callers
-        # (foreachBatch) pass batch frames and still get the guard
-        return df
     spark = df.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() * 2 > p:
@@ -81,6 +78,12 @@ _SCHEMES = {"s3a": "s3", "s3n": "s3"}
 def escape_path_name(name: str) -> str:
     """A partition column or value as Spark writes it in a path."""
     return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in name)
+
+
+def unescape_path_name(name: str) -> str:
+    """The partition column or value a path name was escaped from."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)),
+                  name)
 
 
 def _dictionary_columns(t: pa.Table) -> list[str]:

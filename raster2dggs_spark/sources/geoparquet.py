@@ -147,30 +147,3 @@ def write_geoparquet(df: DataFrame, path: str, partition_col: str,
 
     write_partitioned(df, path, partition_col, compression=compression,
                       stamp=stamp)
-
-
-def histogram_metadata(mode: str, edges=None, width=None, origin=0.0,
-                       weight: str = "count", normalize: str = "none") -> bytes:
-    """S8: the reference's histogram-spec schema metadata payload
-    (common.py:673-688) — stamped under key b'raster2dggs:histogram' so
-    readers can reconstruct bin semantics from the file alone."""
-    return json.dumps({
-        "mode": mode,
-        "edges": list(edges) if edges else None,
-        "width": width,
-        "origin": origin,
-        "weight": weight,
-        "normalize": normalize,
-    }).encode()
-
-
-def write_histogram_parquet(df: DataFrame, path: str, mode: str,
-                            edges=None, width=None, origin=0.0,
-                            weight: str = "count", normalize: str = "none",
-                            *, partition_col: str) -> None:
-    """Histogram sink: partitioned parquet with the histogram-spec
-    metadata in every file footer, stamped in the write tasks like the
-    GeoParquet sink's."""
-    meta = {b"raster2dggs:histogram":
-            histogram_metadata(mode, edges, width, origin, weight, normalize)}
-    write_partitioned(df, path, partition_col, stamp=lambda t: meta)

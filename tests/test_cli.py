@@ -100,8 +100,9 @@ def test_cli_validation(spark, tmp_path, images_path):
               "--hist-width", "2"], spark=spark)
     out = str(tmp_path / "x4")
     main(["hex7", images_path, out, "-r", "6"], spark=spark)
-    with pytest.raises(SystemExit):  # existing output without -o
-        main(["hex7", images_path, out, "-r", "6"], spark=spark)
+    for existing in (out, "file:" + out):  # existing output without -o
+        with pytest.raises(SystemExit):
+            main(["hex7", images_path, existing, "-r", "6"], spark=spark)
     main(["hex7", images_path, out, "-r", "6", "-o"], spark=spark)  # ok
 
 

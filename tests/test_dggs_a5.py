@@ -68,15 +68,6 @@ def test_children_parent_inverse():
             a5lib.lonlat_to_cell(klon, klat, res + 1), kids.ravel())
 
 
-def test_cell_to_children_size_vectorized():
-    lon, lat = _rand_points(100)
-    c = np.concatenate([a5lib.lonlat_to_cell(lon, lat, 0),
-                        a5lib.lonlat_to_cell(lon, lat, 3)])
-    sz = a5lib.cell_to_children_size(c, 5)
-    assert (sz[:100] == 5 * 4 ** 4).all()
-    assert (sz[100:] == 4 ** 2).all()
-
-
 def test_area_partition_of_unity():
     """Spherical-excess areas are exact: cells at each res sum to the
     sphere, and the 60 quintants are exactly equal-area (the layout's

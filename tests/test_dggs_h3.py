@@ -110,12 +110,6 @@ def test_pentagon_flags():
     assert d.min() > 60.0  # vertices are never closer than adjacent
 
 
-def test_children_size():
-    c = h3.latlng_to_cell(np.array([10.0]), np.array([20.0]), 5)
-    assert h3.children_size(c, 7)[0] == 49
-    assert h3.children_size(c, 5)[0] == 1
-
-
 def test_string_roundtrip():
     lon, lat = _rand(n=100, seed=6)
     c = h3.latlng_to_cell(lon, lat, 9)
@@ -147,18 +141,6 @@ def test_cover_bbox_complete_against_dense_sampling():
     assert (
         (clon2 >= bbox[0]) & (clon2 < bbox[2]) & (clat2 >= bbox[1]) & (clat2 < bbox[3])
     ).all()
-
-
-def test_cover_disk_contains_near_cells():
-    res = 7
-    lon0, lat0 = 174.0, -41.0
-    disk = h3.cover_disk(lon0, lat0, 20000.0, res)
-    clon, clat = h3.cell_to_latlng(disk)
-    d = haversine_m(np.full_like(clon, lon0), np.full_like(clat, lat0), clon, clat)
-    # all cells close to the disk; the query point's own cell is included
-    assert (d <= 20000.0 + 1.5 * h3.cell_pitch_rad(res) * R).all()
-    own = h3.latlng_to_cell(np.array([lon0]), np.array([lat0]), res)[0]
-    assert own in set(disk.tolist())
 
 
 def test_latitude_sweep_no_gaps():

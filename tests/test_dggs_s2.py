@@ -56,10 +56,3 @@ def test_hilbert_locality():
     c1 = s2.lonlat_to_cell(np.array([10.0]), np.array([45.0]), 30)[0]
     c2 = s2.lonlat_to_cell(np.array([10.0000001]), np.array([45.0]), 30)[0]
     assert abs(int(c1) - int(c2)) <= 16
-
-
-def test_tokens():
-    c = s2.lonlat_to_cell(np.array([0.0]), np.array([0.0]), 12)
-    tok = s2.cell_to_token(c)[0]
-    assert 1 <= len(tok) <= 16
-    assert int(tok.ljust(16, "0"), 16) == int(np.uint64(c[0]))

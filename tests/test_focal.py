@@ -8,9 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from raster2dggs_spark.operators.focal import (
-    focal_cells, focal_lattice, focal_metric,
-)
+from raster2dggs_spark.operators.focal import focal_lattice, focal_metric
 
 EARTH_R = 6_371_007.1809
 
@@ -126,31 +124,6 @@ def test_focal_metric_isolated_point_is_self(spark):
     got = {int(r.key): (r.focal_v, r.n_window)
            for r in out.itertuples(index=False)}
     assert got == {1: (7.0, 1), 2: (9.0, 1)}
-
-
-def test_focal_cells_hex7_self_and_neighbors(spark):
-    """Metric focal over hex7 cell centers: a tight cluster of cells
-    must see each other; the neighborhood always includes self."""
-    from raster2dggs_spark.dggs import h3lib
-
-    rng = np.random.default_rng(9)
-    lon = 12.0 + rng.uniform(-0.5, 0.5, 400)
-    lat = 47.0 + rng.uniform(-0.5, 0.5, 400)
-    cells = np.unique(h3lib.latlng_to_cell(lon, lat, 6))
-    pdf = pd.DataFrame({"cell": cells.astype("int64"),
-                        "v": np.arange(len(cells), dtype="float64")})
-    df = spark.createDataFrame(pdf)
-    out = focal_cells(df, ["v"], res=6, dggs="hex7", k=1).toPandas()
-    assert len(out) == len(pdf)
-    assert (out["n_window"] >= 1).all()
-    # clustered cells: the vast majority must have found a neighbor
-    assert (out["n_window"] >= 2).mean() > 0.8
-    # sum conservation: total contributions == sum over points of their
-    # window memberships (symmetry of the metric window)
-    out2 = focal_cells(df, ["v"], res=6, dggs="hex7", k=1,
-                       agg="sum").toPandas()
-    m = out.merge(out2, on="cell")
-    assert (m["n_window_x"] == m["n_window_y"]).all()
 
 
 def test_focal_lattice_quadkey_wraps_lon(spark):

@@ -6,9 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from raster2dggs_spark.functions.hilbert import (
-    hilbert_cluster, with_hilbert_key,
-)
+from raster2dggs_spark.functions.hilbert import with_hilbert_key
 
 
 def _xy2d(order, x, y):
@@ -69,26 +67,6 @@ def test_locality_beats_row_major_for_bbox_pruning(spark):
         rr.append(n_ranges([y * n + x for x, y in box]))
     assert np.mean(hr) < np.mean(rr)           # fewer ranges = fewer files
     assert np.mean(hr) < 3.9        # row-major needs exactly 4
-
-
-def test_hilbert_cluster_sorted_output(spark):
-    from raster2dggs_spark.dggs import geohashlib
-
-    rng = np.random.default_rng(3)
-    gx = rng.integers(0, 256, 400).astype(np.int64)
-    gy = rng.integers(0, 128, 400).astype(np.int64)
-    cell = np.asarray(geohashlib.cell_from_indices(gx, gy, 3), np.int64)
-    df = spark.createDataFrame(pd.DataFrame({"cell": cell})).distinct()
-    out = hilbert_cluster(df, dggs="geohash")
-    pdf_parts = out.rdd.glom().map(
-        lambda rows: [r["hkey"] for r in rows]).collect()
-    flat_prev = None
-    for part in pdf_parts:                 # sorted within + across
-        assert part == sorted(part)
-        if part:
-            if flat_prev is not None:
-                assert flat_prev <= part[0]
-            flat_prev = part[-1]
 
 
 def test_order_validation(spark):

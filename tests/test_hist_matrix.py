@@ -1,13 +1,8 @@
-"""A11 weight/normalize matrix, S8 histogram metadata sink, fractions
-struct packer, and P1 band-selection-by-label."""
-
-import json
+"""A11 weight/normalize matrix and P1 band-selection-by-label."""
 
 import numpy as np
 import pandas as pd
 import pytest
-
-from pyspark.sql import functions as F
 
 
 def test_hist_weight_field_matrix():
@@ -72,51 +67,6 @@ def test_hist_normalize_cell_area_every_grid(spark):
         out = hist_normalize_cell_area(df, res=res, dggs=dggs).toPandas()
         exp = np.array([1e8, 2e8, 3e8]) / lib.cell_area_m2(cells)
         assert np.allclose(np.sort(out["area_frac"]), np.sort(exp)), dggs
-
-
-def test_histogram_metadata_sink(spark, tmp_path):
-    from raster2dggs_spark.sources.geoparquet import write_histogram_parquet
-
-    import pyarrow.parquet as pq
-    import glob
-
-    df = spark.range(100).select(
-        (F.col("id") % 5).alias("k"),
-        (F.col("id") % 7).cast("double").alias("value"),
-        F.lit(1.0).alias("weight"),
-    )
-    path = str(tmp_path / "hist")
-    write_histogram_parquet(df, path, mode="binned", width=10.0, origin=0.0,
-                            weight="area", normalize="cell_area",
-                            partition_col="k")
-    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
-    assert files
-    for fp in files:
-        md = pq.read_schema(fp).metadata
-        spec = json.loads(md[b"raster2dggs:histogram"])
-        assert spec == {"mode": "binned", "edges": None, "width": 10.0,
-                        "origin": 0.0, "weight": "area",
-                        "normalize": "cell_area"}
-    # spark reads the stamped files back
-    assert spark.read.parquet(path).count() == 100
-
-
-def test_pack_fractions_struct(spark):
-    from raster2dggs_spark.operators.aggregates import pack_fractions
-
-    df = spark.createDataFrame(
-        pd.DataFrame({
-            "cell": [1, 1, 1, 2],
-            "class": [3.0, 1.0, 2.0, 5.0],
-            "fraction": [0.5, 0.25, 0.25, 1.0],
-        })
-    )
-    out = pack_fractions(df, ["cell"]).toPandas().set_index("cell")
-    r1 = out.loc[1, "fractions"]
-    assert list(r1["classes"]) == [1, 2, 3]
-    assert list(r1["fractions"]) == [0.25, 0.25, 0.5]
-    r2 = out.loc[2, "fractions"]
-    assert list(r2["classes"]) == [5]
 
 
 def test_band_selection_by_label(spark):

@@ -75,138 +75,3 @@ def test_icetable_time_travel_read(spark, tmp_path):
     assert t.read(spark, version=1).count() == 100
     ids_v1 = {r["id"] for r in t.read(spark, version=1).collect()}
     assert ids_v1 == set(range(100))
-
-
-def test_optimize_compacts_small_files(spark, tmp_path):
-    """OPTIMIZE: three appends leave 3 files/partition; optimize
-    rewrites each hot partition to ONE file, reads stay row-identical,
-    time travel to the pre-optimize snapshot still works, a second
-    optimize is a no-op, and vacuum then reclaims the superseded
-    files without breaking the current read."""
-    from raster2dggs_spark.sources.icetable import IceTable
-
-    t = IceTable(str(tmp_path / "t"))
-    for w in range(3):
-        df = spark.range(w * 100, (w + 1) * 100).select(
-            (F.col("id") % 4).alias("p"), F.col("id").alias("v"))
-        t.write(df.repartition(2), "p", mode="append",
-                lineage={"wave": w})
-    v_before = t.current_version()
-    snap0 = t.snapshot()
-    files_before = {m["partition"]: len(m["files"])
-                    for m in snap0["manifests"]}
-    assert all(n >= 3 for n in files_before.values())
-    rows_before = sorted((r["p"], r["v"])
-                         for r in t.read(spark).collect())
-
-    snap1 = t.optimize(spark)
-    assert snap1["version"] == v_before + 1
-    assert snap1["lineage"]["operator"] == "optimize"
-    assert all(len(m["files"]) == 1 for m in snap1["manifests"])
-    assert snap1["total_rows"] == snap0["total_rows"]
-    assert sorted((r["p"], r["v"])
-                  for r in t.read(spark).collect()) == rows_before
-    # time travel to the pre-optimize snapshot still reads old files
-    assert sorted((r["p"], r["v"])
-                  for r in t.read(spark, version=v_before).collect()) \
-        == rows_before
-    # idempotent: nothing left to rewrite
-    snap2 = t.optimize(spark)
-    assert snap2["version"] == snap1["version"]
-    # vacuum reclaims superseded files; current read unaffected
-    removed = t.vacuum()
-    assert len(removed) >= sum(files_before.values()) - len(files_before)
-    assert sorted((r["p"], r["v"])
-                  for r in t.read(spark).collect()) == rows_before
-
-
-def test_read_partition_pruning(spark, tmp_path):
-    """Manifest-level partition pruning: read(partition_values=...)
-    hands ONLY the matching partitions' files to the reader (asserted
-    on the scan's input files, not just the rows), and an empty
-    selection returns a typed empty frame without scanning."""
-    from raster2dggs_spark.sources.icetable import IceTable
-
-    t = IceTable(str(tmp_path / "t"))
-    df = spark.range(400).select((F.col("id") % 8).alias("p"),
-                                 F.col("id").alias("v"))
-    t.write(df, "p")
-    pruned = t.read(spark, partition_values=[2, 5])
-    assert sorted({r["p"] for r in pruned.collect()}) == [2, 5]
-    assert pruned.count() == 100
-    scanned = pruned.inputFiles()
-    assert scanned and all(("p=2" in f) or ("p=5" in f) for f in scanned)
-    empty = t.read(spark, partition_values=[99])
-    assert empty.count() == 0
-    assert set(empty.columns) == {"p", "v"}
-
-
-def test_merge_upsert_and_time_travel(spark, tmp_path):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from raster2dggs_spark.sources.icetable import IceTable
-
-    t = IceTable(str(tmp_path / "tbl"))
-    base = spark.createDataFrame(pd.DataFrame({
-        "k": [1, 2, 3, 4], "p": [0, 0, 1, 1],
-        "v": [10.0, 20.0, 30.0, 40.0]}))
-    s1 = t.write(base, partition_by="p")
-    files_p1_before = {f for m in s1["manifests"]
-                       if m["partition"] == "p=1" for f in m["files"]}
-
-    upd = spark.createDataFrame(pd.DataFrame({
-        "k": [2, 5], "p": [0, 0], "v": [99.0, 50.0]}))
-    s2 = t.merge(upd, key_cols="k")
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == {1: 10.0, 2: 99.0, 3: 30.0, 4: 40.0, 5: 50.0}
-
-    # partition pruning: p=1 manifests carried forward byte-identical
-    files_p1_after = {f for m in s2["manifests"]
-                      if m["partition"] == "p=1" for f in m["files"]}
-    assert files_p1_after == files_p1_before
-    assert s2["lineage"]["partitions_rewritten"] == ["p=0"]
-
-    # time travel reproduces the pre-merge table
-    old = {r["k"]: r["v"]
-           for r in t.read(spark, version=s1["version"]).collect()}
-    assert old == {1: 10.0, 2: 20.0, 3: 30.0, 4: 40.0}
-
-    # new-partition insert through merge
-    s3 = t.merge(spark.createDataFrame(pd.DataFrame(
-        {"k": [9], "p": [7], "v": [70.0]})), key_cols="k")
-    assert {m["partition"] for m in s3["manifests"]} == {
-        "p=0", "p=1", "p=7"}
-
-    # schema mismatch refuses
-    import pytest as _pt
-    with _pt.raises(ValueError, match="schema"):
-        t.merge(spark.createDataFrame(pd.DataFrame(
-            {"k": [1], "p": [0], "other": [1.0]})), key_cols="k")
-
-
-def test_delete_where_pruned_rewrite(spark, tmp_path):
-    import pandas as pd
-
-    from raster2dggs_spark.sources.icetable import IceTable
-
-    t = IceTable(str(tmp_path / "tbl2"))
-    base = spark.createDataFrame(pd.DataFrame({
-        "k": list(range(8)), "p": [0, 0, 0, 0, 1, 1, 2, 2],
-        "v": [float(i) for i in range(8)]}))
-    s1 = t.write(base, partition_by="p")
-    s2 = t.delete_where(spark, "v >= 4 and v < 6")   # kills all of p=1
-    rows = sorted(r["k"] for r in t.read(spark).collect())
-    assert rows == [0, 1, 2, 3, 6, 7]
-    parts = {m["partition"] for m in s2["manifests"]}
-    assert parts == {"p=0", "p=2"}                   # p=1 fully emptied
-    # untouched partitions carried forward byte-identical
-    f0 = {f for m in s1["manifests"] if m["partition"] == "p=0"
-          for f in m["files"]}
-    f0b = {f for m in s2["manifests"] if m["partition"] == "p=0"
-           for f in m["files"]}
-    assert f0 == f0b
-    # no-match delete commits a no-op snapshot
-    s3 = t.delete_where(spark, "v > 1e9")
-    assert s3["lineage"]["partitions_rewritten"] == []
-    assert s3["total_rows"] == s2["total_rows"]

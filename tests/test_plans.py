@@ -277,41 +277,3 @@ def test_cover_gate_is_analytic_no_probe_job(spark, monkeypatch):
     zonal_join(cells, zdf, 5, [F.sum(F.lit(1)).alias("n")])
     zonal_join(cells, zdf, 5, [F.sum(F.lit(1)).alias("n")],
                max_broadcast_cover=0)
-
-
-def test_streaming_zonal_cover_gate(spark):
-    """Round-4 VERDICT #1 (the last ungated forced broadcast): the
-    static zone-cover side of the geo×time windowed agg is broadcast
-    only under the size gate; above it the plan carries NO broadcast
-    hint and still computes the same answer."""
-    import pandas as pd_
-
-    from raster2dggs_spark.operators.joins import polygon_cells
-    from raster2dggs_spark.sources.vectors import generate_zones_pdf
-    from raster2dggs_spark.streaming.events import zonal_windowed_event_stats
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        "event_id", "ts", "value",
-        (((F.col("event_id") * 37) % 344) - 172 + 0.3)
-        .cast("double").alias("lon"),
-        (((F.col("event_id") * 53) % 160) - 80 + 0.3)
-        .cast("double").alias("lat"),
-    )
-    zones = generate_zones_pdf(6, seed=42)
-    zdf = spark.createDataFrame(
-        zones[["poly_id", "xs", "ys"]],
-        "poly_id long, xs array<double>, ys array<double>",
-    )
-    cover = polygon_cells(zdf, res=4).where("center_in").select(
-        "cell", F.col("poly_id").alias("zone_id")
-    )
-
-    gated = zonal_windowed_event_stats(ev, cover, max_broadcast_cover=0)
-    assert _n_broadcast_hints(gated) == 0
-    hinted = zonal_windowed_event_stats(ev, cover)
-    assert _n_broadcast_hints(hinted) == 1
-
-    key = ["window_start", "zone_id"]
-    a = gated.toPandas().sort_values(key).reset_index(drop=True)
-    b = hinted.toPandas().sort_values(key).reset_index(drop=True)
-    pd_.testing.assert_frame_equal(a, b, check_like=True)

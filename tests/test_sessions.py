@@ -1,13 +1,9 @@
-"""Sessionization: batch vs hand-computed oracle; stateful streaming
-(applyInPandasWithState) equivalence with the batch plan."""
+"""Sessionization: batch plan vs hand-computed oracle."""
 
 import os
 
 import numpy as np
 import pandas as pd
-import pytest
-
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,7 +30,7 @@ def _brute_sessions(pdf: pd.DataFrame, gap_s: int):
 
 
 def test_batch_sessionize_matches_bruteforce(spark):
-    from raster2dggs_spark.streaming.sessions import sessionize_batch
+    from raster2dggs_spark.operators.temporal import sessionize_batch
 
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     gap = 900
@@ -48,92 +44,3 @@ def test_batch_sessionize_matches_bruteforce(spark):
             assert row.session_idx == idx and row.n_events == n
             assert pd.Timestamp(row.start_ts) == pd.Timestamp(start)
             assert pd.Timestamp(row.end_ts) == pd.Timestamp(last)
-
-
-def test_stream_sessionize_equals_batch(spark, tmp_path):
-    from raster2dggs_spark.streaming.sessions import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-    from raster2dggs_spark.streaming.events import stream_events_from_parquet
-
-    ev = spark.read.parquet(os.path.join(SF, "events.parquet")).select(
-        "user_id", "ts"
-    )
-    gap = 900
-    batch = sessionize_batch(ev, gap).toPandas()
-    # event-time-ordered files with strictly increasing mtimes: the file
-    # source orders micro-batches by modification time, so each chunk
-    # must be written (and stamped) sequentially
-    import time as _time
-
-    src = str(tmp_path / "ordered")
-    pdf_all = ev.toPandas().sort_values("ts").reset_index(drop=True)
-    chunks = np.array_split(pdf_all, 3)
-    os.makedirs(src, exist_ok=True)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for i, ch in enumerate(chunks):
-        ch = ch.copy()
-        ch["ts"] = ch["ts"].astype("datetime64[us]")  # parquet µs, not ns
-        pq.write_table(pa.Table.from_pandas(ch), os.path.join(src, f"c{i}.parquet"))
-        _time.sleep(1.1)
-    stream = stream_events_from_parquet(spark, src, ev.schema)
-    out = sessionize_stream(stream, gap)
-    q = (out.writeStream.format("memory").queryName("sess")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.sql("select * from sess").toPandas()
-    key = ["user_id", "session_idx"]
-    # streaming emits sessions when they CLOSE; the final (still-open)
-    # session per user stays in state — expected = batch minus each
-    # user's last session
-    last = batch.groupby("user_id")["session_idx"].transform("max")
-    expected = batch[batch["session_idx"] < last]
-    a = expected.sort_values(key).reset_index(drop=True)
-    b = got.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        a[["user_id", "session_idx", "n_events", "start_ts", "end_ts"]],
-        b[["user_id", "session_idx", "n_events", "start_ts", "end_ts"]],
-        check_dtype=False,
-    )
-
-
-def test_stream_interval_join_equals_batch(spark, tmp_path):
-    from raster2dggs_spark.streaming.events import (
-        interval_join_stream, run_stream_to_memory,
-        stream_events_from_parquet,
-    )
-
-    ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
-    # left = even event ids (e.g. impressions), right = odd (conversions)
-    left_b = ev.where("event_id % 2 = 0")
-    right_b = ev.where("event_id % 2 = 1")
-    batch = (interval_join_stream(left_b, right_b, max_lag_s=1800)
-             .toPandas())
-    assert len(batch) > 0
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    dirs = []
-    for name, side in (("l", left_b), ("r", right_b)):
-        d = str(tmp_path / name)
-        os.makedirs(d, exist_ok=True)
-        pdf = side.toPandas()
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pq.write_table(pa.Table.from_pandas(pdf),
-                       os.path.join(d, "part0.parquet"))
-        dirs.append(d)
-    ls = stream_events_from_parquet(spark, dirs[0], left_b.schema)
-    rs = stream_events_from_parquet(spark, dirs[1], right_b.schema)
-    out = interval_join_stream(ls, rs, max_lag_s=1800)
-    run_stream_to_memory(out, "ijoin", output_mode="append")
-    got = spark.sql("select * from ijoin").toPandas()
-    key = ["user_id", "l_event_id", "r_event_id"]
-    b = batch.sort_values(key).reset_index(drop=True)
-    g = got.sort_values(key).reset_index(drop=True)
-    assert len(b) == len(g)
-    assert (b[key].to_numpy() == g[key].to_numpy()).all()
-    assert np.allclose(b.lag_s.to_numpy(), g.lag_s.to_numpy())

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from raster2dggs_spark.operators.terrain import (
-    EARTH_R, M_PER_DEG, horn_derivatives, terrain_cells, terrain_point_agg,
+    EARTH_R, M_PER_DEG, horn_derivatives, terrain_cells,
 )
 
 
@@ -104,9 +104,6 @@ def test_terrain_cells_spark_counts_and_values(spark):
         s, pxm, w = float(1 + i % 3), float(50 + 10 * ((i * 7) % 8)), r.w
         exp = np.degrees(np.arctan(s * np.sqrt(1.0 + w * w) / pxm))
         assert np.allclose(sub["slope_deg"].values, exp, atol=1e-9)
-    agg = terrain_point_agg(imgs, res=7)
-    row = agg.agg(F.sum("n_px")).collect()[0][0]
-    assert row == sum((r.w - 2) * (r.h - 2) for r in pdf.itertuples(index=False))
 
 
 # ------------------------------------------------------------------- D8
