@@ -4610,7 +4610,8 @@ def q_conic_pixel_index(spark, sf_dir):
 def q_e4r_pixel_index(spark, sf_dir):
     """Pixel indexing on the e4r grid (round 6 — the EQUAL-AREA
     IVEA/ISEA-class aperture-4 diamond layout, slice-and-scale
-    equal-area map re-derived from first principles in dggs/e4rlib.py;
+    equal-area map re-derived from first principles in
+    dggs/rhombuslib.py;
     the reference's IVEA*/ISEA* DGGAL families are this projection
     class).  Oracle: independent single-node NumPy replay
     (.fixtures/e4r_pixel_index_16.parquet); equal-area itself is pinned

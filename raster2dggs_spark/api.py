@@ -112,15 +112,18 @@ def index_raster(
     bottom-up roll-up (uniform-value parents replace complete child
     sets); ``raw_ids=True`` skips the hex-string output formatting (for
     further cell-keyed joins)."""
-    from raster2dggs_spark.dggs import check_grid
+    from raster2dggs_spark.dggs import grid_lib
     from raster2dggs_spark.operators.indexing import (
         band_cols, default_parent_res, index_point, to_reference_output,
     )
 
-    check_grid(dggs)
+    min_res = grid_lib(dggs).MIN_RES
     res = resolve_res(images, resolution, dggs)
     if parent_res is None:
         parent_res = default_parent_res(res, dggs)
+    if not min_res <= parent_res <= res:
+        raise ValueError(f"parent_res {parent_res} must be in "
+                         f"[{min_res}, {res}] for {dggs} at res {res}")
 
     if transfer == "point":
         if agg == "histogram":

@@ -1,29 +1,28 @@
 """The grid protocol.
 
-Every ``*lib.py`` module is its grid's only entry and exports the same
-names with the same signatures (README "Grid protocol" has the table);
-callers reach a module only through :func:`grid_lib` and never branch
-on a grid key.  Where a grid FAMILY changes the algorithm, callers test
-membership in one of the tuples below.
+Every grid key has one entry that exports the same names with the same
+signatures (README "Grid protocol" has the table): a ``*lib.py``
+module, or an instance of a grid family's class when several grids are
+settings of one algorithm (``rhombuslib.Rhombus``).  Callers reach an
+entry only through :func:`grid_lib` and never branch on a grid key.
+Where a grid FAMILY changes the algorithm, callers test membership in
+one of the tuples below.
 """
 
 from raster2dggs_spark.dggs import (
     a5lib,
     quadkeylib,
-    e4rlib,
-    e9rlib,
-    i4rlib,
-    i9rlib,
     geohashlib,
     h3lib,
     i3hlib,
     maidenheadlib,
+    rhombuslib,
     rhplib,
     s2lib,
 )
 
 __all__ = ["h3lib", "s2lib", "geohashlib", "maidenheadlib", "rhplib",
-           "i3hlib", "a5lib", "i4rlib", "i9rlib", "e4rlib", "e9rlib",
+           "i3hlib", "a5lib", "rhombuslib", "quadkeylib",
            "GRIDS", "RECT_GRIDS", "EXACT_LATTICE_GRIDS",
            "MULTI_PARENT_GRIDS", "CONSTANT_AREA_GRIDS", "check_grid",
            "grid_lib"]
@@ -31,17 +30,18 @@ __all__ = ["h3lib", "s2lib", "geohashlib", "maidenheadlib", "rhplib",
 # i3h: aperture-3 hex (ISEA3H layout, multi-parent hierarchy) — encode/
 # cover/A17 surfaces; ids are this repo's own (see i3hlib), like hex7.
 # a5: pentagonal dodecahedron, aperture 5 then 4 (A5 layout, see a5lib);
-# i4r: icosahedral aperture-4 rhombus (ISEA4R layout, see i4rlib)
-# i9r: the aperture-9 sibling on the same 10-diamond layout (ISEA9R,
-# see i9rlib); e4r: the EQUAL-AREA aperture-4 sibling (IVEA/ISEA class,
-# see e4rlib; e9r its aperture-9 twin) — same honest own-id contract.
+# i4r/i9r: icosahedral rhombus, aperture 4/9 on 10 diamonds (ISEA4R/
+# ISEA9R layout), central projection; e4r/e9r: their EQUAL-AREA twins
+# (IVEA/ISEA class) — one rhombuslib.Rhombus instance each, same
+# honest own-id contract.
 GRIDS = ("hex7", "s2", "geohash", "maidenhead", "rhp", "i3h", "a5",
          "i4r", "i9r", "e4r", "e9r", "quadkey")
 
 _LIBS = {"hex7": h3lib, "s2": s2lib, "geohash": geohashlib,
          "maidenhead": maidenheadlib, "rhp": rhplib, "i3h": i3hlib,
-         "a5": a5lib, "i4r": i4rlib, "i9r": i9rlib, "e4r": e4rlib,
-         "e9r": e9rlib, "quadkey": quadkeylib}
+         "a5": a5lib, "i4r": rhombuslib.I4R, "i9r": rhombuslib.I9R,
+         "e4r": rhombuslib.E4R, "e9r": rhombuslib.E9R,
+         "quadkey": quadkeylib}
 
 # cells are an index rectangle lattice (``lattice(res)``): covers and
 # disk candidates are enumerated exactly instead of sampled
@@ -79,5 +79,5 @@ def check_grid(dggs: str) -> str:
 
 
 def grid_lib(dggs: str):
-    """The protocol module for a grid key."""
+    """The protocol entry (module or family instance) for a grid key."""
     return _LIBS[check_grid(dggs)]

@@ -1,10 +1,34 @@
-"""Shared check for the grid modules' ``cell_to_children`` contract:
-all descendants at ``child_res`` of cells that share one resolution,
-flat and cell-major (every descendant of ``cells[0]`` first)."""
+"""Shared loops of the grid modules: the one encode loop behind every
+``lonlat_to_cell``, and the check behind the ``cell_to_children``
+contract (all descendants at ``child_res`` of cells that share one
+resolution, flat and cell-major: every descendant of ``cells[0]``
+first)."""
 
 from __future__ import annotations
 
 import numpy as np
+
+
+def encode_chunked(grid: str, kernel, lon_deg, lat_deg, res: int,
+                   chunk: int | None = None):
+    """``kernel(lon, lat, res)`` over flat float64 copies of the inputs.
+
+    Inputs of up to ``2 * chunk`` points run in one pass; larger ones in
+    ``chunk``-sized passes, so the kernel's ~20 temporaries stay in L2
+    (3-4x faster than 1M-row passes); ``chunk=None`` is always one pass.
+    A NaN or infinite coordinate raises ``ValueError`` naming ``grid``:
+    no kernel has a cell for it, and each would return a wrong id."""
+    lon = np.asarray(lon_deg, dtype=np.float64).ravel()
+    lat = np.asarray(lat_deg, dtype=np.float64).ravel()
+    if not (np.isfinite(lon).all() and np.isfinite(lat).all()):
+        raise ValueError(f"{grid}: lon/lat must be finite to encode")
+    n = lon.shape[0]
+    if chunk is None or n <= 2 * chunk:
+        return kernel(lon, lat, res)
+    out = np.empty(n, dtype=np.int64)
+    for i in range(0, n, chunk):
+        out[i:i + chunk] = kernel(lon[i:i + chunk], lat[i:i + chunk], res)
+    return out
 
 
 def child_depth(res, child_res: int, max_res: int) -> int:

@@ -49,7 +49,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 MIN_RES = 0
 MAX_RES = 27
@@ -185,50 +185,47 @@ def _face_uv(xyz):
 def lonlat_to_cell(lon_deg, lat_deg, res: int):
     if not 0 <= res <= MAX_RES:
         raise ValueError("a5 res out of range")
-    lon_a = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat_a = np.asarray(lat_deg, dtype=np.float64).ravel()
-    out = np.empty(lon_a.shape[0], dtype=np.int64)
-    for i in range(0, max(lon_a.shape[0], 1), _ENCODE_CHUNK):
-        sl = slice(i, i + _ENCODE_CHUNK)
-        face, u, v = _face_uv(_lonlat_to_xyz(lon_a[sl], lat_a[sl]))
-        if res == 0:
-            out[sl] = pack(face, 0, 0, 0)
-            continue
-        az = np.mod(np.arctan2(v, u), 2.0 * np.pi)
-        q = np.minimum((az / _SECTOR).astype(np.int64), 4)
-        ang = -q.astype(np.float64) * _SECTOR
-        ca, sa = np.cos(ang), np.sin(ang)
-        x = ca * u - sa * v
-        y = sa * u + ca * v
-        # barycentric (alpha, beta) over (O, A0, A1); clip fp stragglers
-        # (points on the pentagon edge) back into the closed triangle
-        beta = y / _A1Y
-        alpha = (x - beta * _A1X) / RHO
-        alpha = np.maximum(alpha, 0.0)
-        beta = np.maximum(beta, 0.0)
-        s = alpha + beta
-        over = s > 1.0
-        if over.any():
-            alpha = np.where(over, alpha / s, alpha)
-            beta = np.where(over, beta / s, beta)
-        # branchless level step (round 8, ~40% off the digit loop):
-        # bool-as-float subtraction replaces the nested wheres — x2-c1
-        # IS x2-1 iff c1 (c2 likewise), and only the c3 flip needs a
-        # where; the digit accumulates in float64 (4·dig + d is exact:
-        # the digit field is <= 52 bits < 2^53 at MAX_RES 27).  Output
-        # identical bit-for-bit to the nested-where form.
-        digf = np.zeros(alpha.shape[0])
-        for _lvl in range(2, res + 1):
-            x2 = 2.0 * alpha
-            y2 = 2.0 * beta
-            c1 = x2 >= 1.0
-            c2 = (~c1) & (y2 >= 1.0)
-            c3 = (~c1) & (~c2) & (x2 + y2 > 1.0)
-            alpha = np.where(c3, 1.0 - y2, x2 - c1)
-            beta = np.where(c3, 1.0 - x2, y2 - c2)
-            digf = 4.0 * digf + (c1 + 2.0 * c2 + 3.0 * c3)
-        out[sl] = pack(face, res, q, digf.astype(np.int64))
-    return out
+    return encode_chunked("a5", _encode, lon_deg, lat_deg, res, _ENCODE_CHUNK)
+
+
+def _encode(lon, lat, res: int):
+    face, u, v = _face_uv(_lonlat_to_xyz(lon, lat))
+    if res == 0:
+        return pack(face, 0, 0, 0)
+    az = np.mod(np.arctan2(v, u), 2.0 * np.pi)
+    q = np.minimum((az / _SECTOR).astype(np.int64), 4)
+    ang = -q.astype(np.float64) * _SECTOR
+    ca, sa = np.cos(ang), np.sin(ang)
+    x = ca * u - sa * v
+    y = sa * u + ca * v
+    # barycentric (alpha, beta) over (O, A0, A1); clip fp stragglers
+    # (points on the pentagon edge) back into the closed triangle
+    beta = y / _A1Y
+    alpha = (x - beta * _A1X) / RHO
+    alpha = np.maximum(alpha, 0.0)
+    beta = np.maximum(beta, 0.0)
+    s = alpha + beta
+    over = s > 1.0
+    if over.any():
+        alpha = np.where(over, alpha / s, alpha)
+        beta = np.where(over, beta / s, beta)
+    # branchless level step (round 8, ~40% off the digit loop):
+    # bool-as-float subtraction replaces the nested wheres — x2-c1
+    # IS x2-1 iff c1 (c2 likewise), and only the c3 flip needs a
+    # where; the digit accumulates in float64 (4·dig + d is exact:
+    # the digit field is <= 52 bits < 2^53 at MAX_RES 27).  Output
+    # identical bit-for-bit to the nested-where form.
+    digf = np.zeros(alpha.shape[0])
+    for _lvl in range(2, res + 1):
+        x2 = 2.0 * alpha
+        y2 = 2.0 * beta
+        c1 = x2 >= 1.0
+        c2 = (~c1) & (y2 >= 1.0)
+        c3 = (~c1) & (~c2) & (x2 + y2 > 1.0)
+        alpha = np.where(c3, 1.0 - y2, x2 - c1)
+        beta = np.where(c3, 1.0 - x2, y2 - c2)
+        digf = 4.0 * digf + (c1 + 2.0 * c2 + 3.0 * c3)
+    return pack(face, res, q, digf.astype(np.int64))
 
 
 def _triangle_corners(res: int, low52):

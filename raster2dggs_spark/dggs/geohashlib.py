@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 
 from raster2dggs_spark.dggs._bits import compress, spread
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _B32_INV = {c: i for i, c in enumerate(_B32)}
@@ -40,8 +40,10 @@ def lonlat_to_cell(lon_deg, lat_deg, precision: int):
     """Vectorized encode to packed int64 geohash ids."""
     if not 1 <= precision <= MAX_PRECISION:
         raise ValueError("precision 1..12")
-    lon = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat = np.asarray(lat_deg, dtype=np.float64).ravel()
+    return encode_chunked("geohash", _encode, lon_deg, lat_deg, precision)
+
+
+def _encode(lon, lat, precision: int):
     nlon, nlat = _axis_bits(precision)
     # quantized fractions
     fx = np.clip((lon + 180.0) / 360.0, 0.0, np.nextafter(1.0, 0.0))

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 MIN_RES = 0
 MAX_RES = 15
@@ -420,16 +420,8 @@ def latlng_to_cell(lon_deg, lat_deg, res: int):
     speedup over one monolithic pass)."""
     if not 0 <= res <= MAX_RES:
         raise ValueError("res out of range")
-    lon_a = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat_a = np.asarray(lat_deg, dtype=np.float64).ravel()
-    if lon_a.shape[0] > 2 * _ENCODE_CHUNK:
-        out = np.empty(lon_a.shape[0], dtype=np.int64)
-        for i in range(0, lon_a.shape[0], _ENCODE_CHUNK):
-            out[i:i + _ENCODE_CHUNK] = _latlng_to_cell_chunk(
-                lon_a[i:i + _ENCODE_CHUNK], lat_a[i:i + _ENCODE_CHUNK], res
-            )
-        return out
-    return _latlng_to_cell_chunk(lon_a, lat_a, res)
+    return encode_chunked("hex7", _latlng_to_cell_chunk, lon_deg, lat_deg,
+                          res, _ENCODE_CHUNK)
 
 
 def _latlng_to_cell_chunk(lon_deg, lat_deg, res: int):

@@ -57,7 +57,7 @@ from raster2dggs_spark.dggs.h3lib import (
     _axial_to_hex2d,
     RES0_U_GNOMONIC,
 )
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 MIN_RES = 0
 MAX_RES = 29
@@ -140,17 +140,16 @@ def _face_plane(lon_deg, lat_deg):
 def lonlat_to_cell(lon_deg, lat_deg, res: int):
     if not 0 <= res <= MAX_RES:
         raise ValueError("res out of range")
-    lon_a = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat_a = np.asarray(lat_deg, dtype=np.float64).ravel()
-    out = np.empty(lon_a.shape[0], dtype=np.int64)
-    for i in range(0, max(lon_a.shape[0], 1), _ENCODE_CHUNK):
-        sl = slice(i, i + _ENCODE_CHUNK)
-        face, x0, y0 = _face_plane(lon_a[sl], lat_a[sl])
-        s = SQRT3 ** res
-        xr, yr = _rot(x0, y0, -_phi(res))
-        a, b = _hex2d_to_axial(xr * s, yr * s)
-        out[sl] = pack(face, res, a, b)
-    return out
+    return encode_chunked("i3h", _encode, lon_deg, lat_deg, res,
+                          _ENCODE_CHUNK)
+
+
+def _encode(lon, lat, res: int):
+    face, x0, y0 = _face_plane(lon, lat)
+    s = SQRT3 ** res
+    xr, yr = _rot(x0, y0, -_phi(res))
+    a, b = _hex2d_to_axial(xr * s, yr * s)
+    return pack(face, res, a, b)
 
 
 def cell_to_latlng(cells):

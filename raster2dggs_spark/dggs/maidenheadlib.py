@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 from raster2dggs_spark.dggs.geohashlib import rect_area_m2, rect_boundary
 
 BASES = (18, 10, 24, 10, 24)
@@ -39,8 +39,10 @@ def _pair_product(precision: int) -> int:
 def lonlat_to_cell(lon_deg, lat_deg, precision: int):
     if not 1 <= precision <= MAX_PRECISION:
         raise ValueError("precision 1..5")
-    lon = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat = np.asarray(lat_deg, dtype=np.float64).ravel()
+    return encode_chunked("maidenhead", _encode, lon_deg, lat_deg, precision)
+
+
+def _encode(lon, lat, precision: int):
     rx = np.clip((lon + 180.0) / 360.0, 0.0, np.nextafter(1.0, 0.0))
     ry = np.clip((lat + 90.0) / 180.0, 0.0, np.nextafter(1.0, 0.0))
     bits = np.zeros(lon.shape[0], dtype=np.int64)

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 
 from raster2dggs_spark.dggs._bits import compress, spread
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 MAX_LEVEL = 23
 MIN_RES = 1
@@ -75,7 +75,11 @@ def _demorton(bits, level: int):
 def lonlat_to_cell(lon_deg, lat_deg, level: int):
     if not 1 <= level <= MAX_LEVEL:
         raise ValueError(f"level 1..{MAX_LEVEL}")
-    tx, ty = _tile_xy(lon_deg, lat_deg, level)
+    return encode_chunked("quadkey", _encode, lon_deg, lat_deg, level)
+
+
+def _encode(lon, lat, level: int):
+    tx, ty = _tile_xy(lon, lat, level)
     return (_morton(ty, tx, level) << 5) | np.int64(level)
 
 

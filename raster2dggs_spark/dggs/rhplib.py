@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 FACES = "NOPQRS"
 MIN_RES = 0
@@ -177,8 +177,12 @@ def lonlat_to_cell(lon_deg, lat_deg, res: int):
     """Vectorized lon/lat (degrees) -> packed rHEALPix cell id at ``res``."""
     if not 0 <= res <= MAX_RES:
         raise ValueError("res 0..15")
-    lon = np.radians(np.asarray(lon_deg, dtype=np.float64).ravel())
-    lat = np.radians(np.asarray(lat_deg, dtype=np.float64).ravel())
+    return encode_chunked("rhp", _encode, lon_deg, lat_deg, res)
+
+
+def _encode(lon_deg, lat_deg, res: int):
+    lon = np.radians(lon_deg)
+    lat = np.radians(lat_deg)
     # wrap lon into [-pi, pi)
     lon = np.mod(lon + _PI, 2.0 * _PI) - _PI
     x, y = _project(lon, lat)

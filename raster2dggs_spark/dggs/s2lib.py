@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs._hier import child_depth
+from raster2dggs_spark.dggs._hier import child_depth, encode_chunked
 
 MAX_LEVEL = 30
 MIN_RES = 0
@@ -157,16 +157,8 @@ def lonlat_to_cell(lon_deg, lat_deg, level: int):
     """Vectorized lon/lat (degrees) -> S2 cell id (int64) at ``level``."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError("level out of range")
-    lon_a = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat_a = np.asarray(lat_deg, dtype=np.float64).ravel()
-    if lon_a.shape[0] > 2 * _ENCODE_CHUNK:
-        out = np.empty(lon_a.shape[0], dtype=np.int64)
-        for i in range(0, lon_a.shape[0], _ENCODE_CHUNK):
-            out[i:i + _ENCODE_CHUNK] = _lonlat_to_cell_chunk(
-                lon_a[i:i + _ENCODE_CHUNK], lat_a[i:i + _ENCODE_CHUNK], level
-            )
-        return out
-    return _lonlat_to_cell_chunk(lon_a, lat_a, level)
+    return encode_chunked("s2", _lonlat_to_cell_chunk, lon_deg, lat_deg,
+                          level, _ENCODE_CHUNK)
 
 
 def _lonlat_to_cell_chunk(lon_deg, lat_deg, level: int):

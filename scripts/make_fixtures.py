@@ -291,7 +291,7 @@ def i4r_pixel_index_fixture():
     res 3 across the row/col bit fields) — the distributed one-exchange plan with the
     NATIVE bit-arithmetic parent column must reproduce it."""
     from raster2dggs_spark.codecs import decode_image
-    from raster2dggs_spark.dggs import i4rlib
+    from raster2dggs_spark.dggs.rhombuslib import I4R
     from raster2dggs_spark.geo import pixel_centers_lonlat
     from raster2dggs_spark.sources.images import generate_images_pdf
 
@@ -312,7 +312,7 @@ def i4r_pixel_index_fixture():
         if not keep.any():
             continue
         lon = np.mod(lon[keep] + 180.0, 360.0) - 180.0  # wrap_lon
-        cells = i4rlib.lonlat_to_cell(lon, lat[keep], res)
+        cells = I4R.lonlat_to_cell(lon, lat[keep], res)
         vals = vals[:, keep]
         for c_idx in range(cells.shape[0]):
             key = int(cells[c_idx])
@@ -324,7 +324,7 @@ def i4r_pixel_index_fixture():
                     slot[1][b] += x
                     slot[2][b] += 1
     cells = np.array(sorted(sums), dtype=np.int64)
-    parents = i4rlib.cell_to_parent(cells, parent_res)
+    parents = I4R.cell_to_parent(cells, parent_res)
     rows = []
     for key, parent in zip(cells.tolist(), parents.tolist()):
         npx, bsum, bcnt = sums[key]

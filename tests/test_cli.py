@@ -98,6 +98,11 @@ def test_cli_validation(spark, tmp_path, images_path):
         main(["hex7", images_path, str(tmp_path / "x3"), "-r", "6",
               "--point", "histogram", "--hist-bins", "0,1",
               "--hist-width", "2"], spark=spark)
+    for dggs, pr in (("hex7", "-1"), ("hex7", "7"), ("i4r", "-1"),
+                     ("i4r", "7"), ("geohash", "0")):  # parent_res range
+        with pytest.raises(ValueError, match="parent_res"):
+            main([dggs, images_path, str(tmp_path / "x5"), "-r", "6",
+                  "-pr", pr], spark=spark)
     out = str(tmp_path / "x4")
     main(["hex7", images_path, out, "-r", "6"], spark=spark)
     for existing in (out, "file:" + out):  # existing output without -o

@@ -9,7 +9,8 @@ i4r fails this by design with a 1.8× area spread at res 3).
 import numpy as np
 import pytest
 
-from raster2dggs_spark.dggs import cover, e4rlib
+from raster2dggs_spark.dggs import cover
+from raster2dggs_spark.dggs.rhombuslib import E4R
 
 RNG = np.random.default_rng(31)
 
@@ -21,18 +22,18 @@ def _rand_points(n):
 
 
 def test_counts_and_schedule():
-    assert e4rlib.get_num_children(0, 1) == 4
-    assert e4rlib.get_num_children(2, 5) == 64
+    assert E4R.get_num_children(0, 1) == 4
+    assert E4R.get_num_children(2, 5) == 64
     lon, lat = _rand_points(60000)
     for res, n in [(0, 10), (1, 40), (2, 160), (3, 640)]:
-        assert np.unique(e4rlib.lonlat_to_cell(lon, lat, res)).size == n
+        assert np.unique(E4R.lonlat_to_cell(lon, lat, res)).size == n
 
 
 def test_uv_map_roundtrip_machine_precision():
     """forward∘inverse on the equal-area wedge map is identity to
     ~1e-13 (the Newton inverse converges fully)."""
-    from raster2dggs_spark.dggs.e4rlib import _sph_to_uv, _uv_to_sph
-    from raster2dggs_spark.dggs.i4rlib import _lonlat_to_xyz
+    from raster2dggs_spark.dggs.rhombuslib import (
+        _lonlat_to_xyz, _sph_to_uv, _uv_to_sph)
 
     lon, lat = _rand_points(20000)
     xyz = _lonlat_to_xyz(lon, lat)
@@ -44,27 +45,27 @@ def test_uv_map_roundtrip_machine_precision():
 def test_center_round_trip_and_nesting():
     lon, lat = _rand_points(5000)
     for res in (0, 1, 2, 6, 12, 16):
-        c = e4rlib.lonlat_to_cell(lon, lat, res)
-        clon, clat = e4rlib.cell_to_lonlat(c)
-        assert np.array_equal(e4rlib.lonlat_to_cell(clon, clat, res), c)
-    c10 = e4rlib.lonlat_to_cell(lon, lat, 10)
+        c = E4R.lonlat_to_cell(lon, lat, res)
+        clon, clat = E4R.cell_to_lonlat(c)
+        assert np.array_equal(E4R.lonlat_to_cell(clon, clat, res), c)
+    c10 = E4R.lonlat_to_cell(lon, lat, 10)
     for pr in (0, 1, 5, 9):
-        assert np.array_equal(e4rlib.cell_to_parent(c10, pr),
-                              e4rlib.lonlat_to_cell(lon, lat, pr))
+        assert np.array_equal(E4R.cell_to_parent(c10, pr),
+                              E4R.lonlat_to_cell(lon, lat, pr))
 
 
 def test_children_parent_inverse():
     lon, lat = _rand_points(400)
     for res in (0, 3):
-        p = np.unique(e4rlib.lonlat_to_cell(lon, lat, res))
-        kids = e4rlib.cell_to_children(p, res + 1).reshape(p.size, -1)
+        p = np.unique(E4R.lonlat_to_cell(lon, lat, res))
+        kids = E4R.cell_to_children(p, res + 1).reshape(p.size, -1)
         assert kids.shape[1] == 4
         assert np.array_equal(
-            e4rlib.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
+            E4R.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
             np.repeat(p, 4).reshape(-1, 4))
-        klon, klat = e4rlib.cell_to_lonlat(kids.ravel())
+        klon, klat = E4R.cell_to_lonlat(kids.ravel())
         assert np.array_equal(
-            e4rlib.lonlat_to_cell(klon, klat, res + 1), kids.ravel())
+            E4R.lonlat_to_cell(klon, klat, res + 1), kids.ravel())
 
 
 def test_equal_area_monte_carlo_uniformity():
@@ -73,7 +74,7 @@ def test_equal_area_monte_carlo_uniformity():
     cells), while the gnomonic i4r twin on the same points shows its
     known ~1.8× area spread (z ≫ 10) — the two grids differ exactly by
     the equal-area re-projection."""
-    from raster2dggs_spark.dggs import i4rlib
+    from raster2dggs_spark.dggs.rhombuslib import I4R
 
     m = 2_000_000
     lon = RNG.uniform(-180.0, 180.0, m)
@@ -81,12 +82,12 @@ def test_equal_area_monte_carlo_uniformity():
     expc = m / 640.0
     sd = np.sqrt(expc * (1 - 1 / 640.0))
 
-    c = e4rlib.lonlat_to_cell(lon, lat, 3)
+    c = E4R.lonlat_to_cell(lon, lat, 3)
     _, counts = np.unique(c, return_counts=True)
     assert counts.size == 640
     assert np.abs(counts - expc).max() / sd < 5.0
 
-    ci = i4rlib.lonlat_to_cell(lon, lat, 3)
+    ci = I4R.lonlat_to_cell(lon, lat, 3)
     _, ci_counts = np.unique(ci, return_counts=True)
     assert np.abs(ci_counts - expc).max() / sd > 10.0  # gnomonic contrast
 
@@ -97,8 +98,8 @@ def test_cell_area_closed_form_partition():
     sphere = 4.0 * np.pi * R * R
     lon, lat = _rand_points(150000)
     for res in (0, 1, 2):
-        c = np.unique(e4rlib.lonlat_to_cell(lon, lat, res))
-        a = e4rlib.cell_area_m2(c)
+        c = np.unique(E4R.lonlat_to_cell(lon, lat, res))
+        a = E4R.cell_area_m2(c)
         assert np.allclose(a, sphere / (10 * 4 ** res), rtol=1e-12)
         assert abs(a.sum() / sphere - 1.0) < 1e-12
 
@@ -114,14 +115,14 @@ def test_cells_in_bbox_complete(bbox):
     bug-class battery, same shape as i4r/i9r)."""
     res = 8
     lo, la, hi, lb = bbox
-    step = np.degrees(e4rlib.cell_pitch_rad(res)) * 0.05
+    step = np.degrees(E4R.cell_pitch_rad(res)) * 0.05
     pad = 5 * step
     lons = np.arange(lo - pad, hi + pad, step)
     lats = np.arange(la - pad, lb + pad, step)
     g = np.meshgrid(lons, lats)
-    cand = np.unique(e4rlib.lonlat_to_cell(
+    cand = np.unique(E4R.lonlat_to_cell(
         g[0].ravel(), np.clip(g[1].ravel(), -90.0, 90.0), res))
-    clon, clat = e4rlib.cell_to_lonlat(cand)
+    clon, clat = E4R.cell_to_lonlat(cand)
     expected = set(cand[(clon >= lo) & (clon < hi)
                         & (clat >= la) & (clat < lb)].tolist())
     actual = set(cover.cover_bbox(lo, la, hi, lb, res, dggs="e4r").tolist())
@@ -135,13 +136,13 @@ def test_parent_expr_native_matches_numpy(spark):
     from raster2dggs_spark.operators.joins import parent_expr
 
     lon, lat = _rand_points(2000)
-    c = e4rlib.lonlat_to_cell(lon, lat, 8)
+    c = E4R.lonlat_to_cell(lon, lat, 8)
     df = spark.createDataFrame(pd.DataFrame({"cell": c}), "cell long")
     for pr in (0, 1, 4, 7):
         got = np.array(
             df.select(parent_expr("cell", pr, "e4r", from_res=8)
                       .alias("p")).toPandas()["p"])
-        assert np.array_equal(got, e4rlib.cell_to_parent(c, pr)), pr
+        assert np.array_equal(got, E4R.cell_to_parent(c, pr)), pr
 
 
 def test_compact_roundtrip_identity(spark):
@@ -153,8 +154,8 @@ def test_compact_roundtrip_identity(spark):
     )
 
     d0 = np.array([3, 8], dtype=np.int64) << np.int64(57)
-    full = e4rlib.cell_to_children(d0, 2)
-    part = e4rlib.cell_to_children(
+    full = E4R.cell_to_children(d0, 2)
+    part = E4R.cell_to_children(
         np.array([5], dtype=np.int64) << np.int64(57), 2)[:-1]
     pdf = pd.DataFrame({
         "cell": np.concatenate([full, part]),

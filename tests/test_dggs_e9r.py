@@ -4,7 +4,8 @@ round 6): e4r's equal-area map × i9r's base-3 arithmetic."""
 import numpy as np
 import pytest
 
-from raster2dggs_spark.dggs import cover, e9rlib
+from raster2dggs_spark.dggs import cover
+from raster2dggs_spark.dggs.rhombuslib import E9R
 
 RNG = np.random.default_rng(37)
 
@@ -18,18 +19,18 @@ def _rand_points(n):
 def test_counts_roundtrip_nesting():
     lon, lat = _rand_points(60000)
     for res, n in [(0, 10), (1, 90), (2, 810)]:
-        assert np.unique(e9rlib.lonlat_to_cell(lon, lat, res)).size == n
-    c = e9rlib.lonlat_to_cell(lon[:5000], lat[:5000], 8)
-    clon, clat = e9rlib.cell_to_lonlat(c)
-    assert np.array_equal(e9rlib.lonlat_to_cell(clon, clat, 8), c)
+        assert np.unique(E9R.lonlat_to_cell(lon, lat, res)).size == n
+    c = E9R.lonlat_to_cell(lon[:5000], lat[:5000], 8)
+    clon, clat = E9R.cell_to_lonlat(c)
+    assert np.array_equal(E9R.lonlat_to_cell(clon, clat, 8), c)
     for pr in (0, 2, 5):
         assert np.array_equal(
-            e9rlib.cell_to_parent(c, pr),
-            e9rlib.lonlat_to_cell(lon[:5000], lat[:5000], pr))
-    kids = e9rlib.cell_to_children(np.unique(c)[:50], 9).reshape(50, -1)
+            E9R.cell_to_parent(c, pr),
+            E9R.lonlat_to_cell(lon[:5000], lat[:5000], pr))
+    kids = E9R.cell_to_children(np.unique(c)[:50], 9).reshape(50, -1)
     assert kids.shape[1] == 9
     assert np.array_equal(
-        e9rlib.cell_to_parent(kids.ravel(), 8).reshape(-1, 9),
+        E9R.cell_to_parent(kids.ravel(), 8).reshape(-1, 9),
         np.repeat(np.unique(c)[:50], 9).reshape(-1, 9))
 
 
@@ -37,14 +38,14 @@ def test_equal_area_monte_carlo_and_closed_form():
     m = 2_000_000
     lon = RNG.uniform(-180.0, 180.0, m)
     lat = np.degrees(np.arcsin(RNG.uniform(-1.0, 1.0, m)))
-    c = e9rlib.lonlat_to_cell(lon, lat, 2)
+    c = E9R.lonlat_to_cell(lon, lat, 2)
     _, counts = np.unique(c, return_counts=True)
     expc = m / 810.0
     sd = np.sqrt(expc * (1 - 1 / 810.0))
     assert counts.size == 810
     assert np.abs(counts - expc).max() / sd < 5.0
     R = 6371007.1809
-    a = e9rlib.cell_area_m2(np.unique(c))
+    a = E9R.cell_area_m2(np.unique(c))
     assert np.allclose(a, 4 * np.pi * R * R / (10 * 81), rtol=1e-12)
 
 
@@ -56,14 +57,14 @@ def test_equal_area_monte_carlo_and_closed_form():
 def test_cells_in_bbox_complete(bbox):
     res = 5
     lo, la, hi, lb = bbox
-    step = np.degrees(e9rlib.cell_pitch_rad(res)) * 0.05
+    step = np.degrees(E9R.cell_pitch_rad(res)) * 0.05
     pad = 5 * step
     lons = np.arange(lo - pad, hi + pad, step)
     lats = np.arange(la - pad, lb + pad, step)
     g = np.meshgrid(lons, lats)
-    cand = np.unique(e9rlib.lonlat_to_cell(
+    cand = np.unique(E9R.lonlat_to_cell(
         g[0].ravel(), np.clip(g[1].ravel(), -90.0, 90.0), res))
-    clon, clat = e9rlib.cell_to_lonlat(cand)
+    clon, clat = E9R.cell_to_lonlat(cand)
     expected = set(cand[(clon >= lo) & (clon < hi)
                         & (clat >= la) & (clat < lb)].tolist())
     actual = set(cover.cover_bbox(lo, la, hi, lb, res, dggs="e9r").tolist())
@@ -78,15 +79,15 @@ def test_parent_expr_and_compaction(spark):
     from raster2dggs_spark.operators.joins import parent_expr
 
     lon, lat = _rand_points(2000)
-    c = e9rlib.lonlat_to_cell(lon, lat, 6)
+    c = E9R.lonlat_to_cell(lon, lat, 6)
     df = spark.createDataFrame(pd.DataFrame({"cell": c}), "cell long")
     for pr in (0, 2, 5):
         got = np.array(df.select(parent_expr("cell", pr, "e9r", from_res=6)
                                  .alias("p")).toPandas()["p"])
-        assert np.array_equal(got, e9rlib.cell_to_parent(c, pr)), pr
+        assert np.array_equal(got, E9R.cell_to_parent(c, pr)), pr
 
     d0 = np.array([4], dtype=np.int64) << np.int64(57)
-    full = e9rlib.cell_to_children(d0, 2)
+    full = E9R.cell_to_children(d0, 2)
     df2 = spark.createDataFrame(
         pd.DataFrame({"cell": full, "v": np.ones(full.size)}),
         "cell long, v double")

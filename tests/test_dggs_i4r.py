@@ -10,7 +10,8 @@ cover completeness, native parent parity, compaction round trip.
 import numpy as np
 import pytest
 
-from raster2dggs_spark.dggs import cover, i4rlib
+from raster2dggs_spark.dggs import cover
+from raster2dggs_spark.dggs.rhombuslib import I4R
 
 RNG = np.random.default_rng(23)
 
@@ -22,38 +23,38 @@ def _rand_points(n):
 
 
 def test_counts_and_schedule():
-    assert i4rlib.get_num_children(0, 1) == 4
-    assert i4rlib.get_num_children(2, 5) == 64
-    assert i4rlib.get_num_children(3, 3) == 1
+    assert I4R.get_num_children(0, 1) == 4
+    assert I4R.get_num_children(2, 5) == 64
+    assert I4R.get_num_children(3, 3) == 1
     lon, lat = _rand_points(60000)
     for res, n in [(0, 10), (1, 40), (2, 160), (3, 640)]:
-        assert np.unique(i4rlib.lonlat_to_cell(lon, lat, res)).size == n
+        assert np.unique(I4R.lonlat_to_cell(lon, lat, res)).size == n
 
 
 def test_center_round_trip_and_nesting():
     lon, lat = _rand_points(5000)
     for res in (0, 1, 2, 6, 12):
-        c = i4rlib.lonlat_to_cell(lon, lat, res)
-        clon, clat = i4rlib.cell_to_lonlat(c)
-        assert np.array_equal(i4rlib.lonlat_to_cell(clon, clat, res), c)
-    c10 = i4rlib.lonlat_to_cell(lon, lat, 10)
+        c = I4R.lonlat_to_cell(lon, lat, res)
+        clon, clat = I4R.cell_to_lonlat(c)
+        assert np.array_equal(I4R.lonlat_to_cell(clon, clat, res), c)
+    c10 = I4R.lonlat_to_cell(lon, lat, 10)
     for pr in (0, 1, 5, 9):
-        assert np.array_equal(i4rlib.cell_to_parent(c10, pr),
-                              i4rlib.lonlat_to_cell(lon, lat, pr))
+        assert np.array_equal(I4R.cell_to_parent(c10, pr),
+                              I4R.lonlat_to_cell(lon, lat, pr))
 
 
 def test_children_parent_inverse():
     lon, lat = _rand_points(400)
     for res in (0, 3):
-        p = np.unique(i4rlib.lonlat_to_cell(lon, lat, res))
-        kids = i4rlib.cell_to_children(p, res + 1).reshape(p.size, -1)
+        p = np.unique(I4R.lonlat_to_cell(lon, lat, res))
+        kids = I4R.cell_to_children(p, res + 1).reshape(p.size, -1)
         assert kids.shape[1] == 4
         assert np.array_equal(
-            i4rlib.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
+            I4R.cell_to_parent(kids.ravel(), res).reshape(-1, 4),
             np.repeat(p, 4).reshape(-1, 4))
-        klon, klat = i4rlib.cell_to_lonlat(kids.ravel())
+        klon, klat = I4R.cell_to_lonlat(kids.ravel())
         assert np.array_equal(
-            i4rlib.lonlat_to_cell(klon, klat, res + 1), kids.ravel())
+            I4R.lonlat_to_cell(klon, klat, res + 1), kids.ravel())
 
 
 def test_area_partition_of_unity_with_fold():
@@ -64,12 +65,12 @@ def test_area_partition_of_unity_with_fold():
     sphere = 4.0 * np.pi * R * R
     lon, lat = _rand_points(150000)
     for res in (0, 1, 2, 3):
-        c = np.unique(i4rlib.lonlat_to_cell(lon, lat, res))
+        c = np.unique(I4R.lonlat_to_cell(lon, lat, res))
         assert c.size == 10 * 4 ** res
-        a = i4rlib.cell_area_m2(c)
+        a = I4R.cell_area_m2(c)
         assert abs(a.sum() / sphere - 1.0) < 1e-9, res
-    c0 = np.unique(i4rlib.lonlat_to_cell(lon, lat, 0))
-    a0 = i4rlib.cell_area_m2(c0)
+    c0 = np.unique(I4R.lonlat_to_cell(lon, lat, 0))
+    a0 = I4R.cell_area_m2(c0)
     assert a0.max() / a0.min() < 1.0 + 1e-9
 
 
@@ -84,14 +85,14 @@ def test_cells_in_bbox_complete(bbox):
     bug-class battery, same shape as a5/hex7)."""
     res = 10
     lo, la, hi, lb = bbox
-    step = np.degrees(i4rlib.cell_pitch_rad(res)) * 0.05
+    step = np.degrees(I4R.cell_pitch_rad(res)) * 0.05
     pad = 5 * step
     lons = np.arange(lo - pad, hi + pad, step)
     lats = np.arange(la - pad, lb + pad, step)
     g = np.meshgrid(lons, lats)
-    cand = np.unique(i4rlib.lonlat_to_cell(
+    cand = np.unique(I4R.lonlat_to_cell(
         g[0].ravel(), np.clip(g[1].ravel(), -90.0, 90.0), res))
-    clon, clat = i4rlib.cell_to_lonlat(cand)
+    clon, clat = I4R.cell_to_lonlat(cand)
     expected = set(cand[(clon >= lo) & (clon < hi)
                         & (clat >= la) & (clat < lb)].tolist())
     actual = set(cover.cover_bbox(lo, la, hi, lb, res, dggs="i4r").tolist())
@@ -105,13 +106,13 @@ def test_parent_expr_native_matches_numpy(spark):
     from raster2dggs_spark.operators.joins import parent_expr
 
     lon, lat = _rand_points(2000)
-    c = i4rlib.lonlat_to_cell(lon, lat, 8)
+    c = I4R.lonlat_to_cell(lon, lat, 8)
     df = spark.createDataFrame(pd.DataFrame({"cell": c}), "cell long")
     for pr in (0, 1, 4, 7):
         got = np.array(
             df.select(parent_expr("cell", pr, "i4r", from_res=8)
                       .alias("p")).toPandas()["p"])
-        assert np.array_equal(got, i4rlib.cell_to_parent(c, pr)), pr
+        assert np.array_equal(got, I4R.cell_to_parent(c, pr)), pr
 
 
 def test_compact_roundtrip_identity(spark):
@@ -124,8 +125,8 @@ def test_compact_roundtrip_identity(spark):
     )
 
     d0 = np.array([3, 8], dtype=np.int64) << np.int64(57)
-    full = i4rlib.cell_to_children(d0, 2)          # res 2
-    part = i4rlib.cell_to_children(
+    full = I4R.cell_to_children(d0, 2)          # res 2
+    part = I4R.cell_to_children(
         np.array([5], dtype=np.int64) << np.int64(57), 2)[:-1]                                            # 15 of 16
     pdf = pd.DataFrame({
         "cell": np.concatenate([full, part]),

@@ -1,9 +1,12 @@
 """The grid protocol (raster2dggs_spark/dggs/__init__.py): every grid
 module exports the same names with the same signatures, its hierarchy,
 Spark parent column and encode/decode agree, resolution auto-modes stay
-inside each grid's own range, the index packers range-check, and no
-module outside ``dggs/`` dispatches on a grid key."""
+inside each grid's own range, the index packers range-check, every
+encoder runs through the one chunk loop and rejects non-finite points,
+and no module outside ``dggs/`` dispatches on a grid key."""
 
+import ast
+import hashlib
 import pathlib
 import re
 
@@ -89,6 +92,47 @@ def test_reencoded_center_is_same_cell(dggs):
 
 
 @pytest.mark.parametrize("dggs", GRIDS)
+def test_non_finite_points_rejected(dggs):
+    lib = grid_lib(dggs)
+    r = _res(lib)
+    lon = np.array([10.0, np.nan, 20.0, 30.0, 40.0])
+    lat = np.array([45.0, 10.0, np.nan, 10.0, 10.0])
+    for bad_lon, bad_lat in ((lon, lat), (lon[:2], np.full(2, 10.0)),
+                             (np.full(2, 10.0), lat[1:3]),
+                             (np.array([np.inf]), np.array([0.0]))):
+        with pytest.raises(ValueError,
+                           match=f"{dggs}: lon/lat must be finite"):
+            lib.lonlat_to_cell(bad_lon, bad_lat, r)
+    ok = lib.lonlat_to_cell(lon[[0, 3, 4]], lat[[0, 3, 4]], r)
+    assert (lib.get_resolution(ok) == r).all()
+
+
+# md5 of the little-endian int64 ids of a seeded 20k global sample
+RHOMBUS_ID_MD5 = {
+    ("i4r", 5): "95d2b1bd7ed63c9d7a1b7a5912bca837",
+    ("i4r", 12): "89bbfa8c79f457269c5918432782b700",
+    ("i9r", 3): "7eedc04ee1481400e558d9578672030f",
+    ("i9r", 8): "d012158dafda1ba02a08b80123f10bdb",
+    ("e4r", 5): "f462d049793a91a3322da2c505f627d4",
+    ("e4r", 12): "0e5e89568647137bbfb7613b9dde073d",
+    ("e9r", 3): "169d0487c7c5a04a25bedca0c0549d0a",
+    ("e9r", 8): "6fc2e9f6c20aa243cf8015e7b7292a39",
+}
+
+
+@pytest.mark.parametrize("dggs,res", sorted(RHOMBUS_ID_MD5))
+def test_rhombus_ids_pinned(dggs, res):
+    """The rhombus family's ids are pinned exactly (integers only:
+    float outputs may differ in their last bits across CPU paths)."""
+    rng = np.random.default_rng(20)
+    lon = rng.uniform(-180.0, 180.0, 20000)
+    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 20000)))
+    ids = grid_lib(dggs).lonlat_to_cell(lon, lat, res)
+    got = hashlib.md5(ids.astype("<i8").tobytes()).hexdigest()
+    assert got == RHOMBUS_ID_MD5[(dggs, res)]
+
+
+@pytest.mark.parametrize("dggs", GRIDS)
 def test_parent_col_matches_numpy(spark, dggs):
     import pandas as pd
     from pyspark.sql import functions as F
@@ -167,3 +211,27 @@ def test_no_grid_dispatch_outside_dggs():
             if _DISPATCH.search(line):
                 hits.append(f"{path.relative_to(pkg.parent)}:{i}: {line.strip()}")
     assert not hits, "\n".join(hits)
+
+
+def _is_literal(node):
+    return isinstance(node, ast.Constant) or (
+        isinstance(node, ast.UnaryOp) and isinstance(node.operand,
+                                                     ast.Constant))
+
+
+def test_one_encode_loop():
+    """Chunked encoding lives only in ``_hier.encode_chunked``: no other
+    ``dggs/`` module steps a loop by a computed stride (a chunk loop)."""
+    dggs_dir = (pathlib.Path(__file__).resolve().parents[1]
+                / "raster2dggs_spark" / "dggs")
+    hits = []
+    for path in sorted(dggs_dir.glob("*.py")):
+        if path.name == "_hier.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.For) and isinstance(node.iter, ast.Call)
+                    and getattr(node.iter.func, "id", None) == "range"
+                    and len(node.iter.args) == 3
+                    and not _is_literal(node.iter.args[2])):
+                hits.append(f"{path.name}:{node.lineno}")
+    assert not hits, hits

@@ -51,14 +51,15 @@ def test_hist_normalize_cell_area_every_grid(spark):
     grids, closed-form rectangles on geohash/maidenhead."""
     from raster2dggs_spark.operators.aggregates import hist_normalize_cell_area
     from raster2dggs_spark.dggs import (
-        a5lib, geohashlib, i4rlib, maidenheadlib, s2lib,
+        a5lib, geohashlib, maidenheadlib, s2lib,
     )
+    from raster2dggs_spark.dggs.rhombuslib import I4R
 
     lon = np.array([5.0, 100.0, -170.0])
     lat = np.array([10.0, -40.0, 75.0])
     for dggs, lib, res in [("s2", s2lib, 8), ("geohash", geohashlib, 4),
                            ("maidenhead", maidenheadlib, 2),
-                           ("a5", a5lib, 7), ("i4r", i4rlib, 8)]:
+                           ("a5", a5lib, 7), ("i4r", I4R, 8)]:
         cells = lib.lonlat_to_cell(lon, lat, res)
         df = spark.createDataFrame(
             pd.DataFrame({"cell": cells, "weight": [1e8, 2e8, 3e8]}),
